@@ -27,10 +27,6 @@ object BenchProfile {
 
 object Bench {
   def main(args: Array[String]): Unit = {
-    // execution intent: this entry point runs what it builds, so let
-    // query construction background-warm checkpoint segments (see
-    // Dedup.warmOnConstruct -- plan-only introspection paths leave it off).
-    graft.dedup.Dedup.warmOnConstruct = true
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Tier selection lives in BenchProfile (see its doc + BenchProfileSpec).
@@ -125,18 +121,15 @@ object Bench {
         // NEW QueryExecution on every call — so each rep re-paid the full
         // Catalyst pass (analysis + optimization + physical planning) over
         // the whole tree, contradicting the "warm plan" intent documented
-        // above (measured round 18, tools/CountPlanProbe: 60-90% of a
-        // steady-state mid-band rep was driver re-planning, e.g. q5 0.62 s
-        // count() vs 0.54 s cloned-plan vs 0.03 s same-Dataset re-collect).
+        // above (measured round 18: 60-90% of a steady-state mid-band rep
+        // was driver re-planning, e.g. q5 0.62 s count() vs 0.54 s
+        // cloned-plan vs 0.03 s same-Dataset re-collect).
         // `cnt` is literally count()'s own plan, built and planned ONCE.
         val cnt = df.groupBy().count()
         cnt.queryExecution.executedPlan // plan eagerly, outside the timers
         Some((name, fn, df, cnt))
       } catch { case _: Throwable => None }
     }
-    // Construction fired background checkpoint warms; no timed action may
-    // overlap their MARKING (Dedup.warmAsync deadlock note) — drain here.
-    graft.dedup.Dedup.awaitWarms()
     // Timed action, round-18 measurement fix (per the optimization guide's
     // "plan once, execute many" / §1.4 measurement discipline): execute a
     // CLONE of the pre-planned count's physical plan. The clone is load-
@@ -178,13 +171,7 @@ object Bench {
                  df: org.apache.spark.sql.DataFrame,
                  cnt: org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      if (eagerAtPlan(name)) {
-        val fresh = fn(spark, sfDir)
-        // the fresh construction's warms are part of this query's work;
-        // drain INSIDE the timer so the count can't race their marking
-        graft.dedup.Dedup.awaitWarms()
-        fresh.count()
-      } else timedAction(name, df, cnt)
+      if (eagerAtPlan(name)) fn(spark, sfDir).count() else timedAction(name, df, cnt)
       (System.nanoTime() - t0) / 1e9
     }
     // NOTE (round 9, negative result worth keeping): an untimed per-query
@@ -192,7 +179,7 @@ object Bench {
     // floors (t7 ~0.45 s in the full sweep vs 0.15 s in a 2-query session)
     // are set by the 184-plan JVM itself (megamorphic call sites /
     // icache across ~2k codegen classes), not by per-query rep count.
-    // GC-in-window measured 0 ms (tools/SweepTaxProbe); 1 GiB code cache
+    // GC-in-window measured 0 ms; 1 GiB code cache
     // and ParallelGC also moved nothing. The tax is the honest cost of
     // one engine process hosting the whole surface.
     val best = scala.collection.mutable.Map.empty[String, Double] // successful reps only
@@ -228,11 +215,7 @@ object Bench {
     for ((name, fn, df, _) <- planned) {
       val t = try {
         val t0 = System.nanoTime()
-        if (eagerAtPlan(name)) {
-          val fresh = fn(spark, sfDir)
-          graft.dedup.Dedup.awaitWarms()
-          fresh.count()
-        } else df.count()
+        if (eagerAtPlan(name)) fn(spark, sfDir).count() else df.count()
         (System.nanoTime() - t0) / 1e9
       } catch { case _: Throwable => -1.0 }
       if (t >= 0) legacy(name) = t
@@ -284,9 +267,7 @@ object Bench {
         val fn = SparkEntry.queries(name)
         val t = try {
           val t0 = System.nanoTime()
-          val fresh = fn(spark, sfDir)
-          graft.dedup.Dedup.awaitWarms() // same rule as the eagerAtPlan timer
-          fresh.count()
+          fn(spark, sfDir).count()
           (System.nanoTime() - t0) / 1e9
         } catch { case _: Throwable => -1.0 }
         name -> t

@@ -196,19 +196,6 @@ private[graft] object QueryContext {
   /** Shared by dd8/dd9: the verified-LSH near-dup pipeline over the
     * fixture corpus + injected variants (see dd8's query comment).
     */
-  /** GRAFT_CC_DEBUG=1 → stderr wall time of each pipeline segment's
-    * construction (mostly the localCheckpoint plan+codegen). Diagnostic.
-    */
-  private def seg[T](label: String)(body: => T): T = {
-    if (!sys.env.contains("GRAFT_CC_DEBUG")) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(f"[dd8] $label%-10s ${(System.nanoTime() - t0) / 1e9}%6.3f s")
-      r
-    }
-  }
-
   def dd8Pipeline(s: SparkSession, dir: String): DataFrame =
     dd8PipelineImpl(s, dir, full = true)
 
@@ -252,11 +239,8 @@ private[graft] object QueryContext {
     // checkpointed: ALL tier consumers (rep selection, the semi-join build,
     // both star-edge joins) read these ~40 B rows instead of re-scanning
     // and re-hashing the full corpus text per action
-    val slim = seg("slim")(docsAll.select(col("doc_id"), md5(col("text")).as("dg"))
-      .localCheckpoint(false))
-    // start the corpus scan+digest on the workers while the driver builds
-    // the shingle plan — the semi-join broadcast then finds slim cached
-    Dedup.warmAsync(slim)
+    val slim = docsAll.select(col("doc_id"), md5(col("text")).as("dg"))
+      .localCheckpoint(false)
     val repIds = slim.groupBy("dg")
       .agg(min("doc_id").as("rep_id"), count(lit(1)).as("n_copies"))
       // NOT checkpointed: the semi join computes it inline within the
@@ -279,27 +263,21 @@ private[graft] object QueryContext {
     // round 5 at sf0.1: dd8/dd9/dd10 totaled 11.1 s without the checkpoint
     // vs 7.9 s with it, i.e. the recompute costs ~10× the checkpoint write
     // even on a 584 KB corpus. At cluster scale the gap only widens.
-    val shRows = seg("shRows")(shRowsPlan.localCheckpoint(false))
+    val shRows = shRowsPlan.localCheckpoint(false)
     val mh = Dedup.minhashAggs(6)
     // sigs has two consumers too (band keys + the per-doc sizes in the
     // verify) — same reasoning as shRows, one narrow row per doc
-    val sigs = seg("sigs")(shRows.groupBy("doc_id")
+    val sigs = shRows.groupBy("doc_id")
       .agg(mh.head, (mh.tail :+ count(lit(1)).as("nsh")): _*)
-      .localCheckpoint(false))
-    // Background-materialize the signature chain (shingle scan + minhash
-    // agg — the pipeline's heaviest compute) while the driver constructs
-    // the candidate/verify/star plans (~0.3 s of single-threaded codegen
-    // during which the workers otherwise idle). Purely per-invocation
-    // pipelining; the downstream broadcast builds find the blocks cached.
-    Dedup.warmAsync(sigs)
+      .localCheckpoint(false)
     // NOT checkpointed (round 11): verifyJaccard now consumes the pair list
     // exactly once (pairs explode into side rows before a single shingle
     // join), so the bucket-groupBy + pair-explode + distinct lineage runs
     // once inline — the former checkpoint existed only because the verify's
     // two side joins each forced a broadcast build of it.
     val cands = Dedup.lshCandidatePairs(sigs, "doc_id", numSeeds = 6, rowsPerBand = 2)
-    val verified = seg("verified")(graft.dedup.Dedup
-      .verifyJaccard(cands, shRows, sigs.select("doc_id", "nsh")))
+    val verified = graft.dedup.Dedup
+      .verifyJaccard(cands, shRows, sigs.select("doc_id", "nsh"))
       .withColumn("jaccard", Stats.parityRound(col("jaccard"), 6))
       .withColumn("is_dup", col("jaccard") >= 0.5)
     // exact-tier star edges: one (rep, clone) row per clone — jaccard is 1

@@ -1,14 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare. A failed query does not stop
+  * the dump, but every failure is named at the end and the exit code is 1.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // execution intent: this entry point runs what it builds, so let
-    // query construction background-warm checkpoint segments (see
-    // Dedup.warmOnConstruct -- plan-only introspection paths leave it off).
-    graft.dedup.Dedup.warmOnConstruct = true
     val Array(sfDir, outDir) = args.take(2)
     // optional 3rd arg: comma-separated name filter for fast local iteration
     val only: Option[Set[String]] =
@@ -23,20 +21,17 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val failed = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try {
-        val frame = fn(spark, sfDir)
-        // background checkpoint warms must finish MARKING before the
-        // write action (Dedup.warmAsync deadlock note)
-        graft.dedup.Dedup.awaitWarms()
-        frame.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      .flatMap { case (name, fn) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
+        }
       }
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -53,5 +48,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[verify] ${failed.size} queries failed: ${failed.toSeq.sorted.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

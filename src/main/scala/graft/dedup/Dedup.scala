@@ -293,108 +293,66 @@ object Dedup {
       .distinct()
   }
 
-  /** Execution-intent gate for [[warmAsync]]. DataFrame CONSTRUCTION must
-    * not launch Spark jobs when the caller only wants the plan — specs
-    * that audit executedPlans, the oracle-SQL dump, and explain tools all
-    * build these frames without ever running them, and an ungated warm
-    * would execute the heavy checkpoint segments as a side effect (and
-    * leave cached blocks that are freed only on RDD GC). Default OFF;
-    * the execution entry points (Bench, Verify, the perf probes) flip it
-    * on before constructing queries. Purely a perf pipelining switch —
-    * results are identical either way.
+  /** Name of the thread a [[connectedComponents]] call warms its
+    * checkpoints on.
     */
-  @volatile var warmOnConstruct: Boolean = false
+  private[graft] val WarmThreadName = "graft-cc-warm"
 
-  /** Kick off BACKGROUND materialization of a lazily-checkpointed frame:
-    * runs a count over the checkpoint's RDD on a daemon thread so the
-    * workers compute (and cache) its blocks WHILE the driver constructs
-    * the downstream plans. Analysis/optimization/codegen-source generation
-    * are single-threaded driver work (~0.2-0.3 s per heavy dedup segment,
-    * StageProbe round 11) during which every worker core otherwise idles;
-    * overlapping the two is pure pipelining — per-invocation work is
-    * unchanged, nothing is cached across invocations. The first consuming
-    * action finds the blocks built (BlockManager per-block locks dedupe a
-    * concurrent first compute); failures are deferred to that action,
-    * which recomputes and reports them through the normal path.
-    * No-op unless [[warmOnConstruct]] — plan-only callers skip the jobs.
-    *
-    * CHECKPOINT-MARKING DEADLOCK (round 17, observed in a live bench
-    * sweep): a lazily-checkpointed RDD is MARKED (lineage swapped to the
-    * checkpoint blocks) at the end of whichever runJob over it finishes
-    * first, on that job's thread, under Spark's GLOBAL
-    * `RDDCheckpointData$` lock — while any concurrent stage submission
-    * visiting the same RDD takes the locks in the OPPOSITE order (RDD →
-    * `RDDCheckpointData$` via `RDD.partitions`). The original submitJob
-    * warm never marked, so marking landed inside the first REAL action —
-    * exactly when that action's own broadcast-exchange subquery and
-    * parent-stage submission run concurrently over the frame, which is
-    * the worst possible interleave (jstack showed `broadcast-exchange-59`
-    * marking vs `dag-scheduler-event-loop` submitting, a textbook ABBA
-    * deadlock). The warm is therefore a full `count()`: marking completes
-    * at WARM end, on the warm thread, away from consumer concurrency —
-    * and the execution mains call [[awaitWarms]] between query
-    * construction and the first action, which closes the remaining window
-    * entirely on those paths.
+  /** Background checkpoint warms of ONE [[connectedComponentsWithStats]]
+    * call. `warm` runs a `count()` over a lazily-checkpointed frame's RDD so
+    * the workers compute its blocks WHILE the driver constructs and plans
+    * the downstream round (analysis/codegen is single-threaded driver work
+    * during which every worker core otherwise idles). Per-call work is
+    * unchanged; nothing is cached across calls. Invariants:
+    *   - warms run one at a time, on the handle's single thread;
+    *   - every warm has finished and MARKED its checkpoint before the
+    *     round's first action ([[await]]), which re-throws the first warm
+    *     failure;
+    *   - no warm escapes the call: [[close]], in the caller's `finally`,
+    *     drops warms that have not started and waits out the running one.
+    * Why marking must not overlap another job over the same RDD: a lazily-
+    * checkpointed RDD is marked at the end of whichever job over it
+    * finishes first, on that job's thread, under Spark's GLOBAL
+    * `RDDCheckpointData$` lock, while a concurrent stage submission visiting
+    * the same RDD takes the locks in the opposite order (RDD →
+    * `RDDCheckpointData$` via `RDD.partitions`) — an ABBA deadlock, seen in
+    * a jstack as a broadcast-exchange marking against
+    * `dag-scheduler-event-loop`. Two concurrent warms of dependent frames
+    * interleave the same way, hence one thread. Driver planning takes
+    * neither lock, so planning may overlap a warm.
     */
-  private val pendingWarms =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.util.concurrent.Future[_]]()
-  // SINGLE-threaded (round-17 advice): two concurrent warms of DEPENDENT
-  // frames could re-create the ABBA between them — the downstream warm's
-  // stage submission walks the upstream RDD (RDD lock → global checkpoint
-  // lock) while the upstream warm's job-end marking holds them in the
-  // opposite order. Serializing warms keeps the driver-planning overlap
-  // (the only concurrency the warm exists for is warm-vs-PLANNING, and
-  // planning takes neither lock) while making warm-vs-warm impossible.
-  private lazy val warmPool = java.util.concurrent.Executors.newSingleThreadExecutor(
-    (r: Runnable) => {
-      val t = new Thread(r, "graft-warm")
-      t.setDaemon(true)
-      t
-    })
+  private final class CcWarms {
+    import java.util.concurrent.{ExecutionException, Executors, Future, TimeUnit}
+    private var thread: Thread = null
+    private val pool = Executors.newSingleThreadExecutor { (r: Runnable) =>
+      thread = new Thread(r, WarmThreadName)
+      thread.setDaemon(true)
+      thread
+    }
+    private val pending = scala.collection.mutable.ArrayBuffer.empty[Future[_]]
 
-  private[graft] def warmAsync(df: DataFrame): Unit =
-    if (warmOnConstruct) df.queryExecution.analyzed match {
+    def warm(df: DataFrame): Unit = df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         val rdd = lr.rdd
-        pendingWarms.add(warmPool.submit(new Runnable {
-          def run(): Unit =
-            try { rdd.count(); () } catch { case _: Throwable => () }
-        }))
+        pending += pool.submit(new Runnable { def run(): Unit = { rdd.count(); () } })
       case _ => ()
     }
 
-  /** Block until every outstanding background warm has finished — blocks
-    * computed AND the checkpoint marked. The execution mains (Verify,
-    * Bench, SpotBench, Rehearse) call this between constructing a query's
-    * frame and running its action, so no real action ever overlaps a
-    * marking (the deadlock note on [[warmAsync]]). The await costs only
-    * the warm's unfinished tail; the driver-planning overlap is already
-    * banked. Cheap no-op when nothing is pending.
-    */
-  def awaitWarms(): Unit = {
-    var f = pendingWarms.poll()
-    while (f != null) {
-      try f.get() catch { case _: Throwable => () }
-      f = pendingWarms.poll()
+    def await(): Unit = {
+      pending.foreach { f =>
+        try f.get() catch { case e: ExecutionException => throw e.getCause }
+      }
+      pending.clear()
+    }
+
+    def close(): Unit = {
+      pending.foreach(_.cancel(false))
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      if (thread != null) thread.join()
+      pending.clear()
     }
   }
-
-  /** Construct-then-drain-then-act bridge for the DIAGNOSTIC mains whose
-    * build and first action sit in one expression (`fn(spark, dir)
-    * .count()`): the by-value argument finishes construction — its
-    * background warms are already submitted — before the body drains them,
-    * so the count can never overlap a checkpoint marking. Round-17 advice:
-    * the probe tools (RehearseDedup, StageProbe, CcProbe, T7Probe, ...)
-    * enabled [[warmOnConstruct]] but ran real actions without
-    * [[awaitWarms]], leaving the deadlock window the execution mains had
-    * closed. Cheap no-op once a frame's warms have drained.
-    */
-  def countSettled(df: DataFrame): Long = { awaitWarms(); df.count() }
-
-  /** GRAFT_CC_DEBUG=1 -> stderr wall-time per CC round action (diagnostic). */
-  private def ccDebug(label: String, t0: Long): Unit =
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(f"[cc] $label%-12s ${(System.nanoTime() - t0) / 1e9}%6.3f s")
 
   /** Unsettled-node ceiling under which a round runs the tier-2
     * bichromatic-edge probe (see the convergence comment inside
@@ -442,128 +400,123 @@ object Dedup {
         struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .localCheckpoint(false)
-    // overlap the edge-list compute with the seed/round-1 plan construction
-    warmAsync(edges)
-    // Seed with round one's result directly: min-propagation from identity
-    // labels yields label(x) = min(x, min neighbor id), which one grouped
-    // aggregate over the edge list computes without the join — one fewer
-    // propagation round (join + agg + checkpoint + convergence scan) on
-    // every call, and the distinct() init job is folded into the same agg.
-    // Checkpointed AND background-warmed: the seed has two round-one
-    // consumers (the propagate join and the merged union); without the
-    // checkpoint its aggregate subtree appears twice in the round plan,
-    // doubling that plan's analysis/codegen cost (driver-bound), while
-    // with it the round plan sees two LogicalRDD leaves. warmAsync starts
-    // the seed compute on the workers while the driver constructs the
-    // round plan, so the eager segment costs no wall time of its own.
-    var labels = edges.groupBy(col("src").as("id"))
-      .agg(least(min(col("dst")), min(col("src"))).as("label"))
-      .localCheckpoint(false)
-    warmAsync(labels)
+    var labels: DataFrame = null
     var iter = 0
     var converged = false
-    while (iter < maxIter && !converged) {
-      val prop = edges.join(labels, edges("src") === labels("id"))
-        .select(col("dst").as("id"), col("label"))
-      // labels covers every node (each appears as an edge src), so the
-      // union's labels branch keeps a node's current label even when no
-      // neighbor offers a smaller one. `mx` rides the SAME aggregate:
-      // min != max at a node ⟺ the node still sees two different labels
-      // across itself and its neighbors ⟺ some incident edge is
-      // bichromatic under the PREVIOUS round's labels — the free
-      // convergence signal (see below).
-      val merged = labels.unionByName(prop)
-        .groupBy("id").agg(min("label").as("label"), max("label").as("mx"))
-      // pointer jump: label(x) ← label(label(x)). Labels are always node
-      // ids of the same component with label(y) <= y, so the composition
-      // stays in-component and non-increasing; chains contract by half
-      // per round (left join: the component min labels itself).
-      val parents = merged
-        .select(col("id").as("pid"), col("label").as("plabel"))
-      val next = merged.join(parents, col("label") === col("pid"), "left")
-        .select(col("id"), coalesce(col("plabel"), col("label")).as("label"),
-          (col("label") =!= col("mx")).as("nu"))
+    val warms = new CcWarms
+    try {
+      // overlap the edge-list compute with the seed/round-1 plan construction
+      warms.warm(edges)
+      // Seed with round one's result directly: min-propagation from identity
+      // labels yields label(x) = min(x, min neighbor id), which one grouped
+      // aggregate over the edge list computes without the join — one fewer
+      // propagation round (join + agg + checkpoint + convergence scan) on
+      // every call, and the distinct() init job is folded into the same agg.
+      // Checkpointed AND background-warmed: the seed has two round-one
+      // consumers (the propagate join and the merged union); without the
+      // checkpoint its aggregate subtree appears twice in the round plan,
+      // doubling that plan's analysis/codegen cost (driver-bound), while
+      // with it the round plan sees two LogicalRDD leaves. The warm starts
+      // the seed compute on the workers while the driver constructs the
+      // round plan, so the eager segment costs no wall time of its own.
+      labels = edges.groupBy(col("src").as("id"))
+        .agg(least(min(col("dst")), min(col("src"))).as("label"))
         .localCheckpoint(false)
-      // Two-tier EXACT convergence test. Soundness rests on the invariant
-      // that labels are always in-component node ids with label(x) <= x
-      // (seed, propagate, and jump each preserve it): if every edge is
-      // monochromatic then each component carries one label L, node L has
-      // label(L) = L, and the component minimum m has label(m) = L <= m —
-      // forcing L = m, so the labels ARE the component minima and the
-      // round map is the identity.
-      //   Tier 1 (free): nUnsettled counts nodes whose propagate multiset
-      //   held two labels. Zero ⟺ the PREVIOUS labels were already
-      //   monochromatic ⟺ this round was a no-op — the same stop round as
-      //   a changed-row count, with no carried `old` column, and the agg
-      //   runs as the SAME action that materializes the round checkpoint.
-      //   Tier 2 (gated probe): the jump can merge the last label chains
-      //   mid-round, so `next` may be converged a full round before tier 1
-      //   can see it. A bichromatic-edge test under `next` detects that —
-      //   but on a far-from-converged high-diameter graph it is a per-round
-      //   surcharge with no chance of firing, so it runs only once
-      //   nUnsettled is small (most components already settled; the
-      //   near-dup norm reaches this on round one). The threshold trades
-      //   one probe against skipping a whole round; 64k keeps the probe
-      //   out of the bulk phase of adversarial chains while firing on
-      //   every realistically-shaped tail.
-      //   The probe is UNSETTLED-RESTRICTED (round 11; the former version
-      //   joined the full edge list against the labels twice): if both
-      //   endpoints of an edge were settled this round, each saw a single
-      //   label across itself and its neighbors, so the two labels were
-      //   equal and the jump maps both through the same parent — the edge
-      //   is monochromatic. Any bichromatic edge therefore has an
-      //   unsettled endpoint, and since `edges` carries both orientations,
-      //   filtering on an unsettled src sees every candidate. No join back
-      //   to dst labels either: deliver each unsettled node's label to its
-      //   neighbors and compare against the neighbors' own labels in ONE
-      //   narrow aggregate — a node holding two distinct labels ⟺ some
-      //   incident edge is bichromatic. The unsettled build side is
-      //   ≤ BichromProbeMax rows by the gate, so the broadcast is bounded
-      //   by construction.
-      // coalesce: an empty pair list converges on round one, not NPE.
-      // Round 19 (§2.6 driver/worker overlap, the verdict-item-5
-      // experiment): materialize the round checkpoint on the WARM POOL —
-      // the sanctioned action-on-pool-thread-while-the-driver-PLANS shape
-      // (see warmAsync: planning takes neither checkpoint lock, so this
-      // adds no warm-vs-consumer concurrency; marking completes on the
-      // warm thread before awaitWarms returns) — and spend that wall time
-      // constructing and PLANNING both convergence actions up front. The
-      // probe plan is built unconditionally (its ~40-80 ms of
-      // analysis+codegen used to sit in a driver gap between the two
-      // actions); whether it EXECUTES keeps the exact tier-1 value gate
-      // below, so semantics and the probe's bounded-broadcast argument
-      // are unchanged. On a tier-1-converged round the probe plan is
-      // discarded unexecuted — driver work wasted, but it overlapped the
-      // checkpoint compute, so its wall cost is ~0.
-      warmAsync(next)
-      val unsettledAgg = next.agg(coalesce(
-        sum(when(col("nu"), 1L).otherwise(0L)), lit(0L)))
-      unsettledAgg.queryExecution.executedPlan // plan while the warm runs
-      val sl = next.filter(col("nu"))
-        .select(col("id").as("sid"), col("label").as("sl"))
-      val probeAgg = edges.join(broadcast(sl), col("src") === col("sid"))
-        .select(col("dst").as("id"), col("sl").as("lbl"))
-        .unionByName(next.select(col("id"), col("label").as("lbl")))
-        .groupBy("id").agg(min("lbl").as("mn"), max("lbl").as("mx"))
-        .agg(coalesce(
-          sum(when(col("mn") =!= col("mx"), 1L).otherwise(0L)),
-          lit(0L)))
-      probeAgg.queryExecution.executedPlan // plan while the warm runs
-      // Barrier before the loop's first action: the edge/seed/next warms
-      // must finish MARKING their checkpoints before a consumer action can
-      // submit stages over them (the warmAsync deadlock note).
-      awaitWarms()
-      val t0 = System.nanoTime()
-      val nUnsettled = unsettledAgg.head.getLong(0)
-      converged = nUnsettled == 0
-      if (!converged && nUnsettled <= BichromProbeMax) {
-        val nMixed = probeAgg.head.getLong(0)
-        converged = nMixed == 0
-        ccDebug(s"round${iter + 1} (unsettled=$nUnsettled mixed=$nMixed)", t0)
-      } else ccDebug(s"round${iter + 1} (unsettled=$nUnsettled)", t0)
-      labels = next.select("id", "label")
-      iter += 1
-    }
+      warms.warm(labels)
+      while (iter < maxIter && !converged) {
+        val prop = edges.join(labels, edges("src") === labels("id"))
+          .select(col("dst").as("id"), col("label"))
+        // labels covers every node (each appears as an edge src), so the
+        // union's labels branch keeps a node's current label even when no
+        // neighbor offers a smaller one. `mx` rides the SAME aggregate:
+        // min != max at a node ⟺ the node still sees two different labels
+        // across itself and its neighbors ⟺ some incident edge is
+        // bichromatic under the PREVIOUS round's labels — the free
+        // convergence signal (see below).
+        val merged = labels.unionByName(prop)
+          .groupBy("id").agg(min("label").as("label"), max("label").as("mx"))
+        // pointer jump: label(x) ← label(label(x)). Labels are always node
+        // ids of the same component with label(y) <= y, so the composition
+        // stays in-component and non-increasing; chains contract by half
+        // per round (left join: the component min labels itself).
+        val parents = merged
+          .select(col("id").as("pid"), col("label").as("plabel"))
+        val next = merged.join(parents, col("label") === col("pid"), "left")
+          .select(col("id"), coalesce(col("plabel"), col("label")).as("label"),
+            (col("label") =!= col("mx")).as("nu"))
+          .localCheckpoint(false)
+        // Two-tier EXACT convergence test. Soundness rests on the invariant
+        // that labels are always in-component node ids with label(x) <= x
+        // (seed, propagate, and jump each preserve it): if every edge is
+        // monochromatic then each component carries one label L, node L has
+        // label(L) = L, and the component minimum m has label(m) = L <= m —
+        // forcing L = m, so the labels ARE the component minima and the
+        // round map is the identity.
+        //   Tier 1 (free): nUnsettled counts nodes whose propagate multiset
+        //   held two labels. Zero ⟺ the PREVIOUS labels were already
+        //   monochromatic ⟺ this round was a no-op — the same stop round as
+        //   a changed-row count, with no carried `old` column, and the agg
+        //   runs as the SAME action that materializes the round checkpoint.
+        //   Tier 2 (gated probe): the jump can merge the last label chains
+        //   mid-round, so `next` may be converged a full round before tier 1
+        //   can see it. A bichromatic-edge test under `next` detects that —
+        //   but on a far-from-converged high-diameter graph it is a per-round
+        //   surcharge with no chance of firing, so it runs only once
+        //   nUnsettled is small (most components already settled; the
+        //   near-dup norm reaches this on round one). The threshold trades
+        //   one probe against skipping a whole round; 64k keeps the probe
+        //   out of the bulk phase of adversarial chains while firing on
+        //   every realistically-shaped tail.
+        //   The probe is UNSETTLED-RESTRICTED (round 11; the former version
+        //   joined the full edge list against the labels twice): if both
+        //   endpoints of an edge were settled this round, each saw a single
+        //   label across itself and its neighbors, so the two labels were
+        //   equal and the jump maps both through the same parent — the edge
+        //   is monochromatic. Any bichromatic edge therefore has an
+        //   unsettled endpoint, and since `edges` carries both orientations,
+        //   filtering on an unsettled src sees every candidate. No join back
+        //   to dst labels either: deliver each unsettled node's label to its
+        //   neighbors and compare against the neighbors' own labels in ONE
+        //   narrow aggregate — a node holding two distinct labels ⟺ some
+        //   incident edge is bichromatic. The unsettled build side is
+        //   ≤ BichromProbeMax rows by the gate, so the broadcast is bounded
+        //   by construction.
+        // coalesce: an empty pair list converges on round one, not NPE.
+        // The round checkpoint materializes on the warm thread while the
+        // driver constructs and PLANS both convergence actions up front. The
+        // probe plan is built unconditionally (its ~40-80 ms of
+        // analysis+codegen used to sit in a driver gap between the two
+        // actions); whether it EXECUTES keeps the exact tier-1 value gate
+        // below, so semantics and the probe's bounded-broadcast argument
+        // are unchanged. On a tier-1-converged round the probe plan is
+        // discarded unexecuted — driver work wasted, but it overlapped the
+        // checkpoint compute, so its wall cost is ~0.
+        warms.warm(next)
+        val unsettledAgg = next.agg(coalesce(
+          sum(when(col("nu"), 1L).otherwise(0L)), lit(0L)))
+        unsettledAgg.queryExecution.executedPlan // plan while the warm runs
+        val sl = next.filter(col("nu"))
+          .select(col("id").as("sid"), col("label").as("sl"))
+        val probeAgg = edges.join(broadcast(sl), col("src") === col("sid"))
+          .select(col("dst").as("id"), col("sl").as("lbl"))
+          .unionByName(next.select(col("id"), col("label").as("lbl")))
+          .groupBy("id").agg(min("lbl").as("mn"), max("lbl").as("mx"))
+          .agg(coalesce(
+            sum(when(col("mn") =!= col("mx"), 1L).otherwise(0L)),
+            lit(0L)))
+        probeAgg.queryExecution.executedPlan // plan while the warm runs
+        // Barrier before the round's first action: the edge/seed/next warms
+        // must finish MARKING their checkpoints before a consumer action can
+        // submit stages over them (the CcWarms note).
+        warms.await()
+        val nUnsettled = unsettledAgg.head.getLong(0)
+        converged = nUnsettled == 0
+        if (!converged && nUnsettled <= BichromProbeMax)
+          converged = probeAgg.head.getLong(0) == 0
+        labels = next.select("id", "label")
+        iter += 1
+      }
+    } finally warms.close()
     // Partially-propagated labels are silently WRONG groups — never return
     // them. Instead of refusing outright, fall back to the alternating
     // large-star/small-star rounds, which converge in O(log n) rounds on ANY

@@ -9,7 +9,6 @@ import graft.operators.{FuzzyJoin, Upsert}
 import graft.sources.{Multimodal, NetCdf, NetCdfFixture}
 import graft.stream.Ingest
 import graft.vector.{Embed, Knn, SemanticWorkload}
-import graft.dedup.Dedup
 import graft.text.{Analysis, Summaries}
 import graft.QueryContext._
 
@@ -601,7 +600,6 @@ private[graft] object AnalyticsQueries {
       val nodes = withDeg.select(col("src").as("node"))
         .union(withDeg.select(col("dst").as("node")))
         .distinct().localCheckpoint(false)
-      Dedup.warmAsync(nodes) // background-materialize while the driver plans
       var p = nodes.withColumn("p", lit(1000000L))
       for (_ <- 1 to 3) {
         val contrib = withDeg
@@ -729,7 +727,6 @@ private[graft] object AnalyticsQueries {
       val e = pairs.groupBy("pa", "pb").agg(count(lit(1)).as("sup"))
         .filter(col("sup") >= 2).select("pa", "pb")
         .localCheckpoint(false) // three consumers: adjacency, tri probe, degs
-      Dedup.warmAsync(e) // background-materialize while the driver plans
       // No wedge materialization (the x→y→z join grows ~quadratically with
       // density): the wedge COUNT is Σ_y indeg(y)·outdeg(y) — two narrow
       // aggregates — and triangles come from the adjacency-intersection
@@ -740,7 +737,6 @@ private[graft] object AnalyticsQueries {
       val succ = e.groupBy(col("pa"))
         .agg(sort_array(collect_list(col("pb"))).as("nbrs"))
         .localCheckpoint(false) // read twice (per-endpoint lookup)
-      Dedup.warmAsync(succ) // background-materialize while the driver plans
       val tri = e
         .join(broadcast(succ.select(col("pa").as("__a"), col("nbrs").as("na"))),
           col("pa") === col("__a"))
@@ -1357,7 +1353,6 @@ private[graft] object AnalyticsQueries {
         // one-shot) and buys nothing downstream
         .distinct()
         .localCheckpoint(false) // reused: degrees, orientation, wedge close
-      Dedup.warmAsync(und) // background-materialize while the driver plans
       val deg = und.select(col("u").as("n"))
         .unionAll(und.select(col("v").as("n")))
         .groupBy("n").agg(count(lit(1)).as("d"))
@@ -1385,7 +1380,6 @@ private[graft] object AnalyticsQueries {
       val adj = oriented.groupBy(col("s"))
         .agg(sort_array(collect_list(col("t"))).as("nbrs"))
         .localCheckpoint(false) // read twice (per-endpoint lookup)
-      Dedup.warmAsync(adj) // background-materialize while the driver plans
       val tri = oriented
         .join(broadcast(adj.select(col("s").as("__s"), col("nbrs").as("ns"))),
           col("s") === col("__s"))

@@ -340,7 +340,6 @@ private[graft] object DedupQueries {
       val index = Knn.ivfAssign(all, cents, "vec_id", "vec", "label")
         .withColumn("nrm", Knn.l2norm(col("vec")))
         .localCheckpoint(false)
-      Dedup.warmAsync(index) // background-materialize while the driver plans
       val a = index.select(col("label"), col("vec_id").as("id_a"),
         col("vec").as("va"), col("nrm").as("na"))
       val b = index.select(col("label"), col("vec_id").as("id_b"),
@@ -402,7 +401,6 @@ private[graft] object DedupQueries {
       val sigs = shRows.groupBy("doc_id")
         .agg(mh.head, (mh.tail :+ count(lit(1)).as("nsh")): _*)
         .localCheckpoint(false)
-      Dedup.warmAsync(sigs) // overlap the signature compute with plan construction
       val cands = Dedup.lshCandidatePairs(sigs, "doc_id", numSeeds = 6, rowsPerBand = 2)
         .filter((col("id_a") % 3 === 0) =!= (col("id_b") % 3 === 0)) // cross-set only
       // jaccard >= 0.5 in INTEGER form (2·|∩| >= |∪|): no FP division at
@@ -628,7 +626,6 @@ private[graft] object DedupQueries {
       val srcSets = sh.groupBy("sh")
         .agg(array_sort(collect_set("source")).as("ss"))
         .localCheckpoint(false)
-      Dedup.warmAsync(srcSets) // background-materialize while the driver plans
       val sizes = srcSets.select(explode(col("ss")).as("source"))
         .groupBy("source").agg(count(lit(1)).as("n"))
       val pairs = srcSets.select(explode(flatten(transform(col("ss"),

@@ -743,7 +743,6 @@ private[graft] object ScanStreamQueries {
         // both branches (eval-set distinct + corpus probe) read this frame:
         // materialize the shingle explode once instead of tokenizing twice
         .localCheckpoint(false)
-      Dedup.warmAsync(sh) // background-materialize while the driver plans
       val evalSet = sh.filter(col("doc_id") % 97 === 0).select("shingle").distinct()
       sh.filter(col("doc_id") % 97 =!= 0)
         .join(broadcast(evalSet), "shingle")
@@ -919,7 +918,6 @@ private[graft] object ScanStreamQueries {
       val sigs = shRows.groupBy("doc_id")
         .agg(mh.head, (mh.tail :+ count(lit(1)).as("nsh")): _*)
         .localCheckpoint(false)
-      Dedup.warmAsync(sigs) // background-materialize while the driver plans
       val cands = Dedup.lshCandidatePairs(sigs, "doc_id", numSeeds = 6, rowsPerBand = 2)
         .filter(col("id_a") < 200000 && col("id_b") >= 200000)
       val repHits = Dedup.verifyJaccard(cands, shRows, sigs.select("doc_id", "nsh"))

@@ -107,7 +107,6 @@ private[graft] object TextPipelineQueries {
       // report blocks (header/sections/footer) read it from a checkpoint
       // instead of recomputing the 3-stage pipeline per branch
       val g = referenceFloatStats(s, dir).localCheckpoint(false)
-      Dedup.warmAsync(g) // background-materialize while the driver plans
       val header = g.agg(count(lit(1)).as("n"))
         .crossJoin(Tables.events(s, dir).agg(
           date_format(max("ts"), "yyyy-MM-dd HH:mm:ss").as("export_date")))
@@ -276,7 +275,6 @@ private[graft] object TextPipelineQueries {
         .select(col("doc_id"), explode(Dedup.tokens(col("text"))).as("token"))
         .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
         .localCheckpoint(false)
-      Dedup.warmAsync(tf) // background-materialize while the driver plans
       val dfreq = tf.groupBy("token").agg(count(lit(1)).as("df"))
       // Broadcast the df side: it is one row per distinct token (the
       // vocabulary — the small axis of any corpus), while a sort-merge join
@@ -456,7 +454,6 @@ private[graft] object TextPipelineQueries {
         .withColumn("ntok", size(Dedup.tokens(col("text"))).cast("long"))
         .filter(col("n_chars") >= 100 && col("ntok") >= 10)
         .localCheckpoint(false)
-      Dedup.warmAsync(quality) // background-materialize while the driver plans
       val minIds = quality.groupBy("text").agg(min("doc_id").as("doc_id"))
         .select("doc_id")
       val deduped = quality.join(minIds, "doc_id").localCheckpoint(false)
@@ -468,7 +465,6 @@ private[graft] object TextPipelineQueries {
           explode(array_distinct(Dedup.shingles(Dedup.tokens(col("text")), 3)))
             .as("shingle"))
         .localCheckpoint(false)
-      Dedup.warmAsync(sh) // background-materialize while the driver plans
       val evalSh = sh.filter(col("doc_id") % 97 === 0).select("shingle").distinct()
       val contaminated = sh.filter(col("doc_id") % 97 =!= 0)
         .join(broadcast(evalSh), "shingle").select("doc_id").distinct()
@@ -787,7 +783,6 @@ private[graft] object TextPipelineQueries {
             "struct(element_at(ts, i) AS w1, element_at(ts, i + 1) AS w2))")).as("b"))
         .select(col("doc_id"), col("source"), col("b.w1"), col("b.w2"))
         .localCheckpoint(false) // feeds both model counts and the scoring join
-      Dedup.warmAsync(big) // background-materialize while the driver plans
       val c2 = big.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
       val c1 = big.groupBy("w1").agg(count(lit(1)).as("c1"))
       val model = c2.join(c1, "w1")
@@ -873,7 +868,6 @@ private[graft] object TextPipelineQueries {
         .filter(col("token").isin(qterms.map(_._2).distinct: _*))
         .groupBy("doc_id", "dl", "token").agg(count(lit(1)).as("tf"))
         .localCheckpoint(false)
-      Dedup.warmAsync(tf) // background-materialize while the driver plans
       val dfreq = tf.groupBy("token").agg(count(lit(1)).as("df"))
       val perq = tf
         .join(broadcast(dfreq), "token")
@@ -916,12 +910,10 @@ private[graft] object TextPipelineQueries {
           explode(Dedup.tokens(col("text"))).as("token"))
         .groupBy("doc_id", "lang", "token").agg(count(lit(1)).as("cnt"))
         .localCheckpoint(false)
-      Dedup.warmAsync(tokCounts) // background-materialize while the driver plans
       val stats = tokCounts.groupBy("token").agg(
         sum("cnt").as("rc"),
         sum(when(col("lang") === "en", col("cnt")).otherwise(0L)).as("tc"))
         .localCheckpoint(false) // vocabulary-sized; read twice (totals+lean)
-      Dedup.warmAsync(stats) // background-materialize while the driver plans
       val totals = stats.agg(sum("rc").cast("long").as("pool_total"),
         sum("tc").cast("long").as("tgt_total"))
       val lean = stats.crossJoin(broadcast(totals))

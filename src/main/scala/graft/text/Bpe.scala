@@ -122,7 +122,7 @@ object Bpe {
     * The k rounds run on an RDD core, not per-round DataFrames: each round
     * is structurally the same tiny job (pair flatMap -> reduceByKey ->
     * takeOrdered(1) -> merge map), and rebuilding a Catalyst plan per round
-    * costs ~10x the round's actual work (JobProfile at sf0.1: 0.55 s of
+    * costs ~10x the round's actual work (measured at sf0.1: 0.55 s of
     * jobs under 1.24 s of driver-only analyze/optimize/codegen gap — the
     * dd-trio pattern, with no plan reuse possible because the merge
     * literals change every round). The distributed shape is unchanged:

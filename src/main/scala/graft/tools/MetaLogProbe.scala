@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Micro-probe for the constant ~30ms walCommit/commitOffsets/latestOffset
-  * costs StreamProfile surfaced: times raw checkpoint-file-manager writes on
+  * costs the streaming progress reports surfaced: times raw checkpoint-file-manager writes on
   * /dev/shm vs /tmp to decide whether the cost is filesystem, metadata-log
   * machinery, or the progress reporter's own clock.
   */

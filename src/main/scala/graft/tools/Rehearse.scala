@@ -88,10 +88,6 @@ object Rehearse {
     "j2_fuzzy_match" -> 12.0)
 
   def main(args: Array[String]): Unit = {
-    // execution intent: this entry point runs what it builds, so let
-    // query construction background-warm checkpoint segments (see
-    // Dedup.warmOnConstruct -- plan-only introspection paths leave it off).
-    graft.dedup.Dedup.warmOnConstruct = true
     val sf10 = args.headOption.contains("sf10")
     val rest = if (sf10) args.drop(1) else args
     val src = rest.headOption.getOrElse("/root/testdata/sf0.1")
@@ -150,9 +146,7 @@ object Rehearse {
     (if (sf10) Gate10 else Gate).foreach { case (name, maxSec) =>
       val fn = graft.SparkEntry.queries(name)
       runGate(name, maxSec) {
-        val df = fn(spark, dst)
-        graft.dedup.Dedup.awaitWarms() // no action may race warm marking
-        val rows = df.count()
+        val rows = fn(spark, dst).count()
         (rows, if (rows <= 0) Some("rows=0") else None)
       }
     }

@@ -8,10 +8,6 @@ import org.apache.spark.sql.functions._
   */
 object RehearseDedup {
   def main(args: Array[String]): Unit = {
-    // execution intent: this entry point runs what it builds, so let
-    // query construction background-warm checkpoint segments (see
-    // Dedup.warmOnConstruct -- plan-only introspection paths leave it off).
-    graft.dedup.Dedup.warmOnConstruct = true
     val dir = args.headOption.getOrElse("/tmp/graft_sf1")
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
@@ -24,19 +20,19 @@ object RehearseDedup {
       println(f"[rehearse] $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s"); r
     }
     val withPre = time("nearDupHamming (pre-pass)") {
-      graft.dedup.Dedup.countSettled(engine.nearDupHamming(docs, "text", "doc_id", maxDist = 16))
+      engine.nearDupHamming(docs, "text", "doc_id", maxDist = 16).count()
     }
     val without = time("raw hammingPairs") {
       val tc = docs
         .select(col("doc_id"), explode(graft.dedup.Dedup.tokens(col("text"))).as("token"))
         .groupBy("doc_id", "token").agg(count(lit(1)).as("cnt"))
-      graft.dedup.Dedup.countSettled(graft.dedup.Dedup.hammingPairs(
+      graft.dedup.Dedup.hammingPairs(
         graft.dedup.Dedup.simhashWide(tc, "doc_id"), "doc_id", "simhash",
-        bands = 3, maxDist = 16))
+        bands = 3, maxDist = 16).count()
     }
     println(s"[rehearse] pairs with pre-pass: $withPre, without: $without")
     val jacPre = time("nearDupJaccard (pre-pass)") {
-      graft.dedup.Dedup.countSettled(engine.nearDupJaccard(docs, "text", "doc_id"))
+      engine.nearDupJaccard(docs, "text", "doc_id").count()
     }
     println(s"[rehearse] verified jaccard pairs with pre-pass: $jacPre (dd8 raw shape: 314,600)")
     spark.stop()

@@ -12,10 +12,6 @@ import org.apache.spark.sql.SparkSession
   */
 object SpotBench {
   def main(args: Array[String]): Unit = {
-    // execution intent: this entry point runs what it builds, so let
-    // query construction background-warm checkpoint segments (see
-    // Dedup.warmOnConstruct -- plan-only introspection paths leave it off).
-    graft.dedup.Dedup.warmOnConstruct = true
     val dir = args(0)
     def size(f: java.io.File): Long =
       if (f.isDirectory) f.listFiles().map(size).sum else f.length()
@@ -46,9 +42,7 @@ object SpotBench {
     names.foreach { n =>
       val ts = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
-        val df = graft.SparkEntry.queries(n)(spark, dir)
-        graft.dedup.Dedup.awaitWarms() // no action may race warm marking
-        df.count()
+        graft.SparkEntry.queries(n)(spark, dir).count()
         (System.nanoTime() - t0) / 1e9
       }
       println(f"$n%-26s one-shot ${ts(0)}%6.2f s   repeat ${ts(1)}%6.2f s")

@@ -87,6 +87,43 @@ class EdgeCaseSpec extends AnyFunSuite {
     assert(graft.sources.Multimodal.poolFeatures(noMedia).count() == 0)
   }
 
+  test("building dd8_lsh_verified starts no Spark job of its own") {
+    // plan-only callers (plan audits, explain tools, the oracle dump) must
+    // get a lazy frame: construction may plan, never execute. AQE off, as
+    // the bench tiers that construct it: AQE runs a checkpoint's shuffle
+    // stages while planning it. Planning a lazy checkpoint still prepares
+    // its plan, and Spark starts a broadcast build at preparation (the
+    // semi join onto the digest representatives); those jobs carry a
+    // "broadcast exchange" tag and are the only ones allowed here.
+    // a small corpus with exact and near duplicates; dd8 reads only it
+    val sf = QueryContext.scratchDir("dd8lazy")
+    (0 until 200).map { id =>
+      val words = (0 until 12).map(w => s"w${id % 40}x$w")
+      (id.toLong, (if (id % 7 == 0) words :+ "tail" else words).mkString(" "))
+    }.toDF("doc_id", "text")
+      .coalesce(1).write.mode("overwrite").parquet(s"$sf/documents.parquet")
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val tags = String.valueOf(e.properties.getProperty("spark.job.tags"))
+        if (!tags.contains("broadcast exchange")) jobs.add(s"job ${e.jobId}: $tags")
+      }
+    }
+    try {
+      Tables.documents(spark, sf) // the memoized table read infers its schema in a job
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      SparkEntry.queries("dd8_lsh_verified")(spark, sf)
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      assert(jobs.isEmpty, s"jobs started while building dd8_lsh_verified: $jobs")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    }
+  }
+
   test("pack and decontaminate tolerate null/empty/whitespace documents") {
     val docs = Seq(
       (1L, null: String), (2L, ""), (3L, "   "),

@@ -312,6 +312,29 @@ class OperatorSpec extends AnyFunSuite {
     assert(got.size == 5)
   }
 
+  test("connectedComponents re-throws a warm failure and leaves no warm thread") {
+    import graft.dedup.Dedup
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    import scala.jdk.CollectionConverters._
+    def warmThreads = Thread.getAllStackTraces.keySet.asScala
+      .count(_.getName == Dedup.WarmThreadName)
+    // range-based, not a local relation: the poisoned row must fail inside
+    // a job (the edge warm), not during driver-side constant folding
+    val pairs = spark.range(1, 6).select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
+    assert(Dedup.connectedComponents(pairs).count() == 6)
+    assert(warmThreads == 0, "a warm thread outlived a successful call")
+    val poisoned = pairs.withColumn("id_a",
+      when(col("id_a") === 3L, raise_error(lit("cc-warm-poison"))).otherwise(col("id_a")))
+    val call = Future(scala.util.Try(Dedup.connectedComponents(poisoned)))(
+      ExecutionContext.global)
+    val err = Await.result(call, 2.minutes).failed.toOption
+      .getOrElse(fail("a failing pair lineage must not yield labels"))
+    val messages = Iterator.iterate(err)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(messages.exists(m => m != null && m.contains("cc-warm-poison")), err.toString)
+    assert(warmThreads == 0, "a warm thread outlived a failed call")
+  }
+
   test("connectedComponents handles a long chain well inside the round cap") {
     import graft.dedup.Dedup
     // diameter 60: plain min-propagation would need 60 rounds (over the
