@@ -1,119 +1,68 @@
 package graft
-import org.apache.spark.sql.SparkSession
-
-/** The three-tier bench profile, keyed on total input bytes (measured on
-  * the round-7 rehearsal pair, BENCH_NOTES.md):
-  *   - tiny (< 64 MiB): latency-bound — 4-wide shuffles, AQE/compression
-  *     off (32-wide COSTS 1.6× at sf0.1: task overhead dominates KB
-  *     shuffles).
-  *   - mid (64 MiB – 2 GiB): shuffles carry real volume — cores-wide
-  *     width, still no AQE (AQE's per-stage materialization doubled dd8 at
-  *     ~sf1; width alone cut the heavy-query total 2.7×).
-  *   - large (≥ 2 GiB): Spark defaults with AQE + compression — runtime
-  *     re-planning and skew splitting keep cluster-scale plans healthy.
-  * Factored out of Bench.main so BenchProfileSpec can pin the boundaries —
-  * a threshold typo must not silently run sf1 in the interactive tier.
-  */
-object BenchProfile {
-  final case class Profile(
-      shufflePartitions: Int, aqe: Boolean, compress: Boolean, name: String)
-  val InteractiveMax: Long = 64L << 20
-  val MidMax: Long = 2L << 30
-  def tier(inputBytes: Long, cpus: Int): Profile =
-    if (inputBytes < InteractiveMax) Profile(4, aqe = false, compress = false, "interactive")
-    else if (inputBytes < MidMax) Profile(cpus, aqe = false, compress = false, "mid")
-    else Profile(cpus, aqe = true, compress = true, "large")
-}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Tier selection lives in BenchProfile (see its doc + BenchProfileSpec).
-    // Heavy compute stages additionally pin their own parallelism via
-    // explicit repartition(n, key) where the input is a single row group.
-    val inputBytes =
-      try {
-        def size(f: java.io.File): Long =
-          if (f.isDirectory) f.listFiles().map(size).sum else f.length()
-        size(new java.io.File(sfDir))
-      } catch { case _: Throwable => Long.MaxValue }
-    val profile = BenchProfile.tier(inputBytes, cpus.toInt)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", profile.shufflePartitions.toString)
-      // Pin UTC: Tables.events rebinds TIMESTAMP_NTZ fixtures via a session-TZ
-      // cast; UTC makes that cast value-identical on any machine.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", profile.aqe.toString)
-      .config("spark.shuffle.compress", profile.compress.toString)
-      .config("spark.shuffle.spill.compress", profile.compress.toString)
-      .config("spark.ui.enabled", "false")
-      // With the UI off, the status-store listener's per-execution/job/
-      // stage bookkeeping serves nothing at bench time, and a 184-query
-      // sweep generates ~1.5k executions of it (measured ~1 s off the
-      // sweep total when clamped, round 9).
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "50")
-      .withExtensions(new graft.expressions.GraftExtensions())
-    graft.stream.LocalFsPerf.tune(builder)
-    // Optional extra confs: SPARK_GRAFT_CONF="k1=v1;k2=v2" (experiments).
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains('='))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
-    // ERROR, not WARN: WindowExec "No Partition Defined" and similar WARNs
-    // print per-execution and in round 4 pushed the machine-readable JSON
-    // line out of the driver's log-tail capture window (BENCH_r04.json
-    // "parsed": null). The bench output contract needs a quiet tail.
-    spark.sparkContext.setLogLevel("ERROR")
-    // Warm up the session (codegen, parquet footers, shuffle machinery) so
-    // the first timed query doesn't absorb one-time init cost.
-    spark.range(1000).selectExpr("sum(id)").collect()
-    SparkEntry.queries.headOption.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
-    }
-    // Steady-state timing: each query is constructed/planned once and
-    // executed several times, reporting the per-query minimum. The first
-    // execution pays per-plan codegen compilation; repeats measure steady
-    // execution with a warm plan (plan caching is standard engine practice;
-    // Spark's optimizer pass costs ~40-80 ms/query here, which at fixture
-    // scale would otherwise drown the sub-second execution times).
-    // ROUND-18 MEASUREMENT FIX: the above was the documented intent since
-    // round 1, but the timed action was `df.count()`, which builds a fresh
-    // QueryExecution per call — so every rep silently re-paid the full
-    // Catalyst pass and the sweep largely measured the driver's optimizer,
-    // not execution (it also diluted the driver's low-core-count scaling
-    // probe, since planning cost is core-count-independent). Reps now
-    // execute a CLONE of the pre-planned count plan: identical physical
-    // plan, full per-rep recomputation from the parquet inputs (fresh
-    // shuffles + broadcasts; stage-count equality pinned by
-    // BenchActionSpec), with only the redundant re-planning of an
-    // unchanged tree removed. The pre-fix action is still captured once
-    // per run as the "total_replan_action" metric line (continuity).
-    //
-    // Reps are organized as FULL SWEEPS over the query set rather than
-    // back-to-back per query: this box is shared, and a multi-second
-    // background load spike that lands on three consecutive executions of
-    // the same query inflates its min unrecoverably (observed in round 3:
-    // two sub-0.5s queries recorded 2-3s). With sweeps the reps of any one
-    // query are minutes apart, so a spike costs one sweep's sample, not all.
-    // Queries that do their real work when the query FUNCTION is invoked —
-    // streaming drains (st4) and iterative label-propagation loops
-    // (dd9/dd10) — would, if pre-planned, have reps that measure only the
-    // post-work read while the DuckDB baseline re-pays the full recursive
-    // closure per execution. These are timed by calling the query function
-    // FRESH inside the timer so every sample includes the computation.
-    // (s5/j8 stay pre-planned: their sink writes are one-time ingest per
-    // sfDir by design — a fresh call measures the pruned/bucketed scan,
-    // which IS the operator.)
-    val eagerAtPlan = Set("st4_stream_windowed", "dd9_dup_groups",
-      "dd10_dedup_apply", "dd16_canonical_pick")
-    // Optional subset for local iteration: SPARK_GRAFT_ONLY="dd8,ta5".
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').map(_.trim).toSet)
-    val planned = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
-      .flatMap { case (name, fn) =>
+  type QueryFn = (SparkSession, String) => DataFrame
+
+  /** What the rep sweeps measured. `best` holds each query's minimum over
+    * its successful reps and `legacy` its one `df.count()` sweep sample
+    * (the "total_replan_action" line). A query whose construction threw,
+    * or whose every rep threw, is in neither map — it must not lower a
+    * total or count in `n` — and is named in `failed` instead.
+    */
+  final case class Sweep(
+      best: Map[String, Double], legacy: Map[String, Double], failed: Seq[String])
+
+  /** Swallowed exceptions stay visible: class and message on stderr. */
+  private def report(what: String, t: Throwable): Unit =
+    System.err.println(s"[bench] $what failed: ${t.getClass.getName}: ${t.getMessage}")
+
+  // Steady-state timing: each query is constructed/planned once and
+  // executed several times, reporting the per-query minimum. The first
+  // execution pays per-plan codegen compilation; repeats measure steady
+  // execution with a warm plan (plan caching is standard engine practice;
+  // Spark's optimizer pass costs ~40-80 ms/query here, which at fixture
+  // scale would otherwise drown the sub-second execution times).
+  // ROUND-18 MEASUREMENT FIX: the above was the documented intent since
+  // round 1, but the timed action was `df.count()`, which builds a fresh
+  // QueryExecution per call — so every rep silently re-paid the full
+  // Catalyst pass and the sweep largely measured the driver's optimizer,
+  // not execution (it also diluted the driver's low-core-count scaling
+  // probe, since planning cost is core-count-independent). Reps now
+  // execute a CLONE of the pre-planned count plan: identical physical
+  // plan, full per-rep recomputation from the parquet inputs (fresh
+  // shuffles + broadcasts; stage-count equality pinned by
+  // BenchActionSpec), with only the redundant re-planning of an
+  // unchanged tree removed. The pre-fix action is still captured once
+  // per run as the "total_replan_action" metric line (continuity).
+  //
+  // Reps are organized as FULL SWEEPS over the query set rather than
+  // back-to-back per query: this box is shared, and a multi-second
+  // background load spike that lands on three consecutive executions of
+  // the same query inflates its min unrecoverably (observed in round 3:
+  // two sub-0.5s queries recorded 2-3s). With sweeps the reps of any one
+  // query are minutes apart, so a spike costs one sweep's sample, not all.
+  // Queries that do their real work when the query FUNCTION is invoked —
+  // streaming drains (st4) and iterative label-propagation loops
+  // (dd9/dd10) — would, if pre-planned, have reps that measure only the
+  // post-work read while the DuckDB baseline re-pays the full recursive
+  // closure per execution. These are timed by calling the query function
+  // FRESH inside the timer so every sample includes the computation.
+  // (s5/j8 stay pre-planned: their sink writes are one-time ingest per
+  // sfDir by design — a fresh call measures the pruned/bucketed scan,
+  // which IS the operator.)
+  val eagerAtPlan = Set("st4_stream_windowed", "dd9_dup_groups",
+    "dd10_dedup_apply", "dd16_canonical_pick")
+
+  /** Plans every query once, then runs the rep sweeps and the legacy
+    * sweep over the ones that planned. Each query's first swallowed
+    * exception is reported once.
+    */
+  def sweep(spark: SparkSession, sfDir: String, queries: Seq[(String, QueryFn)]): Sweep = {
+    val reported = scala.collection.mutable.Set.empty[String]
+    def swallow(name: String, what: String, t: Throwable): Unit =
+      if (reported.add(name)) report(s"$name $what", t)
+    val planned = queries.flatMap { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
         // Pre-plan the COUNT over the query, not just the query: the timed
@@ -128,7 +77,7 @@ object Bench {
         val cnt = df.groupBy().count()
         cnt.queryExecution.executedPlan // plan eagerly, outside the timers
         Some((name, fn, df, cnt))
-      } catch { case _: Throwable => None }
+      } catch { case t: Throwable => swallow(name, "construction", t); None }
     }
     // Timed action, round-18 measurement fix (per the optimization guide's
     // "plan once, execute many" / §1.4 measurement discipline): execute a
@@ -151,10 +100,8 @@ object Bench {
     // event (the rep silently degrades to the legacy action, and the rep
     // also billed whatever partial clone work ran) — surface it once per
     // query on stderr so a broken cloned-plan path can't hide.
-    val fallbackLogged = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    def timedAction(name: String,
-                    df: org.apache.spark.sql.DataFrame,
-                    cnt: org.apache.spark.sql.DataFrame): Unit = {
+    val fallbackLogged = scala.collection.mutable.Set.empty[String]
+    def timedAction(name: String, df: DataFrame, cnt: DataFrame): Unit = {
       val plan = cnt.queryExecution.executedPlan
       val aqe = plan.isInstanceOf[org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec]
       if (aqe) { df.count(); () }
@@ -167,13 +114,12 @@ object Bench {
         df.count(); ()
       }
     }
-    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                 df: org.apache.spark.sql.DataFrame,
-                 cnt: org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      if (eagerAtPlan(name)) fn(spark, sfDir).count() else timedAction(name, df, cnt)
-      (System.nanoTime() - t0) / 1e9
-    }
+    def timeOnce(name: String, fn: QueryFn, df: DataFrame, cnt: DataFrame): Option[Double] =
+      try {
+        val t0 = System.nanoTime()
+        if (eagerAtPlan(name)) fn(spark, sfDir).count() else timedAction(name, df, cnt)
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch { case t: Throwable => swallow(name, "rep", t); None }
     // NOTE (round 9, negative result worth keeping): an untimed per-query
     // JIT warm-up sweep was tried here and bought nothing — mid-tier
     // floors (t7 ~0.45 s in the full sweep vs 0.15 s in a 2-query session)
@@ -183,10 +129,8 @@ object Bench {
     // and ParallelGC also moved nothing. The tax is the honest cost of
     // one engine process hosting the whole surface.
     val best = scala.collection.mutable.Map.empty[String, Double] // successful reps only
-    for (_ <- 1 to 3; (name, fn, df, cnt) <- planned) {
-      val t = try timeOnce(name, fn, df, cnt) catch { case _: Throwable => -1.0 }
-      if (t >= 0) best(name) = math.min(best.getOrElse(name, Double.MaxValue), t)
-    }
+    for (_ <- 1 to 3; (name, fn, df, cnt) <- planned; t <- timeOnce(name, fn, df, cnt))
+      best(name) = math.min(best.getOrElse(name, Double.MaxValue), t)
     // Adaptive tail passes: anything still over 0.2s after the main sweeps
     // is genuinely heavy, was unlucky, or is still descending the JIT
     // warm-up curve — up to five more spaced sweeps settle which, with an
@@ -197,10 +141,8 @@ object Bench {
     while (improving && extra < 5) {
       val subset = planned.filter { case (name, _, _, _) => best.getOrElse(name, 0.0) > 0.2 }
       val beforeSum = subset.map { case (name, _, _, _) => best(name) }.sum
-      for ((name, fn, df, cnt) <- subset) {
-        val t = try timeOnce(name, fn, df, cnt) catch { case _: Throwable => -1.0 }
-        if (t >= 0) best(name) = math.min(best(name), t)
-      }
+      for ((name, fn, df, cnt) <- subset; t <- timeOnce(name, fn, df, cnt))
+        best(name) = math.min(best(name), t)
       val afterSum = subset.map { case (name, _, _, _) => best(name) }.sum
       improving = subset.nonEmpty && afterSum < beforeSum * 0.99
       extra += 1
@@ -212,17 +154,33 @@ object Bench {
     // in the same artifact. One sweep, not min-of-many: it exists for
     // continuity, not as a headline.
     val legacy = scala.collection.mutable.Map.empty[String, Double]
-    for ((name, fn, df, _) <- planned) {
-      val t = try {
+    for ((name, fn, df, _) <- planned if best.contains(name)) {
+      try {
         val t0 = System.nanoTime()
         if (eagerAtPlan(name)) fn(spark, sfDir).count() else df.count()
-        (System.nanoTime() - t0) / 1e9
-      } catch { case _: Throwable => -1.0 }
-      if (t >= 0) legacy(name) = t
+        legacy(name) = (System.nanoTime() - t0) / 1e9
+      } catch { case t: Throwable => swallow(name, "legacy sweep", t) }
     }
-    val results = SparkEntry.queries.keysIterator
-      .filter(name => only.forall(_.exists(name.startsWith)))
-      .map(name => name -> best.getOrElse(name, -1.0)).toSeq.sortBy(_._1)
+    Sweep(best.toMap, legacy.toMap, queries.map(_._1).filterNot(best.contains).sorted)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // Tier selection lives in BenchProfile (see its doc + BenchProfileSpec).
+    // Heavy compute stages additionally pin their own parallelism via
+    // explicit repartition(n, key) where the input is a single row group.
+    val spark = LocalSession.forDir(sfDir)
+    // Warm up the session (codegen, parquet footers, shuffle machinery) so
+    // the first timed query doesn't absorb one-time init cost.
+    spark.range(1000).selectExpr("sum(id)").collect()
+    SparkEntry.queries.headOption.foreach { case (name, fn) =>
+      try fn(spark, sfDir).count() catch { case t: Throwable => report(s"$name warm-up", t) }
+    }
+    // Optional subset for local iteration: SPARK_GRAFT_ONLY="dd8,ta5".
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').map(_.trim).toSet)
+    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
+    val swept = sweep(spark, sfDir, queries)
     // Honest one-shot pass: queries that do real work at query-FUNCTION
     // invocation time — streaming drains (fresh checkpoint per call),
     // iterative closures, lazy-checkpoint subtrees — under-report in the
@@ -261,17 +219,20 @@ object Bench {
       // their collected aggregate, so the honest cost lives here.
       "o7_txn_manifest", "o8_txn_compact", "o9_txn_skipping",
       "o10_txn_merge", "o11_txn_schema_evo")
-    val oneShot = oneShotFamily
+    val oneShotTimes = oneShotFamily
       .filter(n => SparkEntry.queries.contains(n) && only.forall(_.exists(n.startsWith)))
       .map { name =>
         val fn = SparkEntry.queries(name)
-        val t = try {
+        name -> (try {
           val t0 = System.nanoTime()
           fn(spark, sfDir).count()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => -1.0 }
-        name -> t
+          Some((System.nanoTime() - t0) / 1e9)
+        } catch { case t: Throwable => report(s"$name one-shot", t); None })
       }
+    val oneShot = oneShotTimes.collect { case (name, Some(t)) => name -> t }
+    // Failed queries are excluded from every total and named on the last line.
+    val failed = (swept.failed ++ oneShotTimes.collect { case (name, None) => name })
+      .distinct.sorted
     // Per-query seconds rounded to 3 decimals: keeps the single JSON line
     // well under typical log-tail capture limits (full nanosecond precision
     // pushed it past ~2.8k chars and the harness's tail truncated its head,
@@ -285,14 +246,15 @@ object Bench {
       try "[" + scala.io.Source.fromFile("/proc/loadavg").mkString
         .split("\\s+").take(3).mkString(",") + "]"
       catch { case _: Throwable => "[]" }
+    val results = swept.best.toSeq.sortBy(_._1)
     val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
-    val oneShotTotal = oneShot.map(_._2).filter(_ >= 0).sum
+    val oneShotTotal = oneShot.map(_._2).sum
     val osQs = oneShot.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     val fullLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
-    val legacyResults = results.map { case (k, _) => k -> legacy.getOrElse(k, -1.0) }
+    val legacyResults = swept.legacy.toSeq.sortBy(_._1)
     val legacyQs = legacyResults.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     // "note" marks the methodology so downstream comparisons can't silently
@@ -307,7 +269,7 @@ object Bench {
     // leaving the artifact unparseable. The per-query map goes on its own
     // earlier line (for humans and paired-run analysis); the LAST line is a
     // short, always-capturable summary the driver can parse on its own.
-    val totalLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"one_shot_total":${fmt(oneShotTotal)},"load_avg":${loadAvg()},"sf":"$sfDir"}"""
+    val totalLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"one_shot_total":${fmt(oneShotTotal)},"load_avg":${loadAvg()},"failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},"sf":"$sfDir"}"""
     // Dedicated artifact file: the driver's bounded log-tail capture has
     // truncated the per-query map mid-JSON twice (rounds 4 and 6); a file in
     // the repo makes the full map durable and committable regardless of how

@@ -1,9 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
   * oracle_sql.json, for the DuckDB compare. A failed query does not stop
   * the dump, but every failure is named at the end and the exit code is 1.
+  * The session is the one graft.Bench would build for the same input (its
+  * BenchProfile tier), so the oracle checks the configuration the bench
+  * measures.
   */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -11,15 +13,7 @@ object Verify {
     // optional 3rd arg: comma-separated name filter for fast local iteration
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = graft.stream.LocalFsPerf.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.expressions.GraftExtensions()))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.forDir(sfDir)
     new java.io.File(outDir).mkdirs()
     val failed = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

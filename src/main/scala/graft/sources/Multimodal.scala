@@ -63,7 +63,7 @@ object Multimodal {
   /** Minimal spec-conformant PNG encoder: 8-bit truecolor, filter 0 on
     * every scanline, one stored (uncompressed) zlib/deflate block stream.
     * Round-18 fixture-synthesis optimization: `ImageIO.write` cost 421 µs
-    * per tiny image (tools/MmProbe) and synthesis dominated every mm query
+    * per tiny image (round 18) and synthesis dominated every mm query
     * stage; this writer is ~10 µs and decodes — via the SAME `javax.imageio`
     * read path the operators under test use — to pixel-identical RGB
     * (pinned against an `ImageIO.write` round-trip by MultiFormatSourceSpec).
@@ -719,7 +719,7 @@ object Multimodal {
     * drop-in for `AudioSystem.getAudioInputStream` that scales. The
     * AudioSystem entry point tries Aiff/Au/SoftMidi readers before Wave,
     * and their rejection path serializes on a shared lock: 32 concurrent
-    * decode tasks ran SLOWER than one thread (tools/MmProbe3: 0.47 s/8k
+    * decode tasks ran SLOWER than one thread (round 18: 0.47 s/8k
     * rows at 1 thread, 0.57 s at 32; wave-first 0.004 s and scaling).
     * Same providers, same accept-or-UnsupportedAudioFileException
     * semantics, loaded once per JVM.
@@ -749,7 +749,7 @@ object Multimodal {
     * three). Cached for the same reason as [[audioReaders]]: per-row
     * `ImageIO.createImageInputStream`/`getImageReaders` consult the global
     * IIORegistry, and bypassing it read 12 µs/image vs 29 with linear
-    * 32-thread scaling (tools/MmProbe3). The sniff loop is exactly what
+    * 32-thread scaling (round 18). The sniff loop is exactly what
     * `ImageIO.getImageReaders` runs — same SPIs, same `canDecodeInput`
     * contract (each provider mark/resets the stream).
     */
@@ -830,7 +830,7 @@ object Multimodal {
             // ONE registry-free sniff + ONE parse via readImage (the former
             // shape consulted the IIORegistry twice per row — once to sniff
             // the format, then ImageIO.read re-scanned it and re-parsed the
-            // stream: 220 µs/image vs 12, tools/MmProbe + MmProbe3). Bulk
+            // stream: 220 µs/image vs 12, round 18). Bulk
             // getRGB replaces the per-pixel call (29 → 7 µs): identical
             // sRGB values, one color-model pass. A throwing decode
             // propagates to the outer quarantine (all-null row, as before).

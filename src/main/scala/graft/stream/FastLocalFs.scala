@@ -13,14 +13,14 @@ import org.apache.hadoop.fs.permission.FsPermission
   * Without native IO, `RawLocalFileSystem.setPermission` falls back to
   * forking a `chmod` PROCESS per call (`Shell.execCommand`), and `create`/
   * `mkdirs` call it internally — measured at ~6.4 ms per fork on this box
-  * (tools/MetaLogProbe), i.e. every task file, metadata-log entry, and
+  * (round 9), i.e. every task file, metadata-log entry, and
   * state-store delta write pays multiple forks. This subclass swaps that
   * single method for `java.nio.file.Files.setPosixFilePermissions` (~μs);
   * every other behavior, including CRC checksum files, is inherited
   * unchanged. The override is virtual, so the internal calls inside
   * `create`/`mkdirs` dispatch here too.
   *
-  * Wired via `spark.hadoop.fs.file.impl` in the session builders. This is a
+  * Wired via `spark.hadoop.fs.file.impl` by [[LocalFsPerf]]. This is a
   * level-playing-field fix for the single-node bench (DuckDB's file writes
   * never fork), not a semantics change: on a real cluster the data path is
   * HDFS/S3 and this class never loads.
@@ -51,10 +51,10 @@ class FastLocalFileSystem extends LocalFileSystem(new FastRawLocalFileSystem)
 
 /** One-stop wiring for the local-mode fs/checkpoint perf shims. */
 object LocalFsPerf {
-  def tune(b: org.apache.spark.sql.SparkSession.Builder): org.apache.spark.sql.SparkSession.Builder = b
-    .config("spark.hadoop.fs.file.impl", classOf[FastLocalFileSystem].getName)
-    .config("spark.sql.streaming.checkpointFileManagerClass",
-      classOf[NioCheckpointFileManager].getName)
+  val confs: Seq[(String, String)] = Seq(
+    "spark.hadoop.fs.file.impl" -> classOf[FastLocalFileSystem].getName,
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[NioCheckpointFileManager].getName,
     // Right-size the whole-stage-codegen source→class cache for a process
     // hosting the full 186-plan surface: the 100-entry default evicts and
     // Janino-RECOMPILES most codegen units on every re-execution once the
@@ -65,7 +65,7 @@ object LocalFsPerf {
     // cost is bounded (≤ ~5k compiled classes, tens of KB each). The same
     // setting belongs on any long-lived cluster driver/executor serving a
     // wide query surface.
-    .config("spark.sql.codegen.cache.maxEntries", "5000")
+    "spark.sql.codegen.cache.maxEntries" -> "5000",
     // Drop the codegen stage id from generated CLASS NAMES (it exists only
     // as a debugging aid): with it, two structurally identical stages from
     // different queries — ubiquitous across a 189-query surface built from
@@ -75,5 +75,8 @@ object LocalFsPerf {
     // pl2): sweep −6.5%, one-shots −12%, every round of the interleave in
     // the same direction. Debuggability loss is nil here (stage ids still
     // appear in explain output and task names).
-    .config("spark.sql.codegen.useIdInClassName", "false")
+    "spark.sql.codegen.useIdInClassName" -> "false")
+
+  def tune(b: org.apache.spark.sql.SparkSession.Builder): org.apache.spark.sql.SparkSession.Builder =
+    confs.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
 }

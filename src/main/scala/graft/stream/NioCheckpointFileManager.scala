@@ -17,7 +17,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * write through `RawLocalFs`, whose create path forks a `chmod` process per
   * file when the Hadoop native library is absent — measured ~31 ms per
   * metadata write on this box vs ~0.1 ms for a plain NIO write+atomic-rename
-  * (tools/MetaLogProbe). For a drained `Trigger.AvailableNow` run with a
+  * (round 9). For a drained `Trigger.AvailableNow` run with a
   * fresh checkpoint, those forks ARE the bootstrap cost the round-8 bench
   * surfaced (walCommit + commitOffsets + source-log ≈ 90 ms/batch, plus
   * per-partition state deltas inside addBatch).

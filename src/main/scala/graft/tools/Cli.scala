@@ -41,13 +41,11 @@ import graft.Engine
 object Cli {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.expressions.GraftExtensions())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_MASTER is a deployment address, so the input is not
+    // sized here: the large tier is Spark's defaults (AQE on).
+    val cpus = graft.LocalSession.cpus
+    val spark = graft.LocalSession(graft.BenchProfile.tier(Long.MaxValue, cpus),
+      sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
     val rc = run(spark, args)
     spark.stop()
     if (rc != 0) sys.exit(rc)

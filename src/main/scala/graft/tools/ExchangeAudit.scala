@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
@@ -27,19 +26,13 @@ object ExchangeAudit {
   }
 
   def main(args: Array[String]): Unit = {
-    val builder = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.expressions.GraftExtensions())
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val sfDir = "/root/testdata/sf0.001"
+    val spark = graft.LocalSession.forDir(sfDir)
     val names = if (args.nonEmpty) args.toSeq else graft.SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>
       try {
         val (s, b) = countExchanges(
-          graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.001")
+          graft.SparkEntry.queries(n)(spark, sfDir)
             .queryExecution.executedPlan)
         println(f"[exchange] $n%-26s shuffles=$s broadcasts=$b")
       } catch { case e: Throwable =>

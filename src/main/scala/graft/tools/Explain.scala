@@ -1,25 +1,17 @@
-// Plan inspection harness: sbt -batch "runMain graft.tools.Explain <query names...>"
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+/** Plan inspection: prints `.explain("formatted")` for the named queries
+  * (all of them by default) in the session graft.Bench would build for
+  * `sfDir`. Usage: runMain graft.tools.Explain <sfDir> [names...]
+  */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val builder = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // GRAFT_NO_EXT=1 → vanilla session (A/B custom operators vs fallbacks);
-    // default mirrors the Verify/Bench sessions, which carry the extensions
-    if (!sys.env.contains("GRAFT_NO_EXT"))
-      builder.withExtensions(new graft.expressions.GraftExtensions())
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val names = if (args.nonEmpty) args.toSeq else graft.SparkEntry.queries.keys.toSeq.sorted
+    val sfDir = args(0)
+    val spark = graft.LocalSession.forDir(sfDir)
+    val names = if (args.length > 1) args.toSeq.drop(1) else graft.SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>
       println(s"\n========== $n ==========")
-      graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").explain("formatted")
+      graft.SparkEntry.queries(n)(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

@@ -205,11 +205,7 @@ object MakeFuzz {
   def main(args: Array[String]): Unit = {
     val Array(src, dst, variant) = args.take(3)
     val seed = if (args.length > 3) args(3).toLong else 0L
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession.forDir(src)
     build(spark, src, dst, variant, seed)
     spark.stop()
   }

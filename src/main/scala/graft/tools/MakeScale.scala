@@ -11,6 +11,14 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.tools.MakeScale /root/testdata/sf0.1 /tmp/graft_sf1 10
   */
 object MakeScale {
+  /** The tier of the `copies`× fixture built from `src`. */
+  def profile(src: String, copies: Int): graft.BenchProfile.Profile = {
+    val bytes = graft.BenchProfile.inputBytes(src)
+    graft.BenchProfile.tier(
+      if (bytes > Long.MaxValue / copies) Long.MaxValue else bytes * copies,
+      graft.LocalSession.cpus)
+  }
+
   def build(spark: SparkSession, src: String, dst: String, copies: Int): Unit = {
     val Shift = 100000000L
     val keyed: Map[String, Seq[String]] = Map(
@@ -42,12 +50,7 @@ object MakeScale {
 
   def main(args: Array[String]): Unit = {
     val Array(src, dst, copiesStr) = args.take(3)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession(profile(src, copiesStr.toInt))
     build(spark, src, dst, copiesStr.toInt)
     spark.stop()
   }

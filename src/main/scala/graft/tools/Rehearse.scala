@@ -1,13 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** One-command ~sf1 scale-regression gate.
   *
   * Builds the 10× key-shifted rehearsal fixture from sf0.1 if absent
   * ([[MakeScale]]), then one-shot-times the scale-sensitive query set with
-  * the mid-tier bench profile and fails (exit 1) if any query errors,
-  * returns no rows, or blows its wall-time threshold — so a plan
+  * the fixture's bench tier (mid at both sf1 and sf10) and fails (exit 1)
+  * if any query errors, returns no rows, or blows its wall-time
+  * threshold — so a plan
   * regression (a lost broadcast, a resurrected cartesian, a checkpoint
   * that stopped cutting lineage) fails HERE, in one local command, instead
   * of surfacing as a mysterious driver-bench blowup a round later.
@@ -93,18 +92,9 @@ object Rehearse {
     val src = rest.headOption.getOrElse("/root/testdata/sf0.1")
     val dst = rest.drop(1).headOption
       .getOrElse(if (sf10) "/tmp/graft_sf10" else "/tmp/graft_sf1")
-    // mid-tier bench profile (64 MiB – 2 GiB): cores-wide shuffles, no AQE
-    val spark = graft.stream.LocalFsPerf.tune(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.shuffle.compress", "false")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.expressions.GraftExtensions()))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     val copies = if (sf10) 100 else 10
+    // sized on the fixture about to be built: mid tier at sf1 and sf10
+    val spark = graft.LocalSession(MakeScale.profile(src, copies))
     if (!new java.io.File(s"$dst/documents.parquet").exists()) {
       println(s"[rehearse] building ${copies}x fixture $dst from $src")
       MakeScale.build(spark, src, dst, copies = copies)

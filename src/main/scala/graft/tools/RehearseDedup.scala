@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-rehearsal: raw hamming pairs vs the Engine pipeline with its
@@ -9,10 +8,7 @@ import org.apache.spark.sql.functions._
 object RehearseDedup {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft_sf1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession.forDir(dir)
     val docs = graft.Tables.documents(spark, dir).select("doc_id", "text")
     val engine = new graft.Engine(spark)
     def time[T](name: String)(f: => T): T = {

@@ -85,6 +85,19 @@ class BenchActionSpec extends AnyFunSuite {
         "if this ever re-runs fully, Bench.timedAction's AQE fallback can be revisited")
   }
 
+  test("a query that fails to build or to run is excluded from the sweep and named") {
+    val boom = org.apache.spark.sql.functions.udf { (id: Long) =>
+      if (id >= 0) throw new IllegalStateException("rep boom"); id }
+    val queries: Seq[(String, Bench.QueryFn)] = Seq(
+      "build_fails" -> ((_, _) => throw new IllegalStateException("build boom")),
+      "ok" -> ((s, _) => s.range(10).toDF("id")),
+      "reps_fail" -> ((s, _) => s.range(10).toDF("id").where(boom(org.apache.spark.sql.functions.col("id")) > 0)))
+    val swept = Bench.sweep(spark, sf, queries)
+    assert(swept.best.keySet === Set("ok"))
+    assert(swept.legacy.keySet === Set("ok"))
+    assert(swept.failed === Seq("build_fails", "reps_fail"))
+  }
+
   test("cloned-plan action computes the same count as df.count()") {
     withAqeOff {
       for (name <- Seq("a1_user_summary", "q5_local_supplier_volume", "w1_top_orders")) {

@@ -43,4 +43,23 @@ class BenchProfileSpec extends AnyFunSuite {
     // the AQE/defaults tier, never the latency-tuned one
     assert(tier(Long.MaxValue, cpus).name === "large")
   }
+
+  test("a missing or misspelled input dir sizes like an unreadable one") {
+    // File.length() is 0 for a missing path: without the explicit check a
+    // typo would size to 0 bytes and run in the 4-wide interactive tier
+    val missing = java.nio.file.Files.createTempDirectory("graft-profile")
+      .resolve("no-such-sf").toString
+    assert(inputBytes(missing) === Long.MaxValue)
+    assert(forDir(missing, cpus).name === "large")
+    val underFile = java.nio.file.Files.createTempFile("graft-profile", ".bin")
+      .resolve("sf0.1").toString
+    assert(forDir(underFile, cpus).name === "large")
+  }
+
+  test("a readable dir sizes to its bytes") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-profile")
+    java.nio.file.Files.write(dir.resolve("t.parquet"), new Array[Byte](1000))
+    assert(inputBytes(dir.toString) === 1000L)
+    assert(forDir(dir.toString, cpus).name === "interactive")
+  }
 }
