@@ -422,9 +422,9 @@ private[graft] object StreamingQueries {
     // GDAC-sync shape. A binaryFile readStream watches an upload inbox
     // (here the s10 quarantine fleet: healthy classic CDF + healthy
     // HDF5-backed NetCDF-4 + four poison files), each micro-batch decodes
-    // arrivals file-per-task through the SAME parse+tabularize path as the
-    // batch scan, tolerantly (poison skips per file, never kills the
-    // stream), appending rows to a parquet sink. Stateless flatMap ⇒
+    // arrivals file-per-task through the SAME tolerant per-file decode as the
+    // batch scan (`NetCdf.decodeTolerant`: poison skips per file, never kills
+    // the stream), appending rows to a parquet sink. Stateless flatMap ⇒
     // exactly-once via the file-source log alone; at 100 TB this is
     // file-parallel with O(file) memory per task, and new drops decode
     // incrementally without rescanning the corpus. The oracle rebuilds the
@@ -445,11 +445,7 @@ private[graft] object StreamingQueries {
         .option("pathGlobFilter", "*.nc")
         .load(inbox)
         .select("content").as[Array[Byte]]
-        .flatMap { bytes =>
-          try graft.sources.NetCdf.tabularize(graft.sources.NetCdf.parse(bytes))
-          catch { case _: graft.sources.NetCdf.NetCdfParseException =>
-            Seq.empty[graft.sources.NetCdf.ProfileLevel] }
-        }
+        .flatMap(graft.sources.NetCdf.decodeTolerant)
         .writeStream.format("parquet")
         .option("path", out)
         .outputMode("append")

@@ -601,18 +601,20 @@ object NetCdf {
       .nextOption()
   }
 
-  /** Fill-value nulling: _FillValue wins over missing_value
-    * (load_data.py:320-326); NaN is null either way.
+  /** A variable's fill value: _FillValue wins over missing_value
+    * (load_data.py:320-326). NaN when it has none — NaN equals nothing, and
+    * [[clean]] nulls NaN either way.
     */
-  private def cleanValue(v: ParsedVar, x: Double): Option[Double] = {
-    val fill = v.attrs.get("_FillValue").orElse(v.attrs.get("missing_value"))
-    val isFill = fill match {
-      case Some(a: Array[Double]) if a.nonEmpty => x == a(0)
-      case Some(d: Double) => x == d
-      case _ => false
+  private def fillOf(v: ParsedVar): Double =
+    v.attrs.get("_FillValue").orElse(v.attrs.get("missing_value")) match {
+      case Some(a: Array[Double]) if a.nonEmpty => a(0)
+      case Some(d: Double) => d
+      case _ => Double.NaN
     }
-    if (isFill || x.isNaN) None else Some(x)
-  }
+
+  /** Fill-value nulling against a variable's [[fillOf]]. */
+  private def clean(x: Double, fill: Double): Option[Double] =
+    if (x == fill || x.isNaN) None else Some(x)
 
   /** Offset seconds for a timezone token: named UTC zones, `Z`, or a
     * `±hh[:mm[:ss]]` / `±hhmm` numeric offset. None if not a zone token.
@@ -641,7 +643,13 @@ object NetCdf {
     * wall-clock at UTC), not stripped. Returns micros since
     * 1970-01-01T00:00:00Z.
     */
-  private[graft] def decodeTimeMicros(units: String, value: Double): Long = {
+  private[graft] def decodeTimeMicros(units: String, value: Double): Long =
+    timeDecoder(units)(value)
+
+  /** Parses a time `units` attribute once into value => micros since the
+    * Unix epoch (see [[decodeTimeMicros]]); throws what it would throw.
+    */
+  private def timeDecoder(units: String): Double => Long = {
     val u = units.trim
     val lower = u.toLowerCase
     val scaleMicros =
@@ -684,7 +692,7 @@ object NetCdf {
     val epochMicros =
       ld.toEpochSecond(java.time.ZoneOffset.ofTotalSeconds(offsetSec)) * 1000000L +
         ld.getNano / 1000L
-    epochMicros + (value * scaleMicros).round
+    value => epochMicros + (value * scaleMicros).round
   }
 
   /** NC_CHAR variables hold fixed-width strings: a (N, STRLEN) char array is
@@ -705,21 +713,38 @@ object NetCdf {
     else if (x == math.rint(x)) x.toLong.toString
     else x.toString
 
-  /** Tabularize one parsed file: 2D (profile × level) measurement arrays
-    * explode to one row per (profile, level); 1D per-profile vars broadcast
-    * across that profile's levels. Record files parse to the same shape —
-    * the record dim is materialized at its record count — so native Argo
-    * per-float files (N_PROF unlimited) and ERDDAP fixed-size responses
-    * tabularize identically.
+  /** A level column: the raw value at (profile, level), NaN where the
+    * variable is absent or has no such level, and the variable's fill.
     */
-  def tabularize(f: ParsedFile): Seq[ProfileLevel] = {
-    val pres = resolve(f, "pressure")
-    val temp = resolve(f, "temperature")
-    val psal = resolve(f, "salinity")
+  private final class LevelColumn(ov: Option[ParsedVar], nLev: Int) {
+    private val fill = ov.fold(Double.NaN)(fillOf)
+    val raw: (Int, Int) => Double = ov match {
+      case Some(v) if v.dims.length == 2 => (p, l) => v.numeric(p * nLev + l)
+      case Some(v) => (p, l) => if (l == 0) v.numeric(p) else Double.NaN
+      case None => (_, _) => Double.NaN
+    }
+    def apply(p: Int, l: Int): Option[Double] = clean(raw(p, l), fill)
+  }
+
+  /** One parsed file's tabular view: 2D (profile × level) measurement
+    * arrays explode to one row per (profile, level); 1D per-profile vars
+    * broadcast across that profile's levels. Record files parse to the same
+    * shape — the record dim is materialized at its record count — so native
+    * Argo per-float files (N_PROF unlimited) and ERDDAP fixed-size responses
+    * tabularize identically.
+    *
+    * Aliases and fills resolve once per file, per-profile columns once per
+    * profile. The time `units` parse is lazy: a file whose time values are
+    * all fill, or that has no rows, never parses them, so an unsupported
+    * units string fails only a file that has a real time value.
+    */
+  private final class Table(f: ParsedFile) {
+    private val pres = resolve(f, "pressure")
+    private val temp = resolve(f, "temperature")
+    private val psal = resolve(f, "salinity")
     // Profile/level extents come from the first 2D measurement var; an
     // all-1D file (ERDDAP tabledap flat response) degenerates to 1 level.
-    val shape2d = Seq(pres, temp, psal).flatten.find(_.dims.length == 2)
-    val (nProf, nLev) = shape2d match {
+    private val (nProf, nLev) = Seq(pres, temp, psal).flatten.find(_.dims.length == 2) match {
       case Some(v) => (v.dims(0).size, v.dims(1).size)
       case None =>
         val n = Seq(pres, temp, psal).flatten.headOption
@@ -728,47 +753,83 @@ object NetCdf {
         (n, 1)
     }
 
-    val floatIds: Int => String = resolve(f, "float_id") match {
+    private val floatIds: Int => String = resolve(f, "float_id") match {
       case Some(v) if v.ncType == NC_CHAR =>
         val s = charStrings(v); p => if (p < s.length) s(p) else "unknown"
       case Some(v) => p => floatIdString(v.numeric(p))
       case None => _ => "unknown"
     }
-    val profIds: Int => Long = resolve(f, "profile_id") match {
+    private val profIds: Int => Long = resolve(f, "profile_id") match {
       case Some(v) => p => v.numeric(p).toLong
       case None => p => p.toLong
     }
-    val times: Int => Option[java.sql.Timestamp] = resolve(f, "time") match {
+    private val times: Int => Option[java.sql.Timestamp] = resolve(f, "time") match {
       case Some(v) =>
-        val units = v.attrs.get("units").collect { case s: String => s }
-        p => cleanValue(v, v.numeric(p)).map { x =>
-          val micros = units match {
-            case Some(u) => decodeTimeMicros(u, x)
-            case None => (x * 1000000.0).round // already epoch seconds
+        val fill = fillOf(v)
+        lazy val toMicros: Double => Long =
+          v.attrs.get("units").collect { case s: String => s } match {
+            case Some(u) => timeDecoder(u)
+            case None => x => (x * 1000000.0).round // already epoch seconds
           }
+        p => clean(v.numeric(p), fill).map { x =>
+          val micros = toMicros(x)
           java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
             micros / 1000000L, (micros % 1000000L) * 1000L))
         }
       case None => _ => None
     }
-    def oneD(ov: Option[ParsedVar]): Int => Option[Double] = ov match {
-      case Some(v) => p => cleanValue(v, v.numeric(p))
+    private def oneD(ov: Option[ParsedVar]): Int => Option[Double] = ov match {
+      case Some(v) => val fill = fillOf(v); p => clean(v.numeric(p), fill)
       case None => _ => None
     }
-    val lats = oneD(resolve(f, "latitude"))
-    val lons = oneD(resolve(f, "longitude"))
-    def twoD(ov: Option[ParsedVar]): (Int, Int) => Option[Double] = ov match {
-      case Some(v) if v.dims.length == 2 =>
-        (p, l) => cleanValue(v, v.numeric(p * nLev + l))
-      case Some(v) => (p, l) => if (l == 0) cleanValue(v, v.numeric(p)) else None
-      case None => (_, _) => None
-    }
-    val presF = twoD(pres); val tempF = twoD(temp); val psalF = twoD(psal)
+    private val lats = oneD(resolve(f, "latitude"))
+    private val lons = oneD(resolve(f, "longitude"))
+    private val presC = new LevelColumn(pres, nLev)
+    private val tempC = new LevelColumn(temp, nLev)
+    private val psalC = new LevelColumn(psal, nLev)
 
-    for (p <- 0 until nProf; l <- 0 until nLev) yield ProfileLevel(
-      floatIds(p), profIds(p), l.toLong,
-      times(p), lats(p), lons(p), presF(p, l), tempF(p, l), psalF(p, l))
+    /** Visits every (profile, level) in row order with its profile's
+      * columns, read once per profile before its first level.
+      */
+    private def walk(level: (ProfileLevel, Int, Int) => Unit): Unit =
+      if (nLev > 0) for (p <- 0 until nProf) {
+        val profile = ProfileLevel(floatIds(p), profIds(p), 0L, times(p), lats(p), lons(p),
+          None, None, None)
+        for (l <- 0 until nLev) level(profile, p, l)
+      }
+
+    def rows: Seq[ProfileLevel] = {
+      val out = Vector.newBuilder[ProfileLevel]
+      walk { (profile, p, l) =>
+        out += profile.copy(level = l.toLong,
+          pres = presC(p, l), temp = tempC(p, l), psal = psalC(p, l))
+      }
+      out.result()
+    }
+
+    /** The length of [[rows]], making every read it makes in the same
+      * order — so a file fails here exactly where it fails there — without
+      * building a row.
+      */
+    def rowCount: Long = {
+      walk { (_, p, l) => presC.raw(p, l); tempC.raw(p, l); psalC.raw(p, l) }
+      nProf.max(0).toLong * nLev.max(0)
+    }
   }
+
+  /** Tabularize one parsed file: one row per (profile, level), in that
+    * order (see [[Table]]).
+    */
+  def tabularize(f: ParsedFile): Seq[ProfileLevel] = new Table(f).rows
+
+  /** One file's rows, or none when its container fails to parse — only a
+    * [[NetCdfParseException]]: an engine bug still fails the job instead of
+    * masquerading as a corrupt upload. The tolerant per-file decode of
+    * [[read]] and of the st13 streaming ingest.
+    */
+  private[graft] def decodeTolerant(bytes: Array[Byte]): Seq[ProfileLevel] =
+    try tabularize(parse(bytes))
+    catch { case _: NetCdfParseException => Seq.empty }
 
   /** One container-metadata row: a dimension or a variable of one file. */
   final case class InspectRow(
@@ -831,13 +892,11 @@ object NetCdf {
     */
   def read(spark: SparkSession, path: String, tolerant: Boolean): DataFrame = {
     import spark.implicits._
+    val decode: Array[Byte] => Seq[ProfileLevel] =
+      if (tolerant) decodeTolerant else bytes => tabularize(parse(bytes))
     spark.read.format("binaryFile").option("pathGlobFilter", NcGlob).load(path)
       .select("content").as[Array[Byte]]
-      .flatMap { bytes =>
-        if (!tolerant) tabularize(parse(bytes))
-        else try tabularize(parse(bytes))
-        catch { case _: NetCdfParseException => Seq.empty[ProfileLevel] }
-      }
+      .flatMap(decode)
       .toDF()
   }
 
@@ -852,7 +911,10 @@ object NetCdf {
   /** The quarantine ledger for a tolerant scan: one row per file with parse
     * outcome, triage status, error message, and decoded row count — what
     * `read(tolerant = true)` dropped and why. Same file-per-task fan-out as
-    * [[read]]; a million-file audit is one parallel pass.
+    * [[read]]; a million-file audit is one parallel pass. The row count
+    * comes from the file's shape after the same reads [[tabularize]]
+    * makes, so a file is quarantined here exactly when the tolerant read
+    * skips it, and no row is built.
     */
   def scanStatus(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
@@ -861,8 +923,7 @@ object NetCdf {
       .map { case (p, bytes) =>
         val file = p.substring(p.lastIndexOf('/') + 1)
         try {
-          val rows = tabularize(parse(bytes))
-          ScanStatus(file, ok = true, "ok", None, rows.length.toLong)
+          ScanStatus(file, ok = true, "ok", None, new Table(parse(bytes)).rowCount)
         } catch {
           case e: NetCdfParseException =>
             ScanStatus(file, ok = false, e.kind, Some(e.getMessage), 0L)

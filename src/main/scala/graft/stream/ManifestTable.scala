@@ -270,9 +270,14 @@ object ManifestTable {
     } finally reader.close()
   }
 
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  private def describe(e: Exception): String = s"${e.getClass.getName}: ${e.getMessage}"
+
   /** `file=` + `stat=` lines for `relFiles` (paths relative to the table
-    * root) — the segment body. Footer-read failures degrade to a stats-less
-    * listing, never a failed commit.
+    * root) — the segment body. A footer-read failure degrades to a
+    * stats-less listing (that file is never pruned), never a failed
+    * commit, and logs one WARN naming the file.
     */
   private def segmentLines(spark: SparkSession, table: String,
       relFiles: Seq[String]): Seq[String] = {
@@ -281,7 +286,11 @@ object ManifestTable {
       val abs = Paths.get(table, rel).toAbsolutePath.toString
       val stats =
         try footerStats(conf, abs)
-        catch { case _: Exception => Map.empty[String, ColStats] }
+        catch { case e: Exception =>
+          log.warn(s"footer stats of $abs unreadable; listed " +
+            s"without stats, so reads never prune it: ${describe(e)}")
+          Map.empty[String, ColStats]
+        }
       s"file=$rel" +: stats.toSeq.sortBy(_._1).map { case (c, cs) => statLine(rel, c, cs) }
     }
   }
@@ -343,9 +352,9 @@ object ManifestTable {
 
   private def hintPath(dir: Path): Path = dir.resolve("_latest.hint")
 
-  /** Best-effort advisory pointer update — failure is invisible (the next
-    * [[latest]] falls back to a listing). Written via temp + atomic move so
-    * readers never observe a torn value.
+  /** Best-effort advisory pointer update — a failure costs only speed
+    * (the next [[latest]] falls back to a listing) and logs one WARN.
+    * Written via temp + atomic move so readers never observe a torn value.
     */
   private def writeHint(dir: Path, v: Long): Unit =
     try {
@@ -353,13 +362,23 @@ object ManifestTable {
       Files.write(tmp, v.toString.getBytes("UTF-8"))
       Files.move(tmp, hintPath(dir), StandardCopyOption.REPLACE_EXISTING,
         StandardCopyOption.ATOMIC_MOVE)
-    } catch { case _: Exception => () }
+    } catch { case e: Exception =>
+      log.warn(s"hint write ${hintPath(dir)} failed: ${describe(e)}")
+    }
 
+  /** The hint's version; None when it is absent (the normal state before
+    * the first commit writes it) or unusable — the latter logs a WARN.
+    */
   private def readHint(dir: Path): Option[Long] =
     try {
       val s = new String(Files.readAllBytes(hintPath(dir)), "UTF-8").trim
       if (s.nonEmpty && s.forall(_.isDigit)) Some(s.toLong) else None
-    } catch { case _: Exception => None }
+    } catch {
+      case _: NoSuchFileException => None
+      case e: Exception =>
+        log.warn(s"hint read ${hintPath(dir)} failed: ${describe(e)}")
+        None
+    }
 
   /** Highest committed snapshot, None for an empty/absent table.
     *

@@ -433,4 +433,61 @@ class ManifestTableSpec extends AnyFunSuite {
     assert(ManifestTable.vacuum(table, 0L).isEmpty, "clean runs leave no orphans")
     QueryContext.rmTree(base)
   }
+
+  /** WARN messages logged to `logger` while `body` runs. */
+  private def warningsOf(logger: String)(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("capture", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == org.apache.logging.log4j.Level.WARN)
+          seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val log = org.apache.logging.log4j.LogManager.getLogger(logger).asInstanceOf[Logger]
+    log.addAppender(appender)
+    try body finally { log.removeAppender(appender); appender.stop() }
+    seen.asScala.toSeq
+  }
+
+  test("a footer that cannot be read commits the file without stats; reads keep it") {
+    import org.apache.spark.sql.sources.{EqualTo, GreaterThan}
+    val t = freshTable()
+    val schema = Seq((1L, 1.0)).toDF("id", "v").schema
+    ManifestTable.appendBatch(Seq((1L, 1.0), (2L, 2.0)).toDF("id", "v").coalesce(1), t, 0L)
+    // the second commit runs in a session whose file system refuses every
+    // open: the write succeeds, the footer read right after it fails
+    val failing = spark.newSession()
+    failing.conf.set("fs.file.impl", classOf[UnopenableLocalFs].getName)
+    failing.conf.set("fs.file.impl.disable.cache", "true")
+    val batch = failing.createDataFrame(Seq((50L, 5.0), (60L, 6.0))).toDF("id", "v")
+    val warned = warningsOf(ManifestTable.getClass.getName) {
+      ManifestTable.appendBatch(batch.coalesce(1), t, 1L)
+    }
+    assert(warned.size === 1, warned)
+    assert(warned.head.contains("footer stats of") && warned.head.contains("b1_") &&
+      warned.head.contains("java.io.IOException: cannot open"), warned)
+    val m = ManifestTable.latest(t).get
+    assert(m.batchIds === Set(0L, 1L) && m.files.size === 2)
+    val (withStats, without) = m.files.partition(m.stats.contains)
+    assert(withStats.size === 1 && without.size === 1, m.stats.toString)
+    // a predicate only the stats-less file could satisfy: never pruned away
+    assert(ManifestTable.pruneFiles(m, Seq(GreaterThan("id", 10L))) === without)
+    assert(ManifestTable.pruneFiles(m, Seq(EqualTo("id", 1L))).toSet === m.files.toSet)
+    val got = ManifestTable.readWhere(spark, t, schema, Seq(GreaterThan("id", 10L)))
+      .as[(Long, Double)].collect().sorted.toSeq
+    assert(got === Seq((50L, 5.0), (60L, 6.0)))
+    assert(ManifestTable.read(spark, t, schema).count() === 4)
+  }
+}
+
+/** A local file system whose every `open` fails: files can be written and
+  * listed but not read back, as on a read error right after a write.
+  */
+class UnopenableLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int)
+      : org.apache.hadoop.fs.FSDataInputStream =
+    throw new java.io.IOException(s"cannot open $f")
 }

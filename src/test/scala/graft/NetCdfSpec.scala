@@ -419,4 +419,136 @@ class NetCdfSpec extends AnyFunSuite {
     // one input file per task partition-able: at minimum all four floats land
     assert(df.select("float_id").distinct().count() === 4)
   }
+
+  // ---- decode agreement: the ledger and the tolerant read see the same files
+
+  private val BadUnits = "fortnights since 1950-01-01"
+  private val TimeFill = -999.0
+
+  /** Three files that share one unsupported time `units`: every time value
+    * fill (stays ok, null `ts`), no records at all (stays ok, 0 rows), and
+    * one real time value (quarantines as corrupt). The units string is only
+    * ever parsed for a real value, so only the third file fails. The
+    * record-less file holds the time variable alone: its profile count is
+    * the record count, 0.
+    */
+  private def writeUnsupportedUnitsFiles(dir: String): Unit = {
+    def juld(times: Seq[Double]) = NcVar("JULD", Seq(0), NC_DOUBLE,
+      Seq("units" -> NcStr(BadUnits), "_FillValue" -> NcDoubles(Array(TimeFill))),
+      NcDoubles(times.toArray))
+    def file(name: String, platform: Double, times: Seq[Double]): Unit = {
+      val n = times.length
+      NetCdf.writeFile(s"$dir/$name", Seq(NcDim("N_PROF", n), NcDim("N_LEVELS", 2)), Nil,
+        Seq(
+          NcVar("PLATFORM_NUMBER", Seq(0), NC_DOUBLE, Nil, NcDoubles(Array.fill(n)(platform))),
+          juld(times),
+          NcVar("PRES", Seq(0, 1), NC_FLOAT, Nil, NcFloats(Array.tabulate(2 * n)(_.toFloat)))))
+    }
+    file("units_all_fill.nc", 120, Seq(TimeFill, TimeFill, TimeFill))
+    NetCdf.writeFile(s"$dir/units_no_records.nc", Seq(NcDim("N_PROF", 0)), Nil, Seq(juld(Nil)))
+    file("units_one_real.nc", 122, Seq(TimeFill, 9.5, TimeFill))
+  }
+
+  private def fleetDir(tag: String)(write: String => Unit): String = {
+    val d = java.nio.file.Files.createTempDirectory(s"graft-nc-$tag").toString
+    write(d)
+    d
+  }
+
+  /** Rows the tolerant read returns, per source file name. */
+  private def tolerantRowsByFile(dir: String): Map[String, Long] = {
+    import org.apache.spark.sql.functions.input_file_name
+    NetCdf.read(spark, dir, tolerant = true)
+      .select(input_file_name().as("f")).groupBy("f").count().collect()
+      .map { r => val f = r.getString(0); f.substring(f.lastIndexOf('/') + 1) -> r.getLong(1) }
+      .toMap
+  }
+
+  test("scanStatus n_rows equals the tolerant read's rows per file, over every fleet") {
+    val fleets = Seq(
+      fleetDir("classic")(NetCdfFixture.writeFleet),
+      fleetDir("cdf2") { d =>
+        for (f <- 0 until NetCdfFixture.N_FLOATS)
+          java.nio.file.Files.write(java.nio.file.Paths.get(d, s"float_${100 + f}.nc"),
+            NetCdfFixture.fileBytes(f, version = 2))
+      },
+      fleetDir("cdf5")(NetCdfFixture.writeCdf5Fleet),
+      fleetDir("record")(NetCdfFixture.writeRecordFleet),
+      fleetDir("hdf5")(NetCdfFixture.writeHdf5Fleet),
+      fleetDir("hdf5grp")(NetCdfFixture.writeHdf5GroupFleet),
+      fleetDir("quarantine")(NetCdfFixture.writeQuarantineFleet),
+      fleetDir("units")(writeUnsupportedUnitsFiles))
+    // (status, error) of every file that does not decode
+    val quarantined = Map(
+      "upload_truncated.nc" -> ("corrupt", "name length 8 out of range"),
+      "upload_garbage.nc" -> ("corrupt", "not a NetCDF classic file"),
+      "upload_hdf5_truncated.nc" -> ("corrupt",
+        "malformed HDF5 container: EOF address 4584 beyond file 60"),
+      "upload_netcdf4.nc" -> ("unsupported-hdf5",
+        "unsupported HDF5 feature: filter id 4 — valid NetCDF-4 container, " +
+          "convert to classic CDF or extend the subset"),
+      "units_one_real.nc" -> ("corrupt", s"unsupported time units: $BadUnits"))
+    val seen = Seq.newBuilder[String]
+    for (dir <- fleets) {
+      val rows = tolerantRowsByFile(dir)
+      val ledger = NetCdf.scanStatus(spark, dir).collect()
+      assert(rows.keySet.subsetOf(ledger.map(_.getString(0)).toSet), dir)
+      ledger.foreach { r =>
+        val file = r.getString(0)
+        seen += file
+        val (ok, status, error, nRows) =
+          (r.getBoolean(1), r.getString(2), Option(r.getString(3)), r.getLong(4))
+        quarantined.get(file) match {
+          case Some((kind, msg)) =>
+            assert((ok, status, error, nRows) === ((false, kind, Some(msg), 0L)), file)
+            assert(!rows.contains(file), file)
+          case None =>
+            assert((ok, status, error) === ((true, "ok", None)), file)
+            assert(nRows === rows.getOrElse(file, 0L), file)
+        }
+      }
+    }
+    // every fleet file was ledgered, the quarantined ones included
+    assert(quarantined.keySet.subsetOf(seen.result().toSet))
+  }
+
+  test("unsupported time units fail a file only when a real time value needs them") {
+    val dir = fleetDir("units")(writeUnsupportedUnitsFiles)
+    val ledger = NetCdf.scanStatus(spark, dir).collect()
+      .map(r => r.getString(0) -> (r.getBoolean(1), r.getString(2), r.getLong(4))).toMap
+    assert(ledger === Map(
+      "units_all_fill.nc" -> ((true, "ok", 6L)),
+      "units_no_records.nc" -> ((true, "ok", 0L)),
+      "units_one_real.nc" -> ((false, "corrupt", 0L))))
+    val rows = NetCdf.read(spark, dir, tolerant = true)
+      .select("float_id", "ts", "pres").collect()
+    assert(rows.map(_.getString(0)).toSet === Set("120"))
+    assert(rows.length === 6 && rows.forall(_.isNullAt(1)))
+    assert(rows.map(_.getDouble(2)).sorted.toSeq === (0 until 6).map(_.toDouble))
+    // the strict read fails on the one file the ledger quarantines
+    assertThrows[org.apache.spark.SparkException](NetCdf.read(spark, dir).count())
+  }
+
+  test("tabularize rows and their order are pinned for every healthy fleet file") {
+    val files = (0 until NetCdfFixture.N_FLOATS).flatMap(f =>
+      Seq(NetCdfFixture.fileBytes(f), NetCdfFixture.fileBytes(f, version = 2))) ++
+      Seq(NetCdfFixture.recordFileBytes(4), NetCdfFixture.recordFileBytes(5),
+        NetCdfFixture.recordFileBytes(6, version = 5), NetCdfFixture.fileBytes(7, version = 5),
+        NetCdfFixture.hdf5FileBytes(8, charPlatform = true, zone = " UTC"),
+        NetCdfFixture.hdf5FileBytes(9, record = true, zone = " -02:00"),
+        NetCdfFixture.hdf5FileBytes(10, v2 = true),
+        NetCdfFixture.hdf5FileBytes(11, denseAttrs = true),
+        NetCdfFixture.hdf5GroupFileBytes(12), NetCdfFixture.hdf5GroupFileBytes(13),
+        NetCdfFixture.hdf5GroupFileBytes(14, vlenPlatform = true))
+    // one line per row, in decode order; ts as epoch micros (zone-free)
+    val lines = files.flatMap(b => NetCdf.tabularize(NetCdf.parse(b))).map { r =>
+      val ts = r.ts.map(t => t.getTime / 1000 * 1000000L + t.getNanos / 1000)
+      Seq(r.float_id, r.profile_id, r.level, ts, r.lat, r.lon, r.pres, r.temp, r.psal)
+        .mkString("|")
+    }
+    assert(lines.length === files.length * NetCdfFixture.N_PROF * NetCdfFixture.N_LEVELS)
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+      .digest(lines.mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString
+    assert(md5 === "6f5bef92e8f7a28be0f4859185ffa28d")
+  }
 }
