@@ -178,23 +178,12 @@ class Engine(spark: SparkSession) {
       Seq(idCol))
 
   /** MinHash+LSH near-duplicate candidate pairs over `textCol` (word
-    * 3-gram shingles, 6 lanes, 3 bands).
+    * 3-gram shingles, 6 lanes, 3 bands): every `id_a < id_b` that shares a
+    * band bucket. A pair list, so no exact-dedup pre-pass.
     */
-  def nearDupCandidates(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val sh = df.select(col(idCol),
-        explode(graft.expressions.ShingleMd5.of(Dedup.tokens(col(textCol)), 3)).as("__s"))
-      .select(col(idCol), col("__s.sh_hi").as("sh_hi"), col("__s.sh_lo").as("sh_lo"))
-    val mh = Dedup.minhashAggs(6)
-    val sigs = sh.groupBy(idCol).agg(mh.head, mh.tail: _*)
-    val bands = sigs.select(col(idCol), explode(Dedup.bandKeys(6, 2)).as("b"))
-      .select(col(idCol), col("b.band_id"), col("b.band_key"))
-    bands.as("x").join(bands.as("y"),
-        col("x.band_id") === col("y.band_id") &&
-          col("x.band_key") === col("y.band_key") &&
-          col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
-      .distinct()
-  }
+  def nearDupCandidates(df: DataFrame, textCol: String, idCol: String): DataFrame =
+    Dedup.bandCandidates(df.select(col(idCol).as("doc_id"), col(textCol).as("text"),
+      lit(0).as("side")))
 
   /** Wide-SimHash hamming-ball near-dup pairs with a MANDATORY exact-dedup
     * pre-pass. Identical documents otherwise collapse onto identical
@@ -215,8 +204,9 @@ class Engine(spark: SparkSession) {
       Dedup.simhashWide(tc, idCol), idCol, "simhash", bands, maxDist)
   }
 
-  /** Production LSH near-dup path: exact-dedup pre-pass, then minhash-band
-    * candidates verified by exact Jaccard — the same composition rule as
+  /** Production LSH near-dup path: the near-dup spine
+    * ([[Dedup.nearDupSpine]]) — exact-dedup rep tier, then minhash-band
+    * candidates verified by exact Jaccard, the same composition rule as
     * [[nearDupHamming]]. Identical documents collapse to identical minhash
     * signatures, so a clone-heavy corpus turns every band bucket quadratic
     * (the sf1 rehearsal measured 314k verified pairs / 16.8s without the
@@ -227,24 +217,10 @@ class Engine(spark: SparkSession) {
     */
   def nearDupJaccard(
       df: DataFrame, textCol: String, idCol: String,
-      shingleN: Int = 3, numSeeds: Int = 6, rowsPerBand: Int = 2): DataFrame = {
-    val unique = dedupExact(df, textCol, idCol)
-    // fused native shingle+digest — see graft.expressions.ShingleMd5
-    val shRows = unique.select(col(idCol),
-        explode(graft.expressions.ShingleMd5.of(
-          Dedup.tokens(col(textCol)), shingleN)).as("__s"))
-      .select(col(idCol), col("__s.sh_hi").as("sh_hi"),
-        col("__s.sh_lo").as("sh_lo"))
-      .localCheckpoint(false)
-    val mh = Dedup.minhashAggs(numSeeds)
-    val sigs = shRows.groupBy(idCol)
-      .agg(mh.head, (mh.tail :+ count(lit(1)).as("nsh")): _*)
-    val cands = Dedup.lshCandidatePairs(sigs, idCol, numSeeds, rowsPerBand)
-    Dedup.verifyJaccard(
-      cands,
-      shRows.withColumnRenamed(idCol, "doc_id"),
-      sigs.select(col(idCol).as("doc_id"), col("nsh")))
-  }
+      shingleN: Int = 3, numSeeds: Int = 6, rowsPerBand: Int = 2): DataFrame =
+    Dedup.nearDupSpine(
+      df.select(col(idCol).as("doc_id"), col(textCol).as("text"), lit(0).as("side")),
+      Dedup.AnyPair, shingleN, numSeeds, rowsPerBand).verified
 
   /** Batched-inference embedding over a corpus: one encoder init per
     * partition, batch-50 encode calls (the real-model contract —
@@ -469,45 +445,26 @@ class Engine(spark: SparkSession) {
     */
   def dedupIncremental(batch: DataFrame, index: DataFrame,
       idCol: String, textCol: String, shingleN: Int = 3): DataFrame = {
-    val b = batch.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
-    val i = index.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
-    val all = b.withColumn("__side", lit("b"))
-      .unionByName(i.withColumn("__side", lit("i")))
-    // ONE md5 pass: `slim` feeds both tiers — the exact tier as a digest
-    // semi-join, and the near tier's exact-tier representatives per
-    // (digest, side) — the dd8/dd12 recipe: clones share shingle sets
-    // hence signatures/buckets/jaccard, so rep-pair candidacy expands back
-    // exactly via the digest and a clone-heavy corpus can't hand the band
-    // buckets a quadratic clique
-    val slim = all.select(col("doc_id"), col("__side"),
-        md5(col("__text")).as("__dg"))
-      .localCheckpoint(false)
-    val exact = slim.filter(col("__side") === "b").select("doc_id", "__dg")
-      .join(slim.filter(col("__side") === "i").select("__dg"), Seq("__dg"), "left_semi")
+    val b = batch.select(col(idCol).as("doc_id"), col(textCol).as("text"))
+    // sides: batch 1, index 0; only cross-side pairs verify
+    val nd = Dedup.nearDupSpine(
+      b.withColumn("side", lit(1))
+        .unionByName(index.select(col(idCol).as("doc_id"), col(textCol).as("text"),
+          lit(0).as("side"))),
+      (x, y) => x =!= y, shingleN)
+    // exact tier: a batch digest that the index holds
+    val exact = nd.slim.filter(col("side") === 1).select("doc_id", "dg")
+      .join(nd.slim.filter(col("side") === 0).select("dg"), Seq("dg"), "left_semi")
       .select(col("doc_id"), lit("exact_dup").as("status"))
-    val repIds = slim.groupBy("__dg", "__side").agg(min("doc_id").as("rep_id"))
-    val repDocs = all
-      .join(repIds.select(col("rep_id").as("doc_id")), Seq("doc_id"), "left_semi")
-    val shRows = repDocs.select(col("doc_id"),
-        explode(graft.expressions.ShingleMd5.of(
-          Dedup.tokens(col("__text")), shingleN)).as("__s"))
-      .select(col("doc_id"), col("__s.sh_hi").as("sh_hi"),
-        col("__s.sh_lo").as("sh_lo")).localCheckpoint(false)
-    val mh = Dedup.minhashAggs(6)
-    val sigs = shRows.groupBy("doc_id")
-      .agg(mh.head, (mh.tail :+ count(lit(1)).as("nsh")): _*).localCheckpoint(false)
-    val sides = repIds.select(col("rep_id").as("doc_id"), col("__side"))
-    val cands = Dedup.lshCandidatePairs(sigs, "doc_id", numSeeds = 6, rowsPerBand = 2)
-      .join(sides.select(col("doc_id").as("id_a"), col("__side").as("__sa")), "id_a")
-      .join(sides.select(col("doc_id").as("id_b"), col("__side").as("__sb")), "id_b")
-      .filter(col("__sa") =!= col("__sb"))
-      .select("id_a", "id_b")
-    val near = Dedup.verifyJaccard(cands, shRows, sigs.select("doc_id", "nsh"))
+    // near tier: jaccard >= 0.5 in INTEGER form (2·|∩| >= |∪|) — no FP
+    // division at the decision boundary; the flag fans out to every batch
+    // clone of a verified batch rep's digest
+    val near = nd.verified
       .filter(col("n_inter") * 2 >= col("nsh_a") + col("nsh_b") - col("n_inter"))
       .select(explode(array(col("id_a"), col("id_b"))).as("rep_id"))
       .distinct()
-      .join(repIds.filter(col("__side") === "b").select("rep_id", "__dg"), "rep_id")
-      .join(slim.filter(col("__side") === "b").select("doc_id", "__dg"), "__dg")
+      .join(nd.reps.filter(col("side") === 1).select("rep_id", "dg"), "rep_id")
+      .join(nd.slim.filter(col("side") === 1).select("doc_id", "dg"), "dg")
       .select(col("doc_id"), lit("near_dup").as("status"))
     val flagged = exact.unionByName(near)
       .groupBy("doc_id").agg(min("status").as("status")) // exact_dup < near_dup

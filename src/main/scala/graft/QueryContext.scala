@@ -218,90 +218,35 @@ private[graft] object QueryContext {
     val variants = base.filter(col("doc_id") % 25 === 0)
       .withColumn("doc_id", col("doc_id") + 100000)
       .withColumn("text", concat(col("text"), lit(" tailword")))
-    val docsAll = base.unionByName(variants)
-    // EXACT TIER (round 10): collapse byte-identical texts to their min-id
-    // representative BEFORE any shingle work, and emit linear rep→clone
-    // "star" edges (jaccard exactly 1) instead of enumerating clone pairs.
-    // Without this pass, in-bucket candidate generation is O(c²) per exact
-    // clone group and the row-domain verify amplifies that by shingles/doc
-    // — the sf10 rehearsal gate (100 identical copies per text) caught it
-    // as a 70 GB spill-to-disk-full. With it, clone cost is one digest
-    // shuffle + a broadcast join, and the LSH tier only ever sees distinct
-    // contents. CC consumers (dd9/dd10/dd16) see the identical transitive
-    // closure: a clone's shingle set equals its rep's, so connecting it by
-    // one star edge reaches exactly the verified partners the quadratic
-    // pair list would. The DuckDB oracle mirrors the same tier.
-    // slim (doc_id, digest) frame: full text never routes through the
-    // digest shuffle — rep selection is a ~40 B/row aggregate, and the rep
-    // corpus comes back via a doc_id semi join that shares the pipeline's
-    // existing doc_id partitioning (broadcast at fixture scale, shuffle at
-    // corpus scale — planner's choice)
-    // checkpointed: ALL tier consumers (rep selection, the semi-join build,
-    // both star-edge joins) read these ~40 B rows instead of re-scanning
-    // and re-hashing the full corpus text per action
-    val slim = docsAll.select(col("doc_id"), md5(col("text")).as("dg"))
-      .localCheckpoint(false)
-    val repIds = slim.groupBy("dg")
-      .agg(min("doc_id").as("rep_id"), count(lit(1)).as("n_copies"))
-      // NOT checkpointed: the semi join computes it inline within the
-      // shingle job, and the stars branch's recompute is a slim
-      // scan+md5+agg — cheaper than one more eager materialization
-    val docs = docsAll
-      .join(repIds.select(col("rep_id").as("doc_id")), Seq("doc_id"), "left_semi")
-      .repartition(32, col("doc_id"))
-    // fused native shingle+digest (graft_shingle_md5): distinct word-3-gram
-    // digests per doc in ONE evaluation — no interpreted HOF chain, no
-    // intermediate shingle strings (ShingleMd5Spec pins parity with the
-    // composed explode(array_distinct(shingles))+md5_split form)
-    val shRowsPlan = docs.select(col("doc_id"),
-        explode(graft.expressions.ShingleMd5.of(Dedup.tokens(col("text")), 3)).as("__s"))
-      .select(col("doc_id"), col("__s.sh_hi").as("sh_hi"), col("__s.sh_lo").as("sh_lo"))
-    // shRows feeds both the signature agg and the row-domain verify:
-    // materialize it once (localCheckpoint) so the tokenize+shingle+md5
-    // lineage isn't computed per consumer. Measured UNCONDITIONAL on
-    // purpose — a size-gated variant (skip below 64 MB) was paired-timed in
-    // round 5 at sf0.1: dd8/dd9/dd10 totaled 11.1 s without the checkpoint
-    // vs 7.9 s with it, i.e. the recompute costs ~10× the checkpoint write
-    // even on a 584 KB corpus. At cluster scale the gap only widens.
-    val shRows = shRowsPlan.localCheckpoint(false)
-    val mh = Dedup.minhashAggs(6)
-    // sigs has two consumers too (band keys + the per-doc sizes in the
-    // verify) — same reasoning as shRows, one narrow row per doc
-    val sigs = shRows.groupBy("doc_id")
-      .agg(mh.head, (mh.tail :+ count(lit(1)).as("nsh")): _*)
-      .localCheckpoint(false)
-    // NOT checkpointed (round 11): verifyJaccard now consumes the pair list
-    // exactly once (pairs explode into side rows before a single shingle
-    // join), so the bucket-groupBy + pair-explode + distinct lineage runs
-    // once inline — the former checkpoint existed only because the verify's
-    // two side joins each forced a broadcast build of it.
-    val cands = Dedup.lshCandidatePairs(sigs, "doc_id", numSeeds = 6, rowsPerBand = 2)
-    val verified = graft.dedup.Dedup
-      .verifyJaccard(cands, shRows, sigs.select("doc_id", "nsh"))
+    val nd = Dedup.nearDupSpine(
+      base.unionByName(variants).withColumn("side", lit(0)), Dedup.AnyPair)
+    val verified = nd.verified
       .withColumn("jaccard", Stats.parityRound(col("jaccard"), 6))
       .withColumn("is_dup", col("jaccard") >= 0.5)
-    // exact-tier star edges: one (rep, clone) row per clone — jaccard is 1
-    // by construction (identical text ⇒ identical shingle set); n_inter is
-    // the rep's shingle count (0 for shingle-less short texts).
+    // exact-tier star edges: linear rep→clone edges (jaccard exactly 1)
+    // instead of enumerating clone pairs. CC consumers (dd9/dd10/dd16) see
+    // the identical transitive closure: a clone's shingle set equals its
+    // rep's, so one star edge reaches exactly the verified partners the
+    // quadratic pair list would. n_inter is the rep's shingle count (0 for
+    // shingle-less short texts). The DuckDB oracle mirrors the same tier.
     // SEMANTICS NOTE (round 10 change, documented round 11 per ADVICE): the
     // exact tier flags BYTE-IDENTICAL texts shorter than one shingle
     // (< 3 tokens) as dups with jaccard 1.0 — pairs the LSH tier alone
     // could never emit (no shingles, nsh = 0). Pre-round-10, identical
     // short texts were NOT flagged; consumers of dd8/dd9/dd10/dd16 group
-    // counts should know the dup definition widened. The DuckDB oracle
-    // mirrors the same tier, so parity holds by construction.
+    // counts should know the dup definition widened.
     // only digests with clones participate (n_copies > 1): the stars probe
     // side shrinks to the duplicated slice of the corpus. No broadcast
     // hints — that slice is data-sized in a clone-heavy corpus, so the
     // planner (AQE at the large tier) must keep the choice; at fixture
     // scale it broadcasts on its own
-    val starBase = slim
-      .join(repIds.filter(col("n_copies") > 1).select("dg", "rep_id"), "dg")
+    val starBase = nd.slim
+      .join(nd.reps.filter(col("n_copies") > 1).select("dg", "rep_id"), "dg")
       .filter(col("doc_id") =!= col("rep_id"))
       .select(col("rep_id").as("id_a"), col("doc_id").as("id_b"))
     if (full) {
       val starEdges = starBase
-        .join(sigs.select(col("doc_id").as("id_a"), col("nsh")),
+        .join(nd.sizes.select(col("doc_id").as("id_a"), col("nsh")),
           Seq("id_a"), "left")
         .select(col("id_a"), col("id_b"),
           coalesce(col("nsh"), lit(0L)).as("n_inter"),

@@ -277,20 +277,125 @@ object Dedup {
     * volume is bounded by bucket size (the LSH invariant — compose
     * [[exactDupGroups]] upstream so clones can't create a hot bucket).
     * Input: a signature frame with mh0..mh{n-1} columns and `idCol`.
+    * Each bucket member carries its `side`, so `keep(side_a, side_b)`
+    * selects pairs inside the bucket expansion — a cross-side filter
+    * costs no join back to a side table.
     */
   def lshCandidatePairs(sigs: DataFrame, idCol: String,
-      numSeeds: Int, rowsPerBand: Int): DataFrame = {
+      numSeeds: Int, rowsPerBand: Int,
+      side: Column = lit(0), keep: (Column, Column) => Column = AnyPair): DataFrame = {
     val members = col("members")
-    sigs.select(col(idCol).as("id"), explode(bandKeys(numSeeds, rowsPerBand)).as("b"))
-      .select(col("id"), col("b.band_id"), col("b.band_key"))
+    sigs.select(col(idCol).as("id"), side.as("side"),
+        explode(bandKeys(numSeeds, rowsPerBand)).as("b"))
+      .select(col("id"), col("side"), col("b.band_id"), col("b.band_key"))
       .groupBy("band_id", "band_key")
-      .agg(sort_array(collect_list(col("id"))).as("members"))
+      .agg(sort_array(collect_list(struct(col("id"), col("side")))).as("members"))
       .filter(size(members) > 1)
       .select(explode(flatten(transform(members, (x, i) =>
         transform(slice(members, i + lit(2), size(members)),
-          y => struct(x.as("id_a"), y.as("id_b")))))).as("p"))
+          y => struct(x("id").as("id_a"), x("side").as("side_a"),
+            y("id").as("id_b"), y("side").as("side_b")))))).as("p"))
+      .filter(keep(col("p.side_a"), col("p.side_b")))
       .select(col("p.id_a"), col("p.id_b"))
       .distinct()
+  }
+
+  /** Pair predicate that keeps every candidate. */
+  val AnyPair: (Column, Column) => Column = (_, _) => lit(true)
+
+  /** Per-doc distinct word-n-gram digests `(doc_id, side, sh_hi, sh_lo)`
+    * and MinHash signatures `(doc_id, side, mh0.., nsh)` of a
+    * `(doc_id, text, side)` frame, both lazily checkpointed: each has two
+    * consumers in the spine (signatures and verify; band keys and sizes),
+    * and round 5 measured the tokenize+shingle+md5 recompute at ~10× the
+    * checkpoint write even on a 584 KB corpus (dd8/dd9/dd10 at sf0.1:
+    * 11.1 s without vs 7.9 s with). The fused native shingle+digest
+    * (graft_shingle_md5) yields the distinct digests in ONE evaluation — no
+    * interpreted HOF chain, no intermediate shingle strings (ShingleMd5Spec
+    * pins parity with the composed explode(array_distinct(shingles)) form).
+    */
+  private def signatures(docs: DataFrame, shingleN: Int,
+      numSeeds: Int): (DataFrame, DataFrame) = {
+    val shRows = docs.select(col("doc_id"), col("side"),
+        explode(graft.expressions.ShingleMd5.of(tokens(col("text")), shingleN)).as("__s"))
+      .select(col("doc_id"), col("side"), col("__s.sh_hi").as("sh_hi"),
+        col("__s.sh_lo").as("sh_lo"))
+      .localCheckpoint(false)
+    val mh = minhashAggs(numSeeds)
+    val sigs = shRows.groupBy("doc_id", "side")
+      .agg(mh.head, (mh.tail :+ count(lit(1)).as("nsh")): _*)
+      .localCheckpoint(false)
+    (shRows, sigs)
+  }
+
+  /** Every `id_a < id_b` pair of a `(doc_id, text, side)` frame that shares
+    * a band bucket — a pair list, so no rep tier (SURVEY §9 decision 34
+    * exempts pair-list outputs: they are themselves quadratic in clones).
+    */
+  def bandCandidates(docs: DataFrame, shingleN: Int = 3, numSeeds: Int = 6,
+      rowsPerBand: Int = 2): DataFrame =
+    lshCandidatePairs(signatures(docs, shingleN, numSeeds)._2, "doc_id",
+      numSeeds, rowsPerBand)
+
+  /** The frames a [[nearDupSpine]] caller fans verified rep pairs back out
+    * with:
+    *   - `slim`: `(doc_id, side, dg)`, one md5 digest per input doc;
+    *   - `reps`: `(dg, side, rep_id, n_copies)`, the minimum id of each
+    *     (digest, side) and its copy count;
+    *   - `sizes`: `(doc_id, nsh)`, distinct shingles per rep doc;
+    *   - `verified`: `(id_b, id_a, n_inter, nsh_a, nsh_b, jaccard)` over the
+    *     rep pairs the caller's predicate kept (see [[verifyJaccard]]).
+    */
+  final case class NearDups(slim: DataFrame, reps: DataFrame,
+      sizes: DataFrame, verified: DataFrame)
+
+  /** The near-duplicate spine every per-document LSH consumer runs (SURVEY
+    * §9 decision 34): exact rep tier → shingle digests → MinHash → band
+    * candidates → row-domain Jaccard verify, over a `(doc_id, text, side)`
+    * frame (`side` an int, constant for single-sided callers; doc ids
+    * unique across sides).
+    *
+    * EXACT TIER: byte-identical texts collapse to their min-id rep per
+    * (digest, side) BEFORE any shingle work. Without it, in-bucket
+    * candidate generation is O(c²) per clone group and the row-domain
+    * verify amplifies that by shingles/doc — the sf10 rehearsal (100
+    * identical copies per text) caught it as a 70 GB spill (dd8) and 94 s
+    * (dc2). Expansion back is exact: clones share shingle sets, hence
+    * signatures, buckets and jaccard, so a verified rep pair stands for
+    * every clone pair of its two digests — callers fan out through `slim`
+    * and `reps`. `slim` is checkpointed: every tier consumer (rep
+    * selection, the semi join, callers' fan-out joins) reads its ~40 B rows
+    * instead of re-scanning and re-hashing the corpus text; full text never
+    * routes through the digest shuffle, and the rep corpus comes back by a
+    * doc_id semi join. `reps` is NOT checkpointed: the semi join computes
+    * it inline within the shingle job, and a fan-out's recompute is a slim
+    * scan+md5+agg — cheaper than one more eager materialization.
+    *
+    * No repartition: the rep docs keep their input's partitioning. A
+    * 32-way spread of the rep docs (what dd8 and dc2 did before the spine)
+    * cost the perfbench `batch` dedup pass 28% in `side_p50_ms`, a spread
+    * at the session's shuffle width 18%, and a 32-way spread of the input
+    * ahead of the spine made dd9/dd10/dd16/dc2 18-30% slower at sf0.1 in
+    * one SpotBench pair, while no spread at all was faster there too
+    * (BENCH_NOTES "Near-dup spine").
+    *
+    * `keep(side_a, side_b)` selects candidates inside the band buckets (see
+    * [[lshCandidatePairs]]); the pair list is consumed once by the verify,
+    * so it is NOT checkpointed.
+    */
+  def nearDupSpine(docs: DataFrame, keep: (Column, Column) => Column,
+      shingleN: Int = 3, numSeeds: Int = 6, rowsPerBand: Int = 2): NearDups = {
+    val slim = docs.select(col("doc_id"), col("side"), md5(col("text")).as("dg"))
+      .localCheckpoint(false)
+    val reps = slim.groupBy("dg", "side")
+      .agg(min("doc_id").as("rep_id"), count(lit(1)).as("n_copies"))
+    val repDocs = docs
+      .join(reps.select(col("rep_id").as("doc_id")), Seq("doc_id"), "left_semi")
+    val (shRows, sigs) = signatures(repDocs, shingleN, numSeeds)
+    val sizes = sigs.select("doc_id", "nsh")
+    val cands = lshCandidatePairs(sigs, "doc_id", numSeeds, rowsPerBand,
+      col("side"), keep)
+    NearDups(slim, reps, sizes, verifyJaccard(cands, shRows, sizes))
   }
 
   /** Name of the thread a [[connectedComponents]] call warms its

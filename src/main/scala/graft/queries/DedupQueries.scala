@@ -361,10 +361,9 @@ private[graft] object DedupQueries {
 
     // ---- incremental dedup against an existing corpus index: the crawl
     // op — an incoming batch is admitted only if it is neither an EXACT
-    // copy (128-bit content digest anti-join) nor a NEAR copy (banded LSH
-    // + row-domain Jaccard verify ≥ 0.5) of anything already kept. Both
-    // tiers are bounded: the digest join is a narrow key join, candidates
-    // are bucket-bounded, and only batch×index pairs verify. -------------
+    // copy (128-bit content digest semi-join) nor a NEAR copy (banded LSH
+    // + row-domain Jaccard verify ≥ 0.5) of anything already kept: the
+    // Engine.dedupIncremental entry point, over a %3 batch/index split. ---
     "dd12_incremental_dedup" -> { (s, dir) =>
       val base = Tables.documents(s, dir).select("doc_id", "text")
       // re-crawled pages: exact copies of index docs landing in the batch
@@ -372,52 +371,9 @@ private[graft] object DedupQueries {
       // exact tier provably fires — not just the near tier
       val recrawled = base.filter(col("doc_id") % 30 === 1)
         .withColumn("doc_id", col("doc_id") + 300002)
-      val all = base.unionByName(recrawled).repartition(32, col("doc_id"))
-      val batch = all.filter(col("doc_id") % 3 === 0)
-      // ONE md5 pass over the corpus: `slim` feeds both tiers — the exact
-      // tier is a digest semi-join of the batch side against the index
-      // side, and the near tier's per-(digest, side) representatives
-      // (the dd8/dc2 recipe: clones share shingle sets hence signatures/
-      // buckets/jaccard, so rep-pair candidacy expands back exactly and a
-      // clone-heavy corpus can't hand the band buckets a quadratic clique;
-      // the near flag fans out to every batch-side clone of a verified
-      // rep's digest).
-      val slim = all.select(col("doc_id"),
-          (col("doc_id") % 3 === 0).cast("int").as("side"),
-          md5(col("text")).as("dg"))
-        .localCheckpoint(false)
-      // tier 1: exact content match
-      val exactHit = slim.filter(col("side") === 1).select("doc_id", "dg")
-        .join(slim.filter(col("side") === 0).select("dg"), Seq("dg"), "left_semi")
-        .select(col("doc_id"), lit("exact_dup").as("status"))
-      val repIds = slim.groupBy("dg", "side").agg(min("doc_id").as("rep_id"))
-      val repDocs = all
-        .join(repIds.select(col("rep_id").as("doc_id")), Seq("doc_id"), "left_semi")
-      val shRows = repDocs.select(col("doc_id"),
-          explode(graft.expressions.ShingleMd5.of(Dedup.tokens(col("text")), 3)).as("__s"))
-        .select(col("doc_id"), col("__s.sh_hi").as("sh_hi"), col("__s.sh_lo").as("sh_lo"))
-        .localCheckpoint(false)
-      val mh = Dedup.minhashAggs(6)
-      val sigs = shRows.groupBy("doc_id")
-        .agg(mh.head, (mh.tail :+ count(lit(1)).as("nsh")): _*)
-        .localCheckpoint(false)
-      val cands = Dedup.lshCandidatePairs(sigs, "doc_id", numSeeds = 6, rowsPerBand = 2)
-        .filter((col("id_a") % 3 === 0) =!= (col("id_b") % 3 === 0)) // cross-set only
-      // jaccard >= 0.5 in INTEGER form (2·|∩| >= |∪|): no FP division at
-      // the decision boundary, so the oracle can't disagree on a tie
-      val nearIds = Dedup.verifyJaccard(cands, shRows, sigs.select("doc_id", "nsh"))
-        .filter(col("n_inter") * 2 >= col("nsh_a") + col("nsh_b") - col("n_inter"))
-        .select(explode(array(col("id_a"), col("id_b"))).as("rep_id"))
-        .filter(col("rep_id") % 3 === 0)
-        .distinct()
-        .join(repIds.filter(col("side") === 1).select("rep_id", "dg"), "rep_id")
-        .join(slim.filter(col("side") === 1).select("doc_id", "dg"), "dg")
-        .select(col("doc_id"), lit("near_dup").as("status"))
-      val flagged = exactHit.unionByName(nearIds)
-        .groupBy("doc_id")
-        .agg(min("status").as("status")) // 'exact_dup' < 'near_dup': exact wins
-      batch.select("doc_id").join(flagged, Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("status"), lit("new")).as("status"))
+      val all = base.unionByName(recrawled)
+      new Engine(s).dedupIncremental(all.filter(col("doc_id") % 3 === 0),
+          all.filter(col("doc_id") % 3 =!= 0), "doc_id", "text")
         .orderBy("doc_id")
     },
 

@@ -888,52 +888,32 @@ private[graft] object ScanStreamQueries {
       val heldOut = base.filter(col("doc_id") % 40 === 0)
         .withColumn("doc_id", col("doc_id") + 200000)
         .withColumn("text", concat(col("text"), lit(" held out")))
-      val docsAll = base.unionByName(heldOut)
-      // EXACT TIER (dd8's recipe, applied per SIDE): byte-identical texts
-      // collapse to one min-id representative per (digest, train/eval side)
-      // before any shingle work — a clone-heavy corpus (the sf10 rehearsal
-      // is 100 key-shifted copies of every text) otherwise hands every LSH
-      // band bucket a clone clique and pair expansion goes quadratic in the
-      // copy count. Expansion back is exact: clones share shingle sets, so
-      // a verified (train-rep, eval-rep) pair stands for all train-clone ×
-      // eval-clone member pairs at the SAME jaccard — the per-train-doc
-      // rollup needs only the eval-side clone counts, and every train clone
-      // of a digest inherits its rep's row. Sides split on the id range the
-      // decontamination filter uses, so rep ids keep the
-      // train < 200000 <= eval invariant and the pair filter is unchanged.
-      val slim = docsAll.select(col("doc_id"),
-          (col("doc_id") >= 200000).cast("int").as("side"),
-          md5(col("text")).as("dg"))
-        .localCheckpoint(false)
-      val repIds = slim.groupBy("dg", "side")
-        .agg(min("doc_id").as("rep_id"), count(lit(1)).as("n_clones"))
-      val docs = docsAll
-        .join(repIds.select(col("rep_id").as("doc_id")), Seq("doc_id"), "left_semi")
-        .repartition(32, col("doc_id"))
-      val shRows = docs.select(col("doc_id"),
-          explode(graft.expressions.ShingleMd5.of(Dedup.tokens(col("text")), 3)).as("__s"))
-        .select(col("doc_id"), col("__s.sh_hi").as("sh_hi"), col("__s.sh_lo").as("sh_lo"))
-        .localCheckpoint(false)
-      val mh = Dedup.minhashAggs(6)
-      val sigs = shRows.groupBy("doc_id")
-        .agg(mh.head, (mh.tail :+ count(lit(1)).as("nsh")): _*)
-        .localCheckpoint(false)
-      val cands = Dedup.lshCandidatePairs(sigs, "doc_id", numSeeds = 6, rowsPerBand = 2)
-        .filter(col("id_a") < 200000 && col("id_b") >= 200000)
-      val repHits = Dedup.verifyJaccard(cands, shRows, sigs.select("doc_id", "nsh"))
+      // the near-dup spine (Dedup.nearDupSpine) with sides train (0) / eval
+      // (1), split on the id range the decontamination filter uses: rep
+      // ids keep the train < 200000 <= eval invariant, and only
+      // train→eval pairs verify. A verified (train-rep, eval-rep) pair
+      // stands for all train-clone × eval-clone member pairs at the SAME
+      // jaccard, so the per-train-doc rollup needs only the eval-side
+      // clone counts, and every train clone of a digest inherits its rep's
+      // row.
+      val nd = Dedup.nearDupSpine(
+        base.unionByName(heldOut)
+          .withColumn("side", (col("doc_id") >= 200000).cast("int")),
+        (a, b) => a === 0 && b === 1)
+      val repHits = nd.verified
         .withColumn("jaccard", Stats.parityRound(col("jaccard"), 6))
         .filter(col("jaccard") >= 0.5)
       // roll up at rep grain (eval reps weighted by their clone count),
       // then fan the result out to every train clone of the rep's digest
       val perRep = repHits
-        .join(repIds.filter(col("side") === 1)
-          .select(col("rep_id").as("id_b"), col("n_clones")), "id_b")
+        .join(nd.reps.filter(col("side") === 1)
+          .select(col("rep_id").as("id_b"), col("n_copies")), "id_b")
         .groupBy("id_a")
-        .agg(sum("n_clones").as("n_eval_dups"), max("jaccard").as("max_jaccard"))
+        .agg(sum("n_copies").as("n_eval_dups"), max("jaccard").as("max_jaccard"))
       perRep
-        .join(repIds.filter(col("side") === 0)
+        .join(nd.reps.filter(col("side") === 0)
           .select(col("rep_id").as("id_a"), col("dg")), "id_a")
-        .join(slim.filter(col("side") === 0).select(col("doc_id"), col("dg")), "dg")
+        .join(nd.slim.filter(col("side") === 0).select(col("doc_id"), col("dg")), "dg")
         .select(col("doc_id"), col("n_eval_dups"), col("max_jaccard"))
         .orderBy("doc_id")
     },

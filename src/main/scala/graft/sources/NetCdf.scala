@@ -512,8 +512,11 @@ object NetCdf {
     }
 
     val vars = headers.map { case (name, dimIds, attrs, t, _, begin) =>
-      if (begin < 0 || begin > bytes.length) fail(s"data offset $begin out of range for $name")
       val rec = isRec(dimIds)
+      // a record-less file reads nothing of a record variable, and the
+      // classic layout puts every record variable after the first past EOF
+      if (begin < 0 || (begin > bytes.length && !(rec && numrecs == 0)))
+        fail(s"data offset $begin out of range for $name")
       val vdims = dimIds.map { i =>
         if (i == recDimId) NcDim(dims(i).name, numrecs) else dims(i)
       }
@@ -617,7 +620,8 @@ object NetCdf {
     if (x == fill || x.isNaN) None else Some(x)
 
   /** Offset seconds for a timezone token: named UTC zones, `Z`, or a
-    * `±hh[:mm[:ss]]` / `±hhmm` numeric offset. None if not a zone token.
+    * `±hh[:mm[:ss]]` / `±hhmm` numeric offset. None if not a zone token;
+    * a numeric offset past ±18:00 (or a minute or second past 59) fails.
     */
   private def zoneOffsetSeconds(tok: String): Option[Int] = tok.toUpperCase match {
     case "Z" | "UTC" | "GMT" | "UT" => Some(0)
@@ -630,6 +634,8 @@ object NetCdf {
         case 6 => (digits.take(2).toInt, digits.slice(2, 4).toInt, digits.drop(4).toInt)
         case _ => return None
       }
+      if (hh > 18 || mm > 59 || ss > 59 || hh * 3600 + mm * 60 + ss > 18 * 3600)
+        fail(s"timezone offset $tok out of range")
       Some(sign * (hh * 3600 + mm * 60 + ss))
     case _ => None
   }

@@ -433,21 +433,31 @@ class NetCdfSpec extends AnyFunSuite {
     * the record count, 0.
     */
   private def writeUnsupportedUnitsFiles(dir: String): Unit = {
-    def juld(times: Seq[Double]) = NcVar("JULD", Seq(0), NC_DOUBLE,
-      Seq("units" -> NcStr(BadUnits), "_FillValue" -> NcDoubles(Array(TimeFill))),
-      NcDoubles(times.toArray))
-    def file(name: String, platform: Double, times: Seq[Double]): Unit = {
-      val n = times.length
-      NetCdf.writeFile(s"$dir/$name", Seq(NcDim("N_PROF", n), NcDim("N_LEVELS", 2)), Nil,
-        Seq(
-          NcVar("PLATFORM_NUMBER", Seq(0), NC_DOUBLE, Nil, NcDoubles(Array.fill(n)(platform))),
-          juld(times),
-          NcVar("PRES", Seq(0, 1), NC_FLOAT, Nil, NcFloats(Array.tabulate(2 * n)(_.toFloat)))))
-    }
-    file("units_all_fill.nc", 120, Seq(TimeFill, TimeFill, TimeFill))
-    NetCdf.writeFile(s"$dir/units_no_records.nc", Seq(NcDim("N_PROF", 0)), Nil, Seq(juld(Nil)))
-    file("units_one_real.nc", 122, Seq(TimeFill, 9.5, TimeFill))
+    unitsFile(s"$dir/units_all_fill.nc", BadUnits, 120, Seq(TimeFill, TimeFill, TimeFill))
+    NetCdf.writeFile(s"$dir/units_no_records.nc", Seq(NcDim("N_PROF", 0)), Nil,
+      Seq(juld(BadUnits, Nil)))
+    unitsFile(s"$dir/units_one_real.nc", BadUnits, 122, Seq(TimeFill, 9.5, TimeFill))
   }
+
+  private def juld(units: String, times: Seq[Double]) = NcVar("JULD", Seq(0), NC_DOUBLE,
+    Seq("units" -> NcStr(units), "_FillValue" -> NcDoubles(Array(TimeFill))),
+    NcDoubles(times.toArray))
+
+  /** One profile per time value, two levels each, under time `units`. */
+  private def unitsFile(path: String, units: String, platform: Double,
+      times: Seq[Double]): Unit = {
+    val n = times.length
+    NetCdf.writeFile(path, Seq(NcDim("N_PROF", n), NcDim("N_LEVELS", 2)), Nil,
+      Seq(
+        NcVar("PLATFORM_NUMBER", Seq(0), NC_DOUBLE, Nil, NcDoubles(Array.fill(n)(platform))),
+        juld(units, times),
+        NcVar("PRES", Seq(0, 1), NC_FLOAT, Nil, NcFloats(Array.tabulate(2 * n)(_.toFloat)))))
+  }
+
+  /** True when `e` or one of its causes is a [[NetCdf.NetCdfParseException]]. */
+  private def causedByParse(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[NetCdf.NetCdfParseException])
 
   private def fleetDir(tag: String)(write: String => Unit): String = {
     val d = java.nio.file.Files.createTempDirectory(s"graft-nc-$tag").toString
@@ -527,6 +537,37 @@ class NetCdfSpec extends AnyFunSuite {
     assert(rows.map(_.getDouble(2)).sorted.toSeq === (0 until 6).map(_.toDouble))
     // the strict read fails on the one file the ledger quarantines
     assertThrows[org.apache.spark.SparkException](NetCdf.read(spark, dir).count())
+    // a numeric zone past ±18:00, standalone or attached, fails its file as
+    // a parse error: never a DateTimeException that fails the whole job,
+    // never dropped so that the epoch reads as UTC
+    for ((units, tag) <- Seq("days since 1950-01-01 00:00:00 +99" -> "99",
+        "days since 1950-01-01T00:00:00+19:00" -> "19")) {
+      val zd = fleetDir(s"zone$tag") { d =>
+        unitsFile(s"$d/units_zone.nc", units, 123, Seq(TimeFill, 9.5))
+        unitsFile(s"$d/units_fill.nc", units, 124, Seq(TimeFill))
+      }
+      val zl = NetCdf.scanStatus(spark, zd).collect()
+        .map(r => r.getString(0) -> (r.getBoolean(1), r.getString(2))).toMap
+      assert(zl === Map("units_zone.nc" -> ((false, "corrupt")),
+        "units_fill.nc" -> ((true, "ok"))), units)
+      assert(NetCdf.read(spark, zd, tolerant = true).select("float_id").collect()
+        .map(_.getString(0)).toSet === Set("124"), units)
+      val e = intercept[Exception](NetCdf.read(spark, zd).count())
+      assert(causedByParse(e), s"$units: $e")
+    }
+  }
+
+  test("a record-less file with two record variables decodes to 0 rows") {
+    val dir = fleetDir("norec") { d =>
+      NetCdf.writeFile(s"$d/no_records.nc", Seq(NcDim("N_PROF", 0)), Nil,
+        Seq(NcVar("PLATFORM_NUMBER", Seq(0), NC_DOUBLE, Nil, NcDoubles(Array.empty)),
+          juld("days since 1950-01-01", Nil)))
+    }
+    val ledger = NetCdf.scanStatus(spark, dir).collect()
+      .map(r => (r.getString(0), r.getBoolean(1), r.getString(2), r.getLong(4))).toSeq
+    assert(ledger === Seq(("no_records.nc", true, "ok", 0L)))
+    assert(NetCdf.read(spark, dir).count() === 0L)
+    assert(NetCdf.read(spark, dir, tolerant = true).count() === 0L)
   }
 
   test("tabularize rows and their order are pinned for every healthy fleet file") {
