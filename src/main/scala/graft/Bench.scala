@@ -245,7 +245,7 @@ object Bench {
     def loadAvg(): String =
       try "[" + scala.io.Source.fromFile("/proc/loadavg").mkString
         .split("\\s+").take(3).mkString(",") + "]"
-      catch { case _: Throwable => "[]" }
+      catch { case scala.util.control.NonFatal(e) => report("load average read", e); "[]" }
     val results = swept.best.toSeq.sortBy(_._1)
     val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")

@@ -445,32 +445,35 @@ class Engine(spark: SparkSession) {
     */
   def dedupIncremental(batch: DataFrame, index: DataFrame,
       idCol: String, textCol: String, shingleN: Int = 3): DataFrame = {
-    val b = batch.select(col(idCol).as("doc_id"), col(textCol).as("text"))
     // sides: batch 1, index 0; only cross-side pairs verify
     val nd = Dedup.nearDupSpine(
-      b.withColumn("side", lit(1))
+      batch.select(col(idCol).as("doc_id"), col(textCol).as("text"), lit(1).as("side"))
         .unionByName(index.select(col(idCol).as("doc_id"), col(textCol).as("text"),
           lit(0).as("side"))),
       (x, y) => x =!= y, shingleN)
-    // exact tier: a batch digest that the index holds
-    val exact = nd.slim.filter(col("side") === 1).select("doc_id", "dg")
-      .join(nd.slim.filter(col("side") === 0).select("dg"), Seq("dg"), "left_semi")
-      .select(col("doc_id"), lit("exact_dup").as("status"))
+    // every status is a semi or anti join of the one slim row per batch doc:
+    // no aggregate, no sort, no re-read of the batch input
+    val batchDocs = nd.slim.filter(col("side") === 1).select("doc_id", "dg")
+    val indexDgs = nd.slim.filter(col("side") === 0).select("dg")
     // near tier: jaccard >= 0.5 in INTEGER form (2·|∩| >= |∪|) — no FP
-    // division at the decision boundary; the flag fans out to every batch
-    // clone of a verified batch rep's digest
-    val near = nd.verified
-      .filter(col("n_inter") * 2 >= col("nsh_a") + col("nsh_b") - col("n_inter"))
-      .select(explode(array(col("id_a"), col("id_b"))).as("rep_id"))
-      .distinct()
-      .join(nd.reps.filter(col("side") === 1).select("rep_id", "dg"), "rep_id")
-      .join(nd.slim.filter(col("side") === 1).select("doc_id", "dg"), "dg")
-      .select(col("doc_id"), lit("near_dup").as("status"))
-    val flagged = exact.unionByName(near)
-      .groupBy("doc_id").agg(min("status").as("status")) // exact_dup < near_dup
-    b.select(col("doc_id").as(idCol))
-      .join(flagged.withColumnRenamed("doc_id", idCol), Seq(idCol), "left")
-      .select(col(idCol), coalesce(col("status"), lit("new")).as("status"))
+    // division at the decision boundary. Verified ids are rep doc ids, so
+    // the batch slim rows they name carry the digests whose every batch
+    // clone is a near dup. The ids are broadcast by hint: there are two per
+    // verified cross-side pair, but the planner sizes a join output as the
+    // product of its inputs, plans a sort-merge join, and AQE turns it into
+    // a broadcast only after both shuffles have run (perfbench `batch`: 4
+    // more jobs and ~15 more generated classes a call)
+    val nearDgs = batchDocs.join(broadcast(nd.verified
+        .filter(col("n_inter") * 2 >= col("nsh_a") + col("nsh_b") - col("n_inter"))
+        .select(explode(array(col("id_a"), col("id_b"))).as("doc_id"))),
+      Seq("doc_id"), "left_semi")
+      .select("dg")
+    val notExact = batchDocs.join(indexDgs, Seq("dg"), "left_anti")
+    def status(docs: DataFrame, s: String) =
+      docs.select(col("doc_id").as(idCol), lit(s).as("status"))
+    status(batchDocs.join(indexDgs, Seq("dg"), "left_semi"), "exact_dup")
+      .unionByName(status(notExact.join(nearDgs, Seq("dg"), "left_semi"), "near_dup"))
+      .unionByName(status(notExact.join(nearDgs, Seq("dg"), "left_anti"), "new"))
   }
 
   /** Small-file compaction to a byte target (shuffle-free). See

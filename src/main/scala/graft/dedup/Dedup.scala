@@ -303,30 +303,37 @@ object Dedup {
   /** Pair predicate that keeps every candidate. */
   val AnyPair: (Column, Column) => Column = (_, _) => lit(true)
 
-  /** Per-doc distinct word-n-gram digests `(doc_id, side, sh_hi, sh_lo)`
-    * and MinHash signatures `(doc_id, side, mh0.., nsh)` of a
-    * `(doc_id, text, side)` frame, both lazily checkpointed: each has two
-    * consumers in the spine (signatures and verify; band keys and sizes),
-    * and round 5 measured the tokenize+shingle+md5 recompute at ~10× the
-    * checkpoint write even on a 584 KB corpus (dd8/dd9/dd10 at sf0.1:
-    * 11.1 s without vs 7.9 s with). The fused native shingle+digest
-    * (graft_shingle_md5) yields the distinct digests in ONE evaluation — no
-    * interpreted HOF chain, no intermediate shingle strings (ShingleMd5Spec
-    * pins parity with the composed explode(array_distinct(shingles)) form).
+  /** One signature row per document of a `(doc_id, text, side)` frame
+    * that has at least one shingle: `(doc_id, side, dgs, nsh, mh0..)`, where
+    * `dgs` is the document's distinct word-n-gram digests (the fused native
+    * graft_shingle_md5: no interpreted HOF chain, no intermediate shingle
+    * strings; ShingleMd5Spec pins parity with the composed
+    * explode(array_distinct(shingles)) form), `nsh` their count and `mhj`
+    * the minimum of MinHash lane j over them. The lanes come from one
+    * native pass over the array (graft_minhash_lanes), in the same narrow
+    * projection: no shingle-row explode, no group-by back to documents, no
+    * shuffle. PropertySpec pins them against [[minhashAggs]] over
+    * [[withShingleHash]] rows.
+    *
+    * Lazily checkpointed: band keys and the verify both read it, and round
+    * 5 measured the tokenize+shingle+md5 recompute at ~10x the checkpoint
+    * write even on a 584 KB corpus (dd8/dd9/dd10 at sf0.1: 11.1 s without
+    * vs 7.9 s with). Shingle-less documents (null, empty, fewer tokens than
+    * one shingle) are dropped on the checkpoint's read side: a filter on
+    * `nsh` ahead of the checkpoint would be pushed down into its scan as a
+    * second evaluation of the digest chain.
     */
-  private def signatures(docs: DataFrame, shingleN: Int,
-      numSeeds: Int): (DataFrame, DataFrame) = {
-    val shRows = docs.select(col("doc_id"), col("side"),
-        explode(graft.expressions.ShingleMd5.of(tokens(col("text")), shingleN)).as("__s"))
-      .select(col("doc_id"), col("side"), col("__s.sh_hi").as("sh_hi"),
-        col("__s.sh_lo").as("sh_lo"))
+  private[graft] def signatures(docs: DataFrame, shingleN: Int,
+      numSeeds: Int): DataFrame =
+    docs.select(col("doc_id"), col("side"),
+        graft.expressions.ShingleMd5.of(tokens(col("text")), shingleN).as("dgs"))
+      .select(col("doc_id"), col("side"), col("dgs"),
+        size(col("dgs")).cast("long").as("nsh"),
+        graft.expressions.MinHashLanes.of(col("dgs"), numSeeds).as("__mh"))
+      .select(Seq("doc_id", "side", "dgs", "nsh").map(col) ++
+        (0 until numSeeds).map(j => element_at(col("__mh"), j + 1).as(s"mh$j")): _*)
       .localCheckpoint(false)
-    val mh = minhashAggs(numSeeds)
-    val sigs = shRows.groupBy("doc_id", "side")
-      .agg(mh.head, (mh.tail :+ count(lit(1)).as("nsh")): _*)
-      .localCheckpoint(false)
-    (shRows, sigs)
-  }
+      .filter(col("nsh") > 0)
 
   /** Every `id_a < id_b` pair of a `(doc_id, text, side)` frame that shares
     * a band bucket — a pair list, so no rep tier (SURVEY §9 decision 34
@@ -334,7 +341,7 @@ object Dedup {
     */
   def bandCandidates(docs: DataFrame, shingleN: Int = 3, numSeeds: Int = 6,
       rowsPerBand: Int = 2): DataFrame =
-    lshCandidatePairs(signatures(docs, shingleN, numSeeds)._2, "doc_id",
+    lshCandidatePairs(signatures(docs, shingleN, numSeeds), "doc_id",
       numSeeds, rowsPerBand)
 
   /** The frames a [[nearDupSpine]] caller fans verified rep pairs back out
@@ -350,15 +357,15 @@ object Dedup {
       sizes: DataFrame, verified: DataFrame)
 
   /** The near-duplicate spine every per-document LSH consumer runs (SURVEY
-    * §9 decision 34): exact rep tier → shingle digests → MinHash → band
-    * candidates → row-domain Jaccard verify, over a `(doc_id, text, side)`
-    * frame (`side` an int, constant for single-sided callers; doc ids
-    * unique across sides).
+    * §9 decision 34): exact rep tier → per-document signatures (shingle
+    * digests and MinHash lanes) → band candidates → Jaccard verify over
+    * the digest arrays, over a `(doc_id, text, side)` frame (`side` an
+    * int, constant for single-sided callers; doc ids unique across sides).
     *
     * EXACT TIER: byte-identical texts collapse to their min-id rep per
     * (digest, side) BEFORE any shingle work. Without it, in-bucket
-    * candidate generation is O(c²) per clone group and the row-domain
-    * verify amplifies that by shingles/doc — the sf10 rehearsal (100
+    * candidate generation is O(c²) per clone group and the verify
+    * amplifies that by shingles/doc — the sf10 rehearsal (100
     * identical copies per text) caught it as a 70 GB spill (dd8) and 94 s
     * (dc2). Expansion back is exact: clones share shingle sets, hence
     * signatures, buckets and jaccard, so a verified rep pair stands for
@@ -381,7 +388,9 @@ object Dedup {
     *
     * `keep(side_a, side_b)` selects candidates inside the band buckets (see
     * [[lshCandidatePairs]]); the pair list is consumed once by the verify,
-    * so it is NOT checkpointed.
+    * so it is NOT checkpointed. The signature checkpoint is the spine's
+    * second and last: band keys read its lanes, the verify its digest
+    * arrays and sizes.
     */
   def nearDupSpine(docs: DataFrame, keep: (Column, Column) => Column,
       shingleN: Int = 3, numSeeds: Int = 6, rowsPerBand: Int = 2): NearDups = {
@@ -391,11 +400,10 @@ object Dedup {
       .agg(min("doc_id").as("rep_id"), count(lit(1)).as("n_copies"))
     val repDocs = docs
       .join(reps.select(col("rep_id").as("doc_id")), Seq("doc_id"), "left_semi")
-    val (shRows, sigs) = signatures(repDocs, shingleN, numSeeds)
-    val sizes = sigs.select("doc_id", "nsh")
+    val sigs = signatures(repDocs, shingleN, numSeeds)
     val cands = lshCandidatePairs(sigs, "doc_id", numSeeds, rowsPerBand,
       col("side"), keep)
-    NearDups(slim, reps, sizes, verifyJaccard(cands, shRows, sizes))
+    NearDups(slim, reps, sigs.select("doc_id", "nsh"), verifyJaccard(cands, sigs))
   }
 
   /** Name of the thread a [[connectedComponents]] call warms its
@@ -750,41 +758,33 @@ object Dedup {
         least(coalesce(col("lbl"), col("id")), col("id")).as("group_id"))
   }
 
-  /** Exact-Jaccard verification of candidate pairs, in the ROW domain: each
-    * side's (doc, shingle-hash) rows are joined to the pair list and the
-    * intersection size is a count over (pair, shingle) matches — per-doc
-    * shingle arrays never travel through a join (the dd7 HOF-inlining
-    * lesson), and the shuffle volume is bounded by |candidates| x doc
-    * shingle count, which LSH already pruned. `shingleRows` must be
-    * distinct (doc_id, sh_hi, sh_lo) rows — the 128-bit digest as two
-    * longs, a 16-byte fixed-width join key instead of a 32-char string;
-    * `sizes` maps doc_id -> nsh.
+  /** Exact-Jaccard verification of candidate pairs over per-document
+    * digest arrays: each pair picks up both documents' signature rows
+    * (`doc_id`, distinct digests `dgs`, their count `nsh` — see
+    * [[signatures]]) by two equi-joins on the ids, and the intersection is
+    * counted natively on the full 128-bit digests (graft_digest_overlap),
+    * all in the join's own stage: no per-(pair, shingle) rows, no
+    * aggregate, no shuffle beyond the joins'. The shuffle volume stays
+    * |candidates| x 2 x shingles/doc digests, which LSH already bounded.
+    * (The dd7 lesson is about interpreted HOF lambdas re-evaluating their
+    * captured expressions per element; a native expression over an array
+    * column has no such cost.)
+    *
+    * Only pairs that share a shingle are emitted (`n_inter > 0`): a band
+    * key collision between disjoint documents is not a near-duplicate.
+    * Catalyst pushes predicates on `n_inter` (this one, and callers'
+    * thresholds) into the join condition, where the O(nsh) count runs
+    * again — cheap next to the join itself.
+    * Returns `(id_b, id_a, n_inter, nsh_a, nsh_b, jaccard)`.
     */
-  def verifyJaccard(cands: DataFrame, shingleRows: DataFrame,
-      sizes: DataFrame): DataFrame = {
-    // The pair list is consumed ONCE: each candidate row explodes into its
-    // two (pair, doc_id) side rows and a single equi-join on doc_id pulls
-    // both docs' shingle rows — the round-11 rework of the former
-    // two-joins-plus-union shape, which consumed `cands` twice (forcing
-    // callers to checkpoint it: one more eager plan compilation and a
-    // blocking broadcast build per invocation) for the identical row set.
-    val sides = cands.select(col("id_a"), col("id_b"),
-      explode(array(col("id_a"), col("id_b"))).as("doc_id"))
-    // intersection size WITHOUT a 4-column sort-merge join of the two
-    // pair-shingle frames: shingleRows is distinct per doc, so a
-    // (pair, shingle) key appears exactly twice iff both docs carry the
-    // shingle. Join + count==2 is the same answer as a per-side equi-join
-    // but plans as two hash aggregates with map-side partial combine — no
-    // per-partition sorts of the biggest frame in the pipeline.
-    val inter = sides.join(shingleRows, "doc_id")
-      .groupBy("id_a", "id_b", "sh_hi", "sh_lo")
-      .agg(count(lit(1)).as("n_both"))
-      .filter(col("n_both") === 2)
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("n_inter"))
-    inter
-      .join(sizes.select(col("doc_id").as("id_a"), col("nsh").as("nsh_a")), "id_a")
-      .join(sizes.select(col("doc_id").as("id_b"), col("nsh").as("nsh_b")), "id_b")
+  def verifyJaccard(cands: DataFrame, sigs: DataFrame): DataFrame = {
+    def side(s: String) = sigs.select(col("doc_id").as(s"id_$s"),
+      col("dgs").as(s"dgs_$s"), col("nsh").as(s"nsh_$s"))
+    cands.join(side("a"), "id_a").join(side("b"), "id_b")
+      .select(col("id_b"), col("id_a"),
+        graft.expressions.DigestOverlap(col("dgs_a"), col("dgs_b")).cast("long").as("n_inter"),
+        col("nsh_a"), col("nsh_b"))
+      .filter(col("n_inter") > 0)
       .withColumn("jaccard",
         col("n_inter") / (col("nsh_a") + col("nsh_b") - col("n_inter")))
   }

@@ -207,3 +207,175 @@ object ShingleMd5 {
       GraftExpressionBridge.expression(toksCol),
       org.apache.spark.sql.catalyst.expressions.Literal(n)))
 }
+
+/** `graft_minhash_lanes(dgs, k)` → `array<bigint>`: the per-lane minima of
+  * the first `k` 20-bit MinHash lanes over a `graft_shingle_md5` digest
+  * array, null when the array is empty (no shingle, no signature).
+  *
+  * Lane `j` is bits [20j, 20j+20) of the 128-bit digest, counted from its
+  * most significant bit — the same value `Dedup.minhashLane(j)` computes on
+  * one exploded `(sh_hi, sh_lo)` row — so the lanes equal `Dedup.minhashAggs`
+  * over the document's shingle rows without exploding them into rows and
+  * grouping them back. One pass over the array computes every lane.
+  */
+case class MinHashLanes(dgs: Expression, k: Expression)
+    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+  import org.apache.spark.sql.types.IntegerType
+
+  override def left: Expression = dgs
+  override def right: Expression = k
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (!MinHashLanes.isDigests(dgs.dataType)) TypeCheckResult.TypeCheckFailure(
+      s"graft_minhash_lanes expects array<struct<bigint,bigint>>, got ${dgs.dataType.simpleString}")
+    else if (k.foldable && k.dataType == IntegerType &&
+        Option(k.eval()).exists(v => (1 to 6).contains(v.asInstanceOf[Int])))
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      "graft_minhash_lanes expects a foldable int lane count in 1..6 (md5 has 6 20-bit lanes)")
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = true
+  override def prettyName: String = "graft_minhash_lanes"
+
+  override def nullSafeEval(dgsVal: Any, kVal: Any): Any =
+    MinHashLanes.compute(dgsVal.asInstanceOf[ArrayData], kVal.asInstanceOf[Int])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (d, n) =>
+      s"""${ev.value} = graft.expressions.MinHashLanes$$.MODULE$$.compute($d, $n);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): MinHashLanes =
+    copy(dgs = newLeft, k = newRight)
+}
+
+object MinHashLanes {
+  private val Mask = 0xfffffL
+
+  /** Whether `dt` is a digest array: `array<struct<bigint, bigint>>`. */
+  def isDigests(dt: DataType): Boolean = dt match {
+    case ArrayType(org.apache.spark.sql.types.StructType(Array(h, l)), _) =>
+      h.dataType == LongType && l.dataType == LongType
+    case _ => false
+  }
+
+  /** Lane `j` of one digest `(hi, lo)`. */
+  def lane(j: Int, hi: Long, lo: Long): Long = j match {
+    case 0 => (hi >>> 44) & Mask
+    case 1 => (hi >>> 24) & Mask
+    case 2 => (hi >>> 4) & Mask
+    case 3 => ((hi & 15L) << 16) | ((lo >>> 48) & 0xffffL)
+    case 4 => (lo >>> 28) & Mask
+    case 5 => (lo >>> 8) & Mask
+    case _ => throw new IllegalArgumentException("md5 yields at most 6 20-bit lanes")
+  }
+
+  /** Per-lane minima, or null for an empty array. Called from generated code. */
+  def compute(dgs: ArrayData, k: Int): ArrayData = {
+    val n = dgs.numElements()
+    if (n == 0) return null
+    val mins = Array.fill(k)(Long.MaxValue)
+    var i = 0
+    while (i < n) {
+      val d = dgs.getStruct(i, 2)
+      val hi = d.getLong(0); val lo = d.getLong(1)
+      var j = 0
+      while (j < k) {
+        val v = lane(j, hi, lo)
+        if (v < mins(j)) mins(j) = v
+        j += 1
+      }
+      i += 1
+    }
+    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(mins)
+  }
+
+  /** Column form. */
+  def of(dgsCol: Column, k: Int): Column =
+    GraftExpressionBridge.column(MinHashLanes(
+      GraftExpressionBridge.expression(dgsCol),
+      org.apache.spark.sql.catalyst.expressions.Literal(k)))
+}
+
+/** `graft_digest_overlap(a, b)` → `int`: how many digests two distinct
+  * `graft_shingle_md5` arrays share, i.e. `|a ∩ b|` on the full 128 bits.
+  * The smaller array goes into an open-addressing table keyed on the
+  * digest, the larger one probes it: O(|a| + |b|), no boxing.
+  * `size(array_intersect(a, b))` gives the same count, but on struct
+  * elements it compares every pair through an interpreted ordering,
+  * O(|a| · |b|) per candidate pair.
+  */
+case class DigestOverlap(a: Expression, b: Expression)
+    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+  import org.apache.spark.sql.types.IntegerType
+
+  override def left: Expression = a
+  override def right: Expression = b
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (MinHashLanes.isDigests(a.dataType) && MinHashLanes.isDigests(b.dataType))
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"graft_digest_overlap expects two array<struct<bigint,bigint>>, got " +
+        s"${a.dataType.simpleString} and ${b.dataType.simpleString}")
+
+  override def dataType: DataType = IntegerType
+  override def prettyName: String = "graft_digest_overlap"
+
+  override def nullSafeEval(aVal: Any, bVal: Any): Any =
+    DigestOverlap.count(aVal.asInstanceOf[ArrayData], bVal.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (x, y) =>
+      s"${ev.value} = graft.expressions.DigestOverlap$$.MODULE$$.count($x, $y);")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): DigestOverlap =
+    copy(a = newLeft, b = newRight)
+}
+
+object DigestOverlap {
+  /** `|a ∩ b|` for two arrays of distinct digests. Called from generated code. */
+  def count(a: ArrayData, b: ArrayData): Int = {
+    val (small, large) = if (a.numElements() <= b.numElements()) (a, b) else (b, a)
+    val n = small.numElements()
+    if (n == 0) return 0
+    // power-of-two table at most half full; a slot is empty while its flag is unset
+    val cap = Integer.highestOneBit(n * 2 - 1) << 1
+    val mask = cap - 1
+    val his = new Array[Long](cap); val los = new Array[Long](cap)
+    val used = new Array[Boolean](cap)
+    def slot(hi: Long, lo: Long): Int = {
+      val h = hi ^ (lo * 0x9e3779b97f4a7c15L)
+      ((h ^ (h >>> 32)).toInt) & mask
+    }
+    var i = 0
+    while (i < n) {
+      val d = small.getStruct(i, 2)
+      val hi = d.getLong(0); val lo = d.getLong(1)
+      var s = slot(hi, lo)
+      while (used(s)) s = (s + 1) & mask
+      used(s) = true; his(s) = hi; los(s) = lo
+      i += 1
+    }
+    var hits = 0
+    i = 0
+    val m = large.numElements()
+    while (i < m) {
+      val d = large.getStruct(i, 2)
+      val hi = d.getLong(0); val lo = d.getLong(1)
+      var s = slot(hi, lo)
+      while (used(s) && !(his(s) == hi && los(s) == lo)) s = (s + 1) & mask
+      if (used(s)) hits += 1
+      i += 1
+    }
+    hits
+  }
+
+  /** Column form. */
+  def apply(a: Column, b: Column): Column =
+    GraftExpressionBridge.column(DigestOverlap(
+      GraftExpressionBridge.expression(a), GraftExpressionBridge.expression(b)))
+}

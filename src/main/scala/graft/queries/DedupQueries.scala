@@ -362,7 +362,7 @@ private[graft] object DedupQueries {
     // ---- incremental dedup against an existing corpus index: the crawl
     // op — an incoming batch is admitted only if it is neither an EXACT
     // copy (128-bit content digest semi-join) nor a NEAR copy (banded LSH
-    // + row-domain Jaccard verify ≥ 0.5) of anything already kept: the
+    // + digest-array Jaccard verify ≥ 0.5) of anything already kept: the
     // Engine.dedupIncremental entry point, over a %3 batch/index split. ---
     "dd12_incremental_dedup" -> { (s, dir) =>
       val base = Tables.documents(s, dir).select("doc_id", "text")

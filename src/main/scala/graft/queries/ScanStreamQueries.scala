@@ -880,8 +880,8 @@ private[graft] object ScanStreamQueries {
     // lightly-edited eval leaks; this flags training docs whose verified
     // 3-gram Jaccard against any held-out doc clears 0.5, using the same
     // banded-LSH machinery as dd8 — candidates are bucket-bounded, the
-    // verify runs in the row domain, and the held-out side is the small
-    // axis. The oracle replays the identical signature/band arithmetic,
+    // verify runs over per-doc digest arrays, and the held-out side is the
+    // small axis. The oracle replays the identical signature/band arithmetic,
     // so parity checks the LSH itself, not just the verify. --------------
     "dc2_neardup_decontam" -> { (s, dir) =>
       val base = Tables.documents(s, dir).select("doc_id", "text")

@@ -533,4 +533,38 @@ class EngineSpec extends AnyFunSuite {
       "15d05468d7b45dabaed887731c0b3dfd", "2aea4b26b786c710652a4122b778bbb8",
       "aef230481188cf1a9e07a71fa2feed69"))
   }
+
+  /** Spark jobs that `run` starts, counted over a drained listener bus. */
+  private def jobsOf(run: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try { run; org.apache.spark.TestBus.drain(sc) } finally sc.removeSparkListener(listener)
+    n.get
+  }
+
+  test("dedup entry points stay inside their Spark-job budget") {
+    // A job is a fixed cost the suite's large codegen cache does not hide:
+    // every checkpoint, shuffle stage (AQE, the session default) and
+    // broadcast build of an entry point starts one. Budgets are the counts
+    // measured on this corpus (8 and 16 while signatures grouped exploded
+    // shingle rows back per document, the verify counted (pair, shingle)
+    // rows, and dedupIncremental aggregated a status union); exceeding one
+    // means a checkpoint, shuffle or aggregate came back.
+    import spark.implicits._
+    val docs = pinCorpus.toDF("doc_id", "text")
+    val batch = docs.filter(col("doc_id") % 3 === 0)
+    val index = docs.filter(col("doc_id") % 3 =!= 0)
+    val jac = jobsOf(engine.nearDupJaccard(docs, "text", "doc_id").collect())
+    val incr = jobsOf(engine.dedupIncremental(batch, index, "doc_id", "text").collect())
+    info(s"nearDupJaccard $jac jobs, dedupIncremental $incr jobs")
+    assert(jac <= 6, s"nearDupJaccard started $jac jobs")
+    assert(incr <= 9, s"dedupIncremental started $incr jobs")
+  }
 }

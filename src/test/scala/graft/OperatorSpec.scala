@@ -224,19 +224,21 @@ class OperatorSpec extends AnyFunSuite {
     val variants = base.filter(col("doc_id") % 10 === 0)
       .withColumn("doc_id", col("doc_id") + 100000)
       .withColumn("text", concat(col("text"), lit(" tailword")))
-    val docs = base.unionByName(variants)
-    val shRows = Dedup.withShingleHash(docs.select(col("doc_id"),
-        explode(array_distinct(Dedup.shingles(Dedup.tokens(col("text")), 3))).as("shingle")))
-      .select("doc_id", "sh_hi", "sh_lo").localCheckpoint()
-    val mh = Dedup.minhashAggs(6)
-    val sigs = shRows.groupBy("doc_id")
-      .agg(mh.head, (mh.tail :+ count(lit(1)).as("nsh")): _*)
+    // two documents that share no shingle, paired by hand below as a band
+    // key collision would pair them
+    val disjoint = Seq((900001L, "alpha beta gamma delta"), (900002L, "one two three four"))
+      .toDF("doc_id", "text")
+    val docs = base.unionByName(variants).unionByName(disjoint)
+    val sigs = Dedup.signatures(docs.withColumn("side", lit(0)), 3, 6)
     val cands = Dedup.lshCandidatePairs(sigs, "doc_id", 6, 2)
-    val verified = Dedup.verifyJaccard(cands, shRows, sigs.select("doc_id", "nsh"))
+      .unionByName(Seq((900001L, 900002L)).toDF("id_a", "id_b"))
+    val verified = Dedup.verifyJaccard(cands, sigs)
       .select("id_a", "id_b", "jaccard")
       .as[(Long, Long, Double)].collect()
       .map { case (a, b, j) => ((a, b), j) }.toMap
     assert(verified.nonEmpty)
+    assert(!verified.contains((900001L, 900002L)),
+      "a candidate pair that shares no shingle was emitted")
     // every injected near-dup pair must be an LSH candidate with high jaccard
     val arrays = docs.select(col("doc_id"),
       array_distinct(Dedup.shingles(Dedup.tokens(col("text")), 3)).as("sh"))

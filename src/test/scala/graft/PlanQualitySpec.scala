@@ -198,7 +198,10 @@ class PlanQualitySpec extends AnyFunSuite {
       "dd1_exact_dedup" -> 3, "dd2_minhash_lsh" -> 4, "dd3_simhash" -> 3,
       "dd4_ngram_jaccard" -> 1, "dd5_embed_neardup" -> 1,
       "dd6_simhash_hamming" -> 3, "dd7_minhash_est" -> 6,
-      "dd8_lsh_verified" -> 6, "dd9_dup_groups" -> 3, "dd10_dedup_apply" -> 3,
+      // dd8 6 -> 4: the verify joins per-document digest arrays instead
+      // of counting (pair, shingle) rows in two aggregates. dd9/dd10 read
+      // connected components, whose plan starts at a checkpoint: 3 each
+      "dd8_lsh_verified" -> 4, "dd9_dup_groups" -> 3, "dd10_dedup_apply" -> 3,
       "dd11_semantic_dedup" -> 4, "a2_profile_groups" -> 4,
       "a9_salted_agg" -> 3, "a13_heavy_hitters" -> 4, "j7_salted_skew_join" -> 4,
       "e6_ivf_knn" -> 1, "e9_quantized_recall" -> 7,
@@ -219,8 +222,12 @@ class PlanQualitySpec extends AnyFunSuite {
       "o4_partition_overwrite" -> 2,
       // 15 -> 11 across the r10 rep-tier rework (clone-clique quadratic
       // bought off, shared slim digest frame), -> 9 in r11: verifyJaccard
-      // consumes the pair list once, dropping the two-join union shuffle
-      "dd12_incremental_dedup" -> 9,
+      // consumes the pair list once, dropping the two-join union shuffle,
+      // -> 5: digest-array verify, and statuses from semi/anti joins of the
+      // slim batch rows (no status union aggregate, no re-read of the batch);
+      // 3 when this suite runs alone, 5 in the full suite run (the cause
+      // of the difference is not traced)
+      "dd12_incremental_dedup" -> 5,
       "a15_cov_corr" -> 2, "sp5_temperature_mixture" -> 5,
       "gr3_triangle_census" -> 4, "ta9_bigram_lm" -> 5,
       "a16_histogram" -> 2, "w6_trailing_range" -> 2,
@@ -252,8 +259,9 @@ class PlanQualitySpec extends AnyFunSuite {
       "s12_netcdf_hdf5" -> 1, "s13_hdf5_groups" -> 1,
       "mm7_video_frames" -> 2,
       // +2 over the pre-rep-tier shape for the r10 (digest, side) agg and
-      // clone fan-out join, -2 in r11 for the single-consumption verify
-      "dc2_neardup_decontam" -> 8,
+      // clone fan-out join, -2 in r11 for the single-consumption verify,
+      // -2 for the digest-array verify (no (pair, shingle) aggregates)
+      "dc2_neardup_decontam" -> 6,
       // r13 streaming rows: the RESULT frame is the post-drain read (memory
       // table sort / sink-tree global agg); the drain itself is gated by
       // the oracle, not a shuffle count

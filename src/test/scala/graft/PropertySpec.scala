@@ -52,6 +52,33 @@ class PropertySpec extends AnyFunSuite {
     assert(f === c)
   }
 
+  test("per-document MinHash lanes and sizes equal minhashAggs over shingle rows") {
+    import org.apache.spark.sql.functions._
+    import graft.dedup.Dedup
+    // null, empty, blank, under one shingle, exactly one shingle, a
+    // repeated shingle, then random texts over a small vocabulary
+    val fixed = Seq(null, "", "   ", "one", "one two", "one two three",
+      "a b c a b c a b c", "x y x y x y x", "Mixed CASE mixed case words here")
+    val words = Vector("alpha", "beta", "gamma", "delta", "x", "y", "12", "\u00e9t\u00e9")
+    val random = samples(Gen.listOfN(14, Gen.oneOf(words)).flatMap(ws =>
+      Gen.choose(0, ws.size).map(n => ws.take(n).mkString(" "))), 80)
+    val docs = (fixed ++ random).zipWithIndex
+      .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val lanes = (0 until 6).map(j => s"mh$j") :+ "nsh"
+    val spine = Dedup.signatures(docs.withColumn("side", lit(0)), 3, 6)
+      .select("doc_id", lanes: _*)
+    val mh = Dedup.minhashAggs(6)
+    val rows = Dedup.withShingleHash(docs.select(col("doc_id"),
+        explode(array_distinct(Dedup.shingles(Dedup.tokens(col("text")), 3))).as("shingle")))
+      .groupBy("doc_id").agg(mh.head, (mh.tail :+ count(lit(1)).as("nsh")): _*)
+    val got = spine.collect().map(_.toSeq).toSet
+    val want = rows.collect().map(_.toSeq).toSet
+    assert(got === want)
+    // shingle-less documents have a row in neither
+    assert(!got.exists(r => Set(0L, 1L, 2L, 3L, 4L)(r.head.asInstanceOf[Long])))
+    assert(got.size > fixed.size)
+  }
+
   test("cleanId strips any b'...' wrapper and whitespace") {
     val ids = samples(Gen.alphaNumStr.map(_.take(30)), 40)
     val df = ids.map(id => s"b'$id '").toDF("x")
