@@ -1,7 +1,15 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, GraftExpressionBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Large-scale training-data deduplication operators.
   *
@@ -432,9 +440,14 @@ object Dedup {
     * a jstack as a broadcast-exchange marking against
     * `dag-scheduler-event-loop`. Two concurrent warms of dependent frames
     * interleave the same way, hence one thread. Driver planning takes
-    * neither lock, so planning may overlap a warm.
+    * neither lock, so planning may overlap a warm. Checkpointing may not:
+    * with AQE on, `localCheckpoint(false)` runs the plan's query stages at
+    * once, so a checkpoint built over a frame whose warm is still pending
+    * deadlocks the same way (seen as round one's `next` against the seed's
+    * warm). Hence only each round's own checkpoint is warmed, between its
+    * construction and the round's [[await]].
     */
-  private final class CcWarms {
+  private[graft] final class CcWarms {
     import java.util.concurrent.{ExecutionException, Executors, Future, TimeUnit}
     private var thread: Thread = null
     private val pool = Executors.newSingleThreadExecutor { (r: Runnable) =>
@@ -444,11 +457,9 @@ object Dedup {
     }
     private val pending = scala.collection.mutable.ArrayBuffer.empty[Future[_]]
 
-    def warm(df: DataFrame): Unit = df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        val rdd = lr.rdd
-        pending += pool.submit(new Runnable { def run(): Unit = { rdd.count(); () } })
-      case _ => ()
+    def warm(df: DataFrame): Unit = {
+      val rdd = checkpointRdd(df)
+      pending += pool.submit(new Runnable { def run(): Unit = { rdd.count(); () } })
     }
 
     def await(): Unit = {
@@ -467,75 +478,164 @@ object Dedup {
     }
   }
 
+  /** The RDD behind a `localCheckpoint`ed frame. A job over it plans and
+    * compiles nothing: it computes (and marks) the checkpoint, or reads its
+    * blocks once marked.
+    */
+  private def checkpointRdd(df: DataFrame): RDD[InternalRow] =
+    df.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }
+
   /** Unsettled-node ceiling under which a round runs the tier-2
     * bichromatic-edge probe (see the convergence comment inside
-    * [[connectedComponents]]).
+    * [[distributedLabels]]).
     */
   val BichromProbeMax = 65536L
 
-  /** Connected components over an undirected pair list (id_a, id_b) by
-    * min-label propagation with POINTER JUMPING: every node starts labeled
-    * with its own id; each round labels flow across edges (every node keeps
-    * the minimum seen), then every label is replaced by its label's label
-    * (`label(x) ← label(label(x))`) — the star-contraction step that halves
-    * remaining label-chain depth, so convergence is O(log diameter) rounds,
-    * not O(diameter): a 1M-node chain needs ~20 rounds, not 1M. Near-dup
-    * components are clique-ish (diameter 1-2) and finish in 2-3 narrow
-    * shuffles regardless. Per-round localCheckpoint stops lineage doubling;
-    * the iteration cap is a safety net that now only fires on a genuinely
-    * pathological graph, and non-convergence THROWS rather than returning
-    * silently-wrong partial labels. Returns (member_id, group_id =
-    * component minimum).
+  /** Pair-count ceiling of [[connectedComponents]]'s driver union-find: the
+    * smaller of 2^20 pairs and one pair per 2 KiB of driver heap. Measured
+    * on 4 cores with long ids (BENCH_NOTES "Small dup graphs on the
+    * driver"): the driver path beat the distributed rounds at 515k, 1M and
+    * 2M pairs; it ran 1M pairs in a 1 GiB heap and 2M in 2 GiB, but not 2M
+    * in 1 GiB, where the rounds still ran. 2 KiB a pair keeps it at about
+    * twice the heap it was seen to need; the 2^20 cap keeps the edge
+    * collect far under `spark.driver.maxResultSize`'s 1 GiB default on a
+    * large heap.
+    */
+  private[graft] val DriverUnionFindMax: Long =
+    math.min(1L << 20, Runtime.getRuntime.maxMemory / 2048)
+
+  /** Which algorithm produced a [[connectedComponentsWithStats]] labelling. */
+  private[graft] sealed trait CcTier
+  private[graft] object CcTier {
+    /** The pair list fit under the driver bound: one union-find. */
+    case object DriverUnionFind extends CcTier
+    /** Min-label propagation with pointer jumping converged. */
+    case object Propagation extends CcTier
+    /** Propagation hit its round cap; large-star/small-star rounds labelled. */
+    case object Stars extends CcTier
+  }
+
+  /** @param rounds propagation rounds run (none on the driver tier) */
+  private[graft] final case class CcStats(tier: CcTier, rounds: Int)
+
+  /** Connected components over an undirected pair list (id_a, id_b).
+    * Returns (member_id, group_id = component minimum under the id type's
+    * ordering), one row per distinct node, ids in the pairs' own type.
+    *
+    * The pair list is read ONCE, into a checkpoint of its directed edges
+    * (both orientations of every pair); callers typically hand in an
+    * expensive lineage (dd9/dd10/dd16 pass the whole LSH + verify
+    * pipeline), and every later step reads that checkpoint's blocks. The
+    * job that materializes it also counts it, and the count picks the path:
+    *
+    *   - at most [[DriverUnionFindMax]] pairs (2^20, less on a driver heap
+    *     under 2 GiB): one more job collects the edges and a driver
+    *     union-find that keeps each component's minimum id as its root
+    *     labels them. The labels come back as a local relation, or over
+    *     an RDD once they pass [[LocalLabelsMax]] rows. On a
+    *     near-dup pair list of a few hundred pairs the distributed tiers
+    *     spend ~15 jobs and ~45 generated classes a call, about 1 s of
+    *     fixed cost, on what the union-find does in microseconds; up to
+    *     the bound the driver path was measured faster too.
+    *   - above it: min-label propagation with POINTER JUMPING over the
+    *     checkpoint. Every node starts labeled with its own id; each round
+    *     labels flow across edges (every node keeps the minimum seen), then
+    *     every label is replaced by its label's label
+    *     (`label(x) ← label(label(x))`) — the star-contraction step that
+    *     halves remaining label-chain depth, so convergence is O(log
+    *     diameter) rounds, not O(diameter): a 1M-node chain needs ~20
+    *     rounds, not 1M. Per-round localCheckpoint stops lineage doubling.
+    *     If the round cap is hit, the large-star/small-star rounds of
+    *     [[connectedComponentsStars]] label the same checkpoint instead:
+    *     partially propagated labels are never returned.
+    *
+    * Ids of a type whose values Spark does not compare by plain value
+    * equality (floating point, binary, collated strings, nested types) take
+    * the distributed path at any size.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame =
     connectedComponentsWithStats(pairs, maxIter)._1
 
-  /** [[connectedComponents]] plus (rounds run, label-propagation converged)
-    * — the stats let specs pin the convergence-tier behavior (e.g. that a
-    * diameter-2 graph exits on round ONE via the post-jump probe) instead
-    * of only the labels, which the stars fallback would also get right.
-    * `converged = false` means the stars fallback produced the labels.
+  /** [[connectedComponents]] plus which tier labelled and how many
+    * propagation rounds ran — the stats let specs pin the convergence-tier
+    * behavior (e.g. that a diameter-2 graph exits on round ONE via the
+    * post-jump probe) instead of only the labels, which every tier gets
+    * right. `driverMax` is the driver-path bound in pairs; specs pass 0 to
+    * drive the distributed tiers on small graphs.
     */
   private[graft] def connectedComponentsWithStats(
-      pairs: DataFrame, maxIter: Int = 50): (DataFrame, Int, Boolean) = {
-    // The pair list is consumed ONCE: each pair explodes into its two
-    // directed orientations inside the edge checkpoint's own plan. Callers
-    // typically hand in an EXPENSIVE lineage — dd9/dd10/dd16 pass the
-    // whole LSH+verify pipeline — and the former two-branch union scanned
-    // it twice (which forced a second, pair-level checkpoint upstream:
-    // round 11 folds both into this ONE eager segment — one less Catalyst
-    // plan compilation and one less row-copy pass per invocation). The
-    // checkpoint is a narrow two-long-column frame: its write cost is
-    // noise, and every per-round consumer (seed, propagate join, tier-2
-    // probe, stars fallback) reads these blocks instead of the lineage.
+      pairs: DataFrame, maxIter: Int = 50,
+      driverMax: Long = DriverUnionFindMax): (DataFrame, CcStats) = {
+    // Each pair explodes into its two directed orientations inside the edge
+    // checkpoint's own plan: a two-branch union would scan the caller's
+    // lineage twice. The checkpoint is a narrow two-column frame whose
+    // write cost is noise.
     val edges = pairs.select(explode(array(
         struct(col("id_a").as("src"), col("id_b").as("dst")),
         struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .localCheckpoint(false)
+    val edgeRdd = checkpointRdd(edges)
+    val nPairs = edgeRdd.count() / 2 // materializes and marks the checkpoint
+    val idType = edges.schema("src").dataType
+    if (nPairs <= driverMax && valueKeyed(idType)) {
+      val labels = unionFindLabels(edgeRdd.collect(), idType)
+      val out = Seq(
+        AttributeReference("member_id", idType, edges.schema("src").nullable)(),
+        AttributeReference("group_id", idType, nullable = true)())
+      (labelFrame(pairs.sparkSession, out, labels), CcStats(CcTier.DriverUnionFind, 0))
+    } else distributedLabels(edges, maxIter)
+  }
+
+  /** Label-row count up to which the driver tier hands its labels back as
+    * a local relation. A local relation carries its rows in the plan, and
+    * every expression rewrite during analysis and optimization copies
+    * them; above this count the labels go back as an RDD of their rows,
+    * which costs one more job per action. Measured on 4 cores (BENCH_NOTES
+    * "Small dup graphs on the driver"): the local relation was the faster
+    * form at 4.7k labels, the RDD at 18.7k and above.
+    */
+  private[graft] val LocalLabelsMax = 8192
+
+  private def labelFrame(spark: SparkSession, out: Seq[Attribute],
+      labels: Seq[InternalRow]): DataFrame =
+    if (labels.length <= LocalLabelsMax)
+      GraftExpressionBridge.ofRows(spark, LocalRelation(out, labels))
+    else {
+      val toUnsafe = UnsafeProjection.create(out.map(_.dataType).toArray)
+      val rows: Seq[InternalRow] = labels.map(r => toUnsafe(r).copy())
+      val sc = spark.sparkContext
+      GraftExpressionBridge.ofRdd(spark, out,
+        sc.parallelize(rows, math.min(rows.length, sc.defaultParallelism)),
+        BigInt(rows.length) * out.map(_.dataType.defaultSize).sum)
+    }
+
+  /** The distributed tiers of [[connectedComponentsWithStats]] over its
+    * materialized edge checkpoint: propagation rounds, then the stars
+    * fallback if the round cap is hit.
+    */
+  private def distributedLabels(edges: DataFrame, maxIter: Int): (DataFrame, CcStats) = {
     var labels: DataFrame = null
     var iter = 0
     var converged = false
     val warms = new CcWarms
     try {
-      // overlap the edge-list compute with the seed/round-1 plan construction
-      warms.warm(edges)
       // Seed with round one's result directly: min-propagation from identity
       // labels yields label(x) = min(x, min neighbor id), which one grouped
       // aggregate over the edge list computes without the join — one fewer
       // propagation round (join + agg + checkpoint + convergence scan) on
       // every call, and the distinct() init job is folded into the same agg.
-      // Checkpointed AND background-warmed: the seed has two round-one
-      // consumers (the propagate join and the merged union); without the
-      // checkpoint its aggregate subtree appears twice in the round plan,
-      // doubling that plan's analysis/codegen cost (driver-bound), while
-      // with it the round plan sees two LogicalRDD leaves. The warm starts
-      // the seed compute on the workers while the driver constructs the
-      // round plan, so the eager segment costs no wall time of its own.
+      // Checkpointed: the seed has two round-one consumers (the propagate
+      // join and the merged union); without the checkpoint its aggregate
+      // subtree appears twice in the round plan, doubling that plan's
+      // analysis/codegen cost (driver-bound), while with it the round plan
+      // sees two LogicalRDD leaves. Not warmed: round one's checkpoint is
+      // built over it (see CcWarms); the first job over it computes it.
       labels = edges.groupBy(col("src").as("id"))
         .agg(least(min(col("dst")), min(col("src"))).as("label"))
         .localCheckpoint(false)
-      warms.warm(labels)
       while (iter < maxIter && !converged) {
         val prop = edges.join(labels, edges("src") === labels("id"))
           .select(col("dst").as("id"), col("label"))
@@ -618,9 +718,9 @@ object Dedup {
             sum(when(col("mn") =!= col("mx"), 1L).otherwise(0L)),
             lit(0L)))
         probeAgg.queryExecution.executedPlan // plan while the warm runs
-        // Barrier before the round's first action: the edge/seed/next warms
-        // must finish MARKING their checkpoints before a consumer action can
-        // submit stages over them (the CcWarms note).
+        // Barrier before the round's first action: the round's warm must
+        // finish MARKING its checkpoint before a consumer action can submit
+        // stages over it (the CcWarms note).
         warms.await()
         val nUnsettled = unsettledAgg.head.getLong(0)
         converged = nUnsettled == 0
@@ -638,11 +738,65 @@ object Dedup {
     // orientations of every input pair (self-pairs included), so feeding it
     // back as a pair list preserves starsImpl's node set and — after its
     // canonicalize+distinct pass — its edge set exactly.
-    val result =
-      if (!converged) starsImpl(
-        edges.select(col("src").as("id_a"), col("dst").as("id_b")), StarsMaxIter)
-      else labels.select(col("id").as("member_id"), col("label").as("group_id"))
-    (result, iter, converged)
+    if (!converged) (starsImpl(
+        edges.select(col("src").as("id_a"), col("dst").as("id_b")), StarsMaxIter),
+      CcStats(CcTier.Stars, iter))
+    else (labels.select(col("id").as("member_id"), col("label").as("group_id")),
+      CcStats(CcTier.Propagation, iter))
+  }
+
+  /** Id types whose values Spark groups and joins by plain value equality,
+    * so a driver hash map keys them exactly as the distributed path does.
+    */
+  private def valueKeyed(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | DateType |
+        TimestampType | TimestampNTZType => true
+    case StringType => true // the default, binary collation only
+    case _ => false
+  }
+
+  /** Component-minimum labels of a directed edge list (both orientations of
+    * every pair, as the edge checkpoint holds it): one union-find whose
+    * every root is its component's minimum id under the id type's Spark
+    * ordering, so the labels equal the distributed tiers' bit for bit.
+    * A null endpoint joins no component, as in propagation, where a null
+    * key matches no join: the null node takes the least component minimum
+    * among its non-null partners, or null if it has none.
+    */
+  private def unionFindLabels(edges: Array[InternalRow], idType: DataType): Seq[InternalRow] = {
+    val ord = PhysicalDataType.ordering(idType)
+    val index = new java.util.HashMap[Any, Integer]
+    val ids = ArrayBuffer.empty[Any]
+    val parent = ArrayBuffer.empty[Int]
+    def node(id: Any): Int = {
+      val known = index.get(id)
+      if (known != null) known
+      else { val n = ids.length; index.put(id, n); ids += id; parent += n; n }
+    }
+    def find(x: Int): Int = {
+      var root = x
+      while (parent(root) != root) root = parent(root)
+      var y = x
+      while (parent(y) != root) { val up = parent(y); parent(y) = root; y = up }
+      root
+    }
+    var nullNode = false
+    val nullPartners = ArrayBuffer.empty[Int]
+    edges.foreach { e =>
+      if (e.isNullAt(0)) {
+        nullNode = true
+        if (!e.isNullAt(1)) nullPartners += node(e.get(1, idType))
+      } else {
+        val a = find(node(e.get(0, idType)))
+        if (!e.isNullAt(1)) {
+          val b = find(node(e.get(1, idType)))
+          if (a != b) { if (ord.lt(ids(a), ids(b))) parent(b) = a else parent(a) = b }
+        }
+      }
+    }
+    val labels = ids.indices.map(i => InternalRow(ids(i), ids(find(i))))
+    if (!nullNode) labels
+    else labels :+ InternalRow(null, nullPartners.map(p => ids(find(p))).minOption(ord).orNull)
   }
 
   /** Connected components by alternating LARGE-STAR / SMALL-STAR rounds

@@ -123,8 +123,9 @@ private[graft] object DedupQueries {
     },
 
     // ---- dup-GROUP clustering: connected components over the verified
-    // near-dup pairs (min-label propagation, O(diameter) narrow-shuffle
-    // rounds) — the "keep one representative per cluster" step that turns
+    // near-dup pairs (a driver union-find up to about a million pairs, else
+    // min-label propagation rounds) — the "keep one representative per
+    // cluster" step that turns
     // pairwise dedup output into an actionable training-corpus filter.
     // Oracled against a DuckDB RECURSIVE CTE transitive closure.
     "dd9_dup_groups" -> { (s, dir) =>

@@ -19,6 +19,20 @@ object GraftExpressionBridge {
   def ofRows(spark: SparkSession, plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A DataFrame over an RDD of rows whose total size is known. Unlike a
+    * `LocalRelation`, the plan holds the RDD, not the rows, so analysis and
+    * optimization do not copy them; the planner still sees `sizeInBytes`
+    * when it picks a join strategy.
+    */
+  def ofRdd(spark: SparkSession,
+      output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
+      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      sizeInBytes: BigInt): DataFrame = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    classic.Dataset.ofRows(session, org.apache.spark.sql.execution.LogicalRDD(output, rdd)(
+      session, Some(org.apache.spark.sql.catalyst.plans.logical.Statistics(sizeInBytes))))
+  }
+
   /** True iff a planner strategy of class `cls` is registered in this
     * session (i.e. the session was built `.withExtensions(GraftExtensions)`
     * or with the `spark.sql.extensions` conf). Custom-operator APIs use

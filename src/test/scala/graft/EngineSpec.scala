@@ -561,9 +561,18 @@ class EngineSpec extends AnyFunSuite {
     val docs = pinCorpus.toDF("doc_id", "text")
     val batch = docs.filter(col("doc_id") % 3 === 0)
     val index = docs.filter(col("doc_id") % 3 =!= 0)
+    // connectedComponents over the verified pairs, checkpointed first so
+    // only its own jobs count: 14 while every call ran distributed rounds;
+    // a pair list this small is one counting job over the edge checkpoint
+    // and one collect for the driver union-find. Asserted first: the
+    // nearDupJaccard count below varies with AQE stage timing (6 or 7).
+    val verified = engine.nearDupJaccard(docs, "text", "doc_id").select("id_a", "id_b")
+      .localCheckpoint()
+    val cc = jobsOf(graft.dedup.Dedup.connectedComponents(verified).collect())
+    assert(cc <= 2, s"connectedComponents started $cc jobs")
     val jac = jobsOf(engine.nearDupJaccard(docs, "text", "doc_id").collect())
     val incr = jobsOf(engine.dedupIncremental(batch, index, "doc_id", "text").collect())
-    info(s"nearDupJaccard $jac jobs, dedupIncremental $incr jobs")
+    info(s"nearDupJaccard $jac jobs, dedupIncremental $incr jobs, connectedComponents $cc jobs")
     assert(jac <= 6, s"nearDupJaccard started $jac jobs")
     assert(incr <= 9, s"dedupIncremental started $incr jobs")
   }

@@ -274,10 +274,11 @@ class OperatorSpec extends AnyFunSuite {
     // an 8-node chain under maxIter=1: one propagate+jump round cannot
     // settle diameter 7 (the probe runs — 8 unsettled <= the gate — and
     // correctly finds bichromatic edges), so the stars fallback must
-    // produce the labels and the stats must attribute them to it
+    // produce the labels and the stats must attribute them to it.
+    // driverMax = 0 keeps this small graph off the driver union-find.
     val chain = (1L until 8L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val (labels, rounds, conv) = Dedup.connectedComponentsWithStats(chain, maxIter = 1)
-    assert(!conv && rounds == 1, s"chain: rounds=$rounds conv=$conv")
+    val (labels, stats) = Dedup.connectedComponentsWithStats(chain, maxIter = 1, driverMax = 0)
+    assert(stats == Dedup.CcStats(Dedup.CcTier.Stars, 1), s"chain: $stats")
     assert(labels.as[(Long, Long)].collect().toMap == (1L to 8L).map(_ -> 1L).toMap)
   }
 
@@ -286,9 +287,11 @@ class OperatorSpec extends AnyFunSuite {
     // tier 1 (free unsettled count): a min-star graph — every node adjacent
     // to its component min — is correct at the SEED, and round one must
     // observe that without the post-jump probe ever being needed
+    // (driverMax = 0: both graphs would otherwise take the driver tier)
+    val roundOne = Dedup.CcStats(Dedup.CcTier.Propagation, 1)
     val star = Seq((1L, 2L), (1L, 3L), (1L, 4L), (9L, 10L)).toDF("id_a", "id_b")
-    val (sLabels, sRounds, sConv) = Dedup.connectedComponentsWithStats(star)
-    assert(sConv && sRounds == 1, s"star graph: rounds=$sRounds conv=$sConv")
+    val (sLabels, sStats) = Dedup.connectedComponentsWithStats(star, driverMax = 0)
+    assert(sStats == roundOne, s"star graph: $sStats")
     assert(sLabels.as[(Long, Long)].collect().toMap ==
       Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 9L -> 9L, 10L -> 9L))
     // tier 2 (gated bichromatic probe): on a diameter-2 path a-b-c the
@@ -296,8 +299,8 @@ class OperatorSpec extends AnyFunSuite {
     // changed-row test needed a second full round to observe it, the
     // post-jump probe must not
     val path3 = Seq((5L, 6L), (6L, 7L)).toDF("id_a", "id_b")
-    val (pLabels, pRounds, pConv) = Dedup.connectedComponentsWithStats(path3)
-    assert(pConv && pRounds == 1, s"3-path: rounds=$pRounds conv=$pConv")
+    val (pLabels, pStats) = Dedup.connectedComponentsWithStats(path3, driverMax = 0)
+    assert(pStats == roundOne, s"3-path: $pStats")
     assert(pLabels.as[(Long, Long)].collect().toMap ==
       Map(5L -> 5L, 6L -> 5L, 7L -> 5L))
   }
@@ -321,20 +324,41 @@ class OperatorSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     def warmThreads = Thread.getAllStackTraces.keySet.asScala
       .count(_.getName == Dedup.WarmThreadName)
-    // range-based, not a local relation: the poisoned row must fail inside
-    // a job (the edge warm), not during driver-side constant folding
+    // driverMax = 0 keeps the call on the distributed tier, which warms
+    // each round's checkpoint; every warm must be gone when it returns
     val pairs = spark.range(1, 6).select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
-    assert(Dedup.connectedComponents(pairs).count() == 6)
+    val (labels, stats) = Dedup.connectedComponentsWithStats(pairs, driverMax = 0)
+    assert(labels.count() == 6 && stats.tier == Dedup.CcTier.Propagation, stats.toString)
     assert(warmThreads == 0, "a warm thread outlived a successful call")
+    // The call reads its pair lineage once, on the calling thread, so a
+    // poisoned pair list fails before any warm starts; a warm fails only
+    // when a round's checkpoint does. Warm a poisoned checkpoint directly:
+    // range-based, not a local relation, so the poison fails inside the
+    // warm's job, not during driver-side constant folding.
     val poisoned = pairs.withColumn("id_a",
       when(col("id_a") === 3L, raise_error(lit("cc-warm-poison"))).otherwise(col("id_a")))
-    val call = Future(scala.util.Try(Dedup.connectedComponents(poisoned)))(
+      .localCheckpoint(false)
+    val warms = new Dedup.CcWarms
+    val awaited = Future(scala.util.Try { warms.warm(poisoned); warms.await() })(
       ExecutionContext.global)
-    val err = Await.result(call, 2.minutes).failed.toOption
-      .getOrElse(fail("a failing pair lineage must not yield labels"))
+    val err = try Await.result(awaited, 2.minutes).failed.toOption
+        .getOrElse(fail("await must re-throw a failed warm"))
+      finally warms.close()
     val messages = Iterator.iterate(err)(_.getCause).takeWhile(_ != null).map(_.getMessage)
     assert(messages.exists(m => m != null && m.contains("cc-warm-poison")), err.toString)
-    assert(warmThreads == 0, "a warm thread outlived a failed call")
+    assert(warmThreads == 0, "a warm thread outlived a failed warm")
+  }
+
+  test("connectedComponents fails loudly on a poisoned pair lineage on the driver tier") {
+    import graft.dedup.Dedup
+    val pairs = spark.range(1, 6).select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
+    val (labels, stats) = Dedup.connectedComponentsWithStats(pairs)
+    assert(labels.count() == 6 && stats == Dedup.CcStats(Dedup.CcTier.DriverUnionFind, 0))
+    val poisoned = pairs.withColumn("id_a",
+      when(col("id_a") === 3L, raise_error(lit("cc-driver-poison"))).otherwise(col("id_a")))
+    val err = intercept[Exception](Dedup.connectedComponents(poisoned))
+    val messages = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(messages.exists(m => m != null && m.contains("cc-driver-poison")), err.toString)
   }
 
   test("connectedComponents handles a long chain well inside the round cap") {
@@ -342,9 +366,10 @@ class OperatorSpec extends AnyFunSuite {
     // diameter 60: plain min-propagation would need 60 rounds (over the
     // cap); pointer jumping contracts it in O(log n)
     val chain = (0L until 60L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val got = Dedup.connectedComponents(chain, maxIter = 12)
-      .as[(Long, Long)].collect().toMap
+    val (labels, stats) = Dedup.connectedComponentsWithStats(chain, maxIter = 12, driverMax = 0)
+    val got = labels.as[(Long, Long)].collect().toMap
     assert(got.size == 61 && got.values.forall(_ == 0L))
+    assert(stats.tier == Dedup.CcTier.Propagation, stats.toString)
   }
 
   test("e9 int8 quantization: per-element error <= scale/2 and high top-5 overlap") {

@@ -209,35 +209,92 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("connectedComponents equals a union-find reference on random graphs") {
-    val genGraph = for {
-      n <- Gen.choose(2, 30)
-      m <- Gen.choose(1, 40)
-      edges <- Gen.listOfN(m, for {
-        a <- Gen.choose(0L, n.toLong)
-        b <- Gen.choose(0L, n.toLong) if a != b
-      } yield (math.min(a, b), math.max(a, b)))
-    } yield edges.distinct
-    samples(genGraph, 12).filter(_.nonEmpty).foreach { edges =>
-      val got = Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
-        .as[(Long, Long)].collect().toMap
-      // reference: plain union-find with path compression
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
-      // canonical label = min node id per component on both sides
-      val expect = nodes.groupBy(find).flatMap { case (_, members) =>
-        val root = members.min; members.map(_ -> root)
-      }
-      assert(got == expect, s"CC mismatch on edges $edges")
+  /** Component-minimum labels by a plain union-find, `lt` the id order. */
+  private def unionFindRef[T](pairs: Seq[(T, T)], lt: (T, T) => Boolean): Map[T, T] = {
+    val parent = scala.collection.mutable.Map.empty[T, T]
+    def find(x: T): T = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
     }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
+    }
+    parent.keys.toSeq.map(x => x -> find(x)).toMap
+  }
+
+  test("connectedComponents equals a union-find reference on random graphs") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import Dedup.{CcStats, CcTier}
+    // the labels of both paths: the driver union-find and the rounds
+    def both(df: DataFrame): (Array[Row], Array[Row]) = {
+      val (viaDriver, dStats) = Dedup.connectedComponentsWithStats(df)
+      // driverMax = -1: an empty pair list (0 <= 0 pairs) takes the rounds too
+      val (viaRounds, rStats) = Dedup.connectedComponentsWithStats(df, driverMax = -1)
+      assert(dStats == CcStats(CcTier.DriverUnionFind, 0), dStats.toString)
+      assert(rStats.tier == CcTier.Propagation, rStats.toString)
+      assert(viaDriver.schema.map(_.dataType) == viaRounds.schema.map(_.dataType))
+      (viaDriver.collect(), viaRounds.collect())
+    }
+    // self-pairs, duplicates and both orientations of a pair all occur; an
+    // endpoint is null with probability 1/12
+    val genGraph = for {
+      n <- Gen.choose(1, 30)
+      m <- Gen.choose(1, 40)
+      pairs <- Gen.listOfN(m, Gen.zip(
+        Gen.frequency(1 -> Gen.const(None), 11 -> Gen.choose(0L, n.toLong).map(Some(_))),
+        Gen.frequency(1 -> Gen.const(None), 11 -> Gen.choose(0L, n.toLong).map(Some(_)))))
+      dups <- Gen.someOf(pairs)
+    } yield pairs ++ dups.map(_.swap)
+    val graphs = samples(genGraph, 12)
+    assert(graphs.exists(_.exists(p => p._1.isEmpty || p._2.isEmpty)) &&
+      graphs.exists(_.forall(p => p._1.isDefined && p._2.isDefined)))
+    // ids whose string order differs from the numeric one and from Java's
+    // UTF-16 order: U+FFFF sorts before U+1F600 in Spark's UTF-8 byte order
+    val prefixes = Seq("\uFFFF", "\uD83D\uDE00", "a", "Z", "1", "")
+    def str(id: Long) = s"${prefixes((id % prefixes.size).toInt)}$id"
+    def utf8Lt(a: String, b: String) = org.apache.spark.unsafe.types.UTF8String.fromString(a)
+      .binaryCompare(org.apache.spark.unsafe.types.UTF8String.fromString(b)) < 0
+    graphs.foreach { pairs =>
+      val (dl, rl) = both(pairs.toDF("id_a", "id_b"))
+      val (ds, rs) = both(pairs.map { case (a, b) => (a.map(str), b.map(str)) }.toDF("id_a", "id_b"))
+      def longs(rows: Array[Row]) =
+        rows.map(r => Option(r.getAs[java.lang.Long](0)) -> Option(r.getAs[java.lang.Long](1))).toMap
+      def strs(rows: Array[Row]) =
+        rows.map(r => Option(r.getString(0)) -> Option(r.getString(1))).toMap
+      // one row per node, the null node included
+      assert(dl.length == longs(dl).size && ds.length == strs(ds).size, s"duplicate member on $pairs")
+      assert(longs(dl) == longs(rl), s"long ids: driver vs rounds on $pairs")
+      assert(strs(ds) == strs(rs), s"string ids: driver vs rounds on $pairs")
+      // non-null members: the component minimum over the non-null pairs
+      val full = pairs.collect { case (Some(a), Some(b)) => (a, b) }
+      val loose = pairs.flatMap(p => p._1.toSeq ++ p._2.toSeq).map(x => (x, x))
+      val refL = unionFindRef[Long](full ++ loose, _ < _)
+      val refS = unionFindRef[String]((full ++ loose).map(p => (str(p._1), str(p._2))), utf8Lt)
+      assert(longs(dl).collect { case (Some(k), Some(v)) => k -> v } == refL,
+        s"long ids vs reference on $pairs")
+      assert(strs(ds).collect { case (Some(k), Some(v)) => k -> v } == refS,
+        s"string ids vs reference on $pairs")
+    }
+    // null endpoints, pinned to the rounds' answer: a null node joins no
+    // component and takes the least minimum among its non-null partners
+    val withNulls = Seq[(Option[Long], Option[Long])]((Some(1L), Some(2L)), (Some(2L), None),
+      (Some(5L), None), (Some(7L), Some(7L)), (None, None), (Some(8L), Some(9L)), (None, Some(9L)))
+    val pinned = Map[Option[Long], Option[Long]](Some(1L) -> Some(1L), Some(2L) -> Some(1L),
+      Some(5L) -> Some(5L), Some(7L) -> Some(7L), Some(8L) -> Some(8L), Some(9L) -> Some(8L),
+      None -> Some(1L))
+    val (nd, nr) = both(withNulls.toDF("id_a", "id_b"))
+    Seq(nd, nr).foreach { rows =>
+      assert(rows.map(r => Option(r.getAs[java.lang.Long](0)).map(_.toLong) ->
+        Option(r.getAs[java.lang.Long](1)).map(_.toLong)).toMap == pinned)
+    }
+    val (onlyNull, _) = both(Seq[(Option[Long], Option[Long])]((None, None)).toDF("id_a", "id_b"))
+    assert(onlyNull.map(r => (r.isNullAt(0), r.isNullAt(1))).toSeq == Seq((true, true)))
+    // empty input, long and string ids
+    assert(both(Seq.empty[(Long, Long)].toDF("id_a", "id_b")) match {
+      case (d, r) => d.isEmpty && r.isEmpty })
+    assert(both(Seq.empty[(String, String)].toDF("id_a", "id_b")) match {
+      case (d, r) => d.isEmpty && r.isEmpty })
   }
 
   test("connectedComponentsStars equals connectedComponents on random graphs") {
@@ -269,10 +326,58 @@ class PropertySpec extends AnyFunSuite {
     assert(viaStars.count() == 10000)
     assert(viaStars.filter(col("group_id") =!= 0L).isEmpty,
       "every node of the path must label to component min 0")
-    val viaApi = Dedup.connectedComponents(path, maxIter = 2)
+    // driverMax = 0: 9999 pairs would otherwise take the driver union-find
+    val (viaApi, stats) = Dedup.connectedComponentsWithStats(path, maxIter = 2, driverMax = 0)
     assert(viaApi.filter(col("group_id") =!= 0L).isEmpty &&
       viaApi.count() == 10000,
       "connectedComponents must fall back to stars, not throw or mislabel")
+    assert(stats == Dedup.CcStats(Dedup.CcTier.Stars, 2), stats.toString)
+  }
+
+  test("connectedComponents takes the driver tier up to its bound, reading the pairs once") {
+    import Dedup.CcTier
+    Seq(24L -> CcTier.DriverUnionFind, 23L -> CcTier.Propagation).foreach { case (bound, tier) =>
+      val reads = spark.sparkContext.longAccumulator("cc-pair-reads")
+      val counted = udf((x: Long) => { reads.add(1); x }).asNondeterministic()
+      // 24 pairs: a 13-node chain and six 3-node paths
+      val pairs = spark.range(24).select(
+        counted(col("id")).as("id_a"),
+        when(col("id") < 12L, col("id") + 1).otherwise(col("id") + 100 - (col("id") % 2))
+          .as("id_b"))
+      val (labels, stats) = Dedup.connectedComponentsWithStats(pairs, driverMax = bound)
+      val got = labels.as[(Long, Long)].collect().toMap
+      assert(stats.tier == tier, s"bound $bound: $stats")
+      assert(reads.value == 24L, s"bound $bound: the pair lineage ran ${reads.value} rows")
+      val ref = unionFindRef[Long](pairs.as[(Long, Long)].collect().toSeq, _ < _)
+      assert(got == ref, s"bound $bound")
+    }
+  }
+
+  test("connectedComponents' driver tier hands a large labelling back over an RDD") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.LogicalRDD
+    import Dedup.{CcStats, CcTier}
+    // stars of 8 nodes, hub first: more labels than a local relation holds
+    val n = Dedup.LocalLabelsMax + 1000L
+    val stars = spark.range(n).filter(col("id") % 8 =!= 0)
+      .select((col("id") - col("id") % 8).as("id_a"), col("id").as("id_b"))
+    Seq(stars, stars.select(concat(lit("d"), col("id_a")).as("id_a"),
+        concat(lit("d"), col("id_b")).as("id_b"))).foreach { pairs =>
+      val (viaDriver, stats) = Dedup.connectedComponentsWithStats(pairs)
+      assert(stats == CcStats(CcTier.DriverUnionFind, 0), stats.toString)
+      val leaves = viaDriver.queryExecution.analyzed.collectLeaves()
+      assert(leaves.exists(_.isInstanceOf[LogicalRDD]) &&
+        !leaves.exists(_.isInstanceOf[LocalRelation]), leaves.toString)
+      assert(viaDriver.schema == Dedup.connectedComponentsWithStats(pairs, driverMax = 0)._1.schema)
+      val got = viaDriver.collect().map(r => r.get(0) -> r.get(1)).toMap
+      val ref = pairs.collect().map(r => (r.get(0), r.get(1))).toSeq
+      val want = pairs.schema("id_a").dataType match {
+        case org.apache.spark.sql.types.LongType =>
+          unionFindRef[Any](ref, (a, b) => a.asInstanceOf[Long] < b.asInstanceOf[Long])
+        case _ => unionFindRef[Any](ref, (a, b) => a.asInstanceOf[String] < b.asInstanceOf[String])
+      }
+      assert(got.size == n && got == want)
+    }
   }
 
   test("TopKPerKey equals the window form on random frames (property)") {
