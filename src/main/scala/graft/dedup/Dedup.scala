@@ -414,70 +414,6 @@ object Dedup {
     NearDups(slim, reps, sigs.select("doc_id", "nsh"), verifyJaccard(cands, sigs))
   }
 
-  /** Name of the thread a [[connectedComponents]] call warms its
-    * checkpoints on.
-    */
-  private[graft] val WarmThreadName = "graft-cc-warm"
-
-  /** Background checkpoint warms of ONE [[connectedComponentsWithStats]]
-    * call. `warm` runs a `count()` over a lazily-checkpointed frame's RDD so
-    * the workers compute its blocks WHILE the driver constructs and plans
-    * the downstream round (analysis/codegen is single-threaded driver work
-    * during which every worker core otherwise idles). Per-call work is
-    * unchanged; nothing is cached across calls. Invariants:
-    *   - warms run one at a time, on the handle's single thread;
-    *   - every warm has finished and MARKED its checkpoint before the
-    *     round's first action ([[await]]), which re-throws the first warm
-    *     failure;
-    *   - no warm escapes the call: [[close]], in the caller's `finally`,
-    *     drops warms that have not started and waits out the running one.
-    * Why marking must not overlap another job over the same RDD: a lazily-
-    * checkpointed RDD is marked at the end of whichever job over it
-    * finishes first, on that job's thread, under Spark's GLOBAL
-    * `RDDCheckpointData$` lock, while a concurrent stage submission visiting
-    * the same RDD takes the locks in the opposite order (RDD →
-    * `RDDCheckpointData$` via `RDD.partitions`) — an ABBA deadlock, seen in
-    * a jstack as a broadcast-exchange marking against
-    * `dag-scheduler-event-loop`. Two concurrent warms of dependent frames
-    * interleave the same way, hence one thread. Driver planning takes
-    * neither lock, so planning may overlap a warm. Checkpointing may not:
-    * with AQE on, `localCheckpoint(false)` runs the plan's query stages at
-    * once, so a checkpoint built over a frame whose warm is still pending
-    * deadlocks the same way (seen as round one's `next` against the seed's
-    * warm). Hence only each round's own checkpoint is warmed, between its
-    * construction and the round's [[await]].
-    */
-  private[graft] final class CcWarms {
-    import java.util.concurrent.{ExecutionException, Executors, Future, TimeUnit}
-    private var thread: Thread = null
-    private val pool = Executors.newSingleThreadExecutor { (r: Runnable) =>
-      thread = new Thread(r, WarmThreadName)
-      thread.setDaemon(true)
-      thread
-    }
-    private val pending = scala.collection.mutable.ArrayBuffer.empty[Future[_]]
-
-    def warm(df: DataFrame): Unit = {
-      val rdd = checkpointRdd(df)
-      pending += pool.submit(new Runnable { def run(): Unit = { rdd.count(); () } })
-    }
-
-    def await(): Unit = {
-      pending.foreach { f =>
-        try f.get() catch { case e: ExecutionException => throw e.getCause }
-      }
-      pending.clear()
-    }
-
-    def close(): Unit = {
-      pending.foreach(_.cancel(false))
-      pool.shutdown()
-      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
-      if (thread != null) thread.join()
-      pending.clear()
-    }
-  }
-
   /** The RDD behind a `localCheckpoint`ed frame. A job over it plans and
     * compiles nothing: it computes (and marks) the checkpoint, or reads its
     * blocks once marked.
@@ -486,12 +422,6 @@ object Dedup {
     df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }
-
-  /** Unsettled-node ceiling under which a round runs the tier-2
-    * bichromatic-edge probe (see the convergence comment inside
-    * [[distributedLabels]]).
-    */
-  val BichromProbeMax = 65536L
 
   /** Pair-count ceiling of [[connectedComponents]]'s driver union-find: the
     * smaller of 2^20 pairs and one pair per 2 KiB of driver heap. Measured
@@ -559,11 +489,12 @@ object Dedup {
     connectedComponentsWithStats(pairs, maxIter)._1
 
   /** [[connectedComponents]] plus which tier labelled and how many
-    * propagation rounds ran — the stats let specs pin the convergence-tier
-    * behavior (e.g. that a diameter-2 graph exits on round ONE via the
-    * post-jump probe) instead of only the labels, which every tier gets
-    * right. `driverMax` is the driver-path bound in pairs; specs pass 0 to
-    * drive the distributed tiers on small graphs.
+    * propagation rounds ran — the stats let specs pin the convergence
+    * behavior (e.g. that a min-star graph exits on round one) instead of
+    * only the labels, which every tier gets right. `driverMax` is the
+    * driver-path bound in pairs; specs pass 0 to drive the distributed
+    * tiers on small graphs, and `maxIter = 0` with it to drive the stars
+    * rounds.
     */
   private[graft] def connectedComponentsWithStats(
       pairs: DataFrame, maxIter: Int = 50,
@@ -614,122 +545,73 @@ object Dedup {
 
   /** The distributed tiers of [[connectedComponentsWithStats]] over its
     * materialized edge checkpoint: propagation rounds, then the stars
-    * fallback if the round cap is hit.
+    * fallback if the round cap is hit. Every job runs on the calling
+    * thread, one after another. Measured above the driver bound
+    * (BENCH_NOTES "Connected components above the driver bound": 2M and 4M
+    * pairs as 8-node stars, 8-node paths, one star and one path), stars
+    * alone was slower than propagation on every shape, so propagation
+    * leads and stars only backs up its round cap; a background warm of each
+    * round's checkpoint and a gated bichromatic-edge probe (an early exit
+    * one round before the no-op round) paid more than the run-to-run
+    * spread on no shape and were deleted.
     */
   private def distributedLabels(edges: DataFrame, maxIter: Int): (DataFrame, CcStats) = {
-    var labels: DataFrame = null
+    // Seed with round one's result directly: min-propagation from identity
+    // labels yields label(x) = min(x, min neighbor id), which one grouped
+    // aggregate over the edge list computes without the join — one fewer
+    // propagation round (join + agg + checkpoint + convergence scan) on
+    // every call, and the distinct() init job is folded into the same agg.
+    // Checkpointed: the seed has two round-one consumers (the propagate
+    // join and the merged union); without the checkpoint its aggregate
+    // subtree appears twice in the round plan, doubling that plan's
+    // analysis/codegen cost (driver-bound), while with it the round plan
+    // sees two LogicalRDD leaves.
+    var labels = edges.groupBy(col("src").as("id"))
+      .agg(least(min(col("dst")), min(col("src"))).as("label"))
+      .localCheckpoint(false)
     var iter = 0
     var converged = false
-    val warms = new CcWarms
-    try {
-      // Seed with round one's result directly: min-propagation from identity
-      // labels yields label(x) = min(x, min neighbor id), which one grouped
-      // aggregate over the edge list computes without the join — one fewer
-      // propagation round (join + agg + checkpoint + convergence scan) on
-      // every call, and the distinct() init job is folded into the same agg.
-      // Checkpointed: the seed has two round-one consumers (the propagate
-      // join and the merged union); without the checkpoint its aggregate
-      // subtree appears twice in the round plan, doubling that plan's
-      // analysis/codegen cost (driver-bound), while with it the round plan
-      // sees two LogicalRDD leaves. Not warmed: round one's checkpoint is
-      // built over it (see CcWarms); the first job over it computes it.
-      labels = edges.groupBy(col("src").as("id"))
-        .agg(least(min(col("dst")), min(col("src"))).as("label"))
+    while (iter < maxIter && !converged) {
+      val prop = edges.join(labels, edges("src") === labels("id"))
+        .select(col("dst").as("id"), col("label"))
+      // labels covers every node (each appears as an edge src), so the
+      // union's labels branch keeps a node's current label even when no
+      // neighbor offers a smaller one. `mx` rides the SAME aggregate:
+      // min != max at a node ⟺ the node still sees two different labels
+      // across itself and its neighbors ⟺ some incident edge is
+      // bichromatic under the PREVIOUS round's labels — the free
+      // convergence signal (see below).
+      val merged = labels.unionByName(prop)
+        .groupBy("id").agg(min("label").as("label"), max("label").as("mx"))
+      // pointer jump: label(x) ← label(label(x)). Labels are always node
+      // ids of the same component with label(y) <= y, so the composition
+      // stays in-component and non-increasing; chains contract by half
+      // per round (left join: the component min labels itself).
+      // A null id never counts as unsettled: a null key matches no join, so
+      // it joins no component and may see different labels from partners
+      // in different components forever; its label is the least of them,
+      // final once theirs are.
+      val parents = merged
+        .select(col("id").as("pid"), col("label").as("plabel"))
+      val next = merged.join(parents, col("label") === col("pid"), "left")
+        .select(col("id"), coalesce(col("plabel"), col("label")).as("label"),
+          (col("label") =!= col("mx") && col("id").isNotNull).as("nu"))
         .localCheckpoint(false)
-      while (iter < maxIter && !converged) {
-        val prop = edges.join(labels, edges("src") === labels("id"))
-          .select(col("dst").as("id"), col("label"))
-        // labels covers every node (each appears as an edge src), so the
-        // union's labels branch keeps a node's current label even when no
-        // neighbor offers a smaller one. `mx` rides the SAME aggregate:
-        // min != max at a node ⟺ the node still sees two different labels
-        // across itself and its neighbors ⟺ some incident edge is
-        // bichromatic under the PREVIOUS round's labels — the free
-        // convergence signal (see below).
-        val merged = labels.unionByName(prop)
-          .groupBy("id").agg(min("label").as("label"), max("label").as("mx"))
-        // pointer jump: label(x) ← label(label(x)). Labels are always node
-        // ids of the same component with label(y) <= y, so the composition
-        // stays in-component and non-increasing; chains contract by half
-        // per round (left join: the component min labels itself).
-        val parents = merged
-          .select(col("id").as("pid"), col("label").as("plabel"))
-        val next = merged.join(parents, col("label") === col("pid"), "left")
-          .select(col("id"), coalesce(col("plabel"), col("label")).as("label"),
-            (col("label") =!= col("mx")).as("nu"))
-          .localCheckpoint(false)
-        // Two-tier EXACT convergence test. Soundness rests on the invariant
-        // that labels are always in-component node ids with label(x) <= x
-        // (seed, propagate, and jump each preserve it): if every edge is
-        // monochromatic then each component carries one label L, node L has
-        // label(L) = L, and the component minimum m has label(m) = L <= m —
-        // forcing L = m, so the labels ARE the component minima and the
-        // round map is the identity.
-        //   Tier 1 (free): nUnsettled counts nodes whose propagate multiset
-        //   held two labels. Zero ⟺ the PREVIOUS labels were already
-        //   monochromatic ⟺ this round was a no-op — the same stop round as
-        //   a changed-row count, with no carried `old` column, and the agg
-        //   runs as the SAME action that materializes the round checkpoint.
-        //   Tier 2 (gated probe): the jump can merge the last label chains
-        //   mid-round, so `next` may be converged a full round before tier 1
-        //   can see it. A bichromatic-edge test under `next` detects that —
-        //   but on a far-from-converged high-diameter graph it is a per-round
-        //   surcharge with no chance of firing, so it runs only once
-        //   nUnsettled is small (most components already settled; the
-        //   near-dup norm reaches this on round one). The threshold trades
-        //   one probe against skipping a whole round; 64k keeps the probe
-        //   out of the bulk phase of adversarial chains while firing on
-        //   every realistically-shaped tail.
-        //   The probe is UNSETTLED-RESTRICTED (round 11; the former version
-        //   joined the full edge list against the labels twice): if both
-        //   endpoints of an edge were settled this round, each saw a single
-        //   label across itself and its neighbors, so the two labels were
-        //   equal and the jump maps both through the same parent — the edge
-        //   is monochromatic. Any bichromatic edge therefore has an
-        //   unsettled endpoint, and since `edges` carries both orientations,
-        //   filtering on an unsettled src sees every candidate. No join back
-        //   to dst labels either: deliver each unsettled node's label to its
-        //   neighbors and compare against the neighbors' own labels in ONE
-        //   narrow aggregate — a node holding two distinct labels ⟺ some
-        //   incident edge is bichromatic. The unsettled build side is
-        //   ≤ BichromProbeMax rows by the gate, so the broadcast is bounded
-        //   by construction.
-        // coalesce: an empty pair list converges on round one, not NPE.
-        // The round checkpoint materializes on the warm thread while the
-        // driver constructs and PLANS both convergence actions up front. The
-        // probe plan is built unconditionally (its ~40-80 ms of
-        // analysis+codegen used to sit in a driver gap between the two
-        // actions); whether it EXECUTES keeps the exact tier-1 value gate
-        // below, so semantics and the probe's bounded-broadcast argument
-        // are unchanged. On a tier-1-converged round the probe plan is
-        // discarded unexecuted — driver work wasted, but it overlapped the
-        // checkpoint compute, so its wall cost is ~0.
-        warms.warm(next)
-        val unsettledAgg = next.agg(coalesce(
-          sum(when(col("nu"), 1L).otherwise(0L)), lit(0L)))
-        unsettledAgg.queryExecution.executedPlan // plan while the warm runs
-        val sl = next.filter(col("nu"))
-          .select(col("id").as("sid"), col("label").as("sl"))
-        val probeAgg = edges.join(broadcast(sl), col("src") === col("sid"))
-          .select(col("dst").as("id"), col("sl").as("lbl"))
-          .unionByName(next.select(col("id"), col("label").as("lbl")))
-          .groupBy("id").agg(min("lbl").as("mn"), max("lbl").as("mx"))
-          .agg(coalesce(
-            sum(when(col("mn") =!= col("mx"), 1L).otherwise(0L)),
-            lit(0L)))
-        probeAgg.queryExecution.executedPlan // plan while the warm runs
-        // Barrier before the round's first action: the round's warm must
-        // finish MARKING its checkpoint before a consumer action can submit
-        // stages over it (the CcWarms note).
-        warms.await()
-        val nUnsettled = unsettledAgg.head.getLong(0)
-        converged = nUnsettled == 0
-        if (!converged && nUnsettled <= BichromProbeMax)
-          converged = probeAgg.head.getLong(0) == 0
-        labels = next.select("id", "label")
-        iter += 1
-      }
-    } finally warms.close()
+      // EXACT convergence test. Soundness rests on the invariant that
+      // labels are always in-component node ids with label(x) <= x (seed,
+      // propagate, and jump each preserve it): if every edge is
+      // monochromatic then each component carries one label L, node L has
+      // label(L) = L, and the component minimum m has label(m) = L <= m —
+      // forcing L = m, so the labels ARE the component minima and the
+      // round map is the identity. `nu` marks the nodes whose propagate
+      // multiset held two labels: none ⟺ the PREVIOUS labels were already
+      // monochromatic ⟺ this round was a no-op. The count is the action
+      // that materializes the round checkpoint, so the test costs no job
+      // of its own.
+      converged = next.filter(col("nu")).count() == 0
+      labels = next.select("id", "label")
+      iter += 1
+    }
     // Partially-propagated labels are silently WRONG groups — never return
     // them. Instead of refusing outright, fall back to the alternating
     // large-star/small-star rounds, which converge in O(log n) rounds on ANY
@@ -799,6 +681,13 @@ object Dedup {
     else labels :+ InternalRow(null, nullPartners.map(p => ids(find(p))).minOption(ord).orNull)
   }
 
+  /** Default round cap for the stars algorithm — shared by the public
+    * entry point and the connectedComponents fallback path so the two
+    * cannot silently diverge. O(log² n) bound ⇒ 40 covers any realistic
+    * graph by orders of magnitude.
+    */
+  val StarsMaxIter = 40
+
   /** Connected components by alternating LARGE-STAR / SMALL-STAR rounds
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
     * SoCC'14) — the fallback path for graphs whose shape defeats the
@@ -822,18 +711,13 @@ object Dedup {
     * monotonically toward one edge per non-root node.
     *
     * Returns the same shape as [[connectedComponents]]: (member_id,
-    * group_id = component minimum), one row per distinct node in `pairs`.
+    * group_id = component minimum), one row per distinct node in `pairs`;
+    * a null node takes the least component minimum among its non-null
+    * partners, as in [[connectedComponents]].
     */
-  /** Default round cap for the stars algorithm — shared by the public
-    * entry point and the connectedComponents fallback path so the two
-    * cannot silently diverge. O(log² n) bound ⇒ 40 covers any realistic
-    * graph by orders of magnitude.
-    */
-  val StarsMaxIter = 40
-
   def connectedComponentsStars(pairs: DataFrame, maxIter: Int = StarsMaxIter): DataFrame =
     // same reasoning as [[connectedComponents]]: the input is consumed by
-    // the canonical-edge pass AND the final node-set union (two more scans).
+    // the canonical-edge pass AND the final endpoint lookup (two scans).
     // The fallback call from connectedComponents skips straight to
     // [[starsImpl]] — its input is already checkpointed, and a second
     // localCheckpoint would re-cache the whole edge list under a new RDD
@@ -841,7 +725,9 @@ object Dedup {
     starsImpl(pairs.localCheckpoint(false), maxIter)
 
   private def starsImpl(p: DataFrame, maxIter: Int): DataFrame = {
-    // canonical undirected edges, self-loops dropped
+    // canonical undirected edges, self-loops dropped. least/greatest skip
+    // nulls, so a pair with a null endpoint turns into a self-loop here and
+    // drops out: a null node joins no component (it is labelled below).
     var edges = p
       .select(least(col("id_a"), col("id_b")).as("u"),
         greatest(col("id_a"), col("id_b")).as("v"))
@@ -882,18 +768,21 @@ object Dedup {
         .distinct()
     }
     var iter = 0
-    var converged = edges.isEmpty // an edgeless input is already a fixpoint
+    var nEdges = edges.count()
+    var converged = nEdges == 0 // an edgeless input is already a fixpoint
     while (iter < maxIter && !converged) {
       // smallStar consumes its input twice (min agg + join) — checkpoint
       // the large-star rewrite so it is computed once per round
       val ls = largeStar(edges).localCheckpoint(false)
       val next = smallStar(ls).localCheckpoint(false)
-      // exact fixpoint test: same cardinality and no new edges. Both run on
-      // checkpointed frames, so the cost is two scans of the (shrinking)
-      // edge list, not a lineage replay.
-      converged =
-        next.count() == edges.count() && next.exceptAll(edges).isEmpty
+      // exact fixpoint test: same cardinality and no new edges. The count
+      // materializes the round's checkpoints and is carried to the next
+      // round's test; the difference runs on checkpointed frames, not a
+      // lineage replay.
+      val nNext = next.count()
+      converged = nNext == nEdges && next.exceptAll(edges).isEmpty
       edges = next
+      nEdges = nNext
       iter += 1
     }
     if (!converged) throw new IllegalStateException(
@@ -902,14 +791,19 @@ object Dedup {
         "raise maxIter")
     // fixpoint edges form stars (x, m): label both endpoints with the
     // component min, and keep isolated-in-`pairs` self-pair nodes labeled
-    // by themselves via the union with the original node set
-    val nodes = p.select(col("id_a").as("id"))
-      .unionByName(p.select(col("id_b").as("id"))).distinct()
-    val starLabels = directed(edges).groupBy(col("u").as("id"))
+    // by themselves. Every endpoint of `pairs` is looked up `via` itself;
+    // a null endpoint is looked up via its partner instead, so the null
+    // node takes the least component minimum among its non-null partners
+    // (null if it has none), as on the other tiers.
+    val ends = p.select(explode(array(
+        struct(col("id_a").as("id"), coalesce(col("id_a"), col("id_b")).as("via")),
+        struct(col("id_b").as("id"), coalesce(col("id_b"), col("id_a")).as("via")))).as("n"))
+      .select(col("n.id").as("id"), col("n.via").as("via")).distinct()
+    val starLabels = directed(edges).groupBy(col("u").as("su"))
       .agg(min(col("v")).as("lbl"))
-    nodes.join(starLabels, Seq("id"), "left")
-      .select(col("id").as("member_id"),
-        least(coalesce(col("lbl"), col("id")), col("id")).as("group_id"))
+    ends.join(starLabels, col("via") === col("su"), "left")
+      .groupBy(col("id").as("member_id"))
+      .agg(min(least(coalesce(col("lbl"), col("via")), col("via"))).as("group_id"))
   }
 
   /** Exact-Jaccard verification of candidate pairs over per-document

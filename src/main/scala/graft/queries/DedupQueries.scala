@@ -445,29 +445,16 @@ private[graft] object DedupQueries {
     // and flips to a shuffle join past the threshold — the design never
     // assumes the dup set fits in memory; at real scale the span string
     // would be xxhash64'd to shrink the exchange (the oracle pairing
-    // keeps the string key). Two corpus scans by design
-    // (the dd14 argument: a re-scan beats materializing the span frame).
-    // countDistinct(start)+countDistinct(pos) ride ONE aggregation (the
-    // Expand doubles only dup-coverage rows, not the corpus). ------------
+    // keeps the string key). The per-doc coverage is Engine.spanDupStats:
+    // two span passes by design (the dd14 argument: a re-pass beats
+    // materializing the span frame), and countDistinct(start) +
+    // countDistinct(pos) ride ONE aggregation (the Expand doubles only
+    // dup-coverage rows, not the corpus). --------------------------------
     "dd15_span_dedup" -> { (s, dir) =>
-      def spans(df: DataFrame): DataFrame = df
-        .repartition(32, col("doc_id")) // single-row-group source (dd2 reason)
-        .select(col("doc_id"), Dedup.tokens(col("text")).as("ts"))
-        .filter(size(col("ts")) >= 8)
-        .select(col("doc_id"), explode(expr(
-          "transform(sequence(0, size(ts) - 8), i -> named_struct(" +
-            "'start', CAST(i AS BIGINT), " +
-            "'span', array_join(slice(ts, i + 1, 8), ' ')))")).as("sp"))
-        .select(col("doc_id"), col("sp.start").as("start"), col("sp.span").as("span"))
       val docs = Tables.documents(s, dir)
-      val dup = spans(docs).groupBy("span")
-        .agg(count(lit(1)).as("n")).filter(col("n") > 1).select("span")
-      val cov = spans(docs).join(dup, "span")
-        .select(col("doc_id"), col("start"),
-          explode(expr("sequence(start, start + 7)")).as("pos"))
-        .groupBy("doc_id")
-        .agg(countDistinct("start").as("n_dup_spans"),
-          countDistinct("pos").as("covered"))
+      val cov = new Engine(s).spanDupStats(
+        docs.repartition(32, col("doc_id")), // single-row-group source (dd2 reason)
+        "doc_id", "text", 8)
       docs
         .select(col("doc_id"),
           size(Dedup.tokens(col("text"))).cast("long").as("n_tokens"))
@@ -475,7 +462,7 @@ private[graft] object DedupQueries {
         .join(cov, Seq("doc_id"), "left")
         .select(col("doc_id"), col("n_tokens"), col("n_spans"),
           coalesce(col("n_dup_spans"), lit(0L)).as("n_dup_spans"),
-          coalesce(col("covered"), lit(0L)).as("covered_tokens"))
+          coalesce(col("covered_tokens"), lit(0L)).as("covered_tokens"))
         .withColumn("dup_ppm",
           expr("CASE WHEN n_tokens > 0 THEN covered_tokens * 1000000 div n_tokens " +
             "ELSE CAST(0 AS BIGINT) END"))

@@ -828,26 +828,19 @@ private[graft] object ScanStreamQueries {
 
     // ---- SCD Type-2 history build: collapse a mutation log into versioned
     // dimension rows with [valid_from, valid_to) ranges and an is_current
-    // flag — the standard warehouse dimension-history operator. One shuffle
-    // on the business key; both window passes (change detection, then
-    // range stitching over the collapsed rows) reuse the same hash
-    // partitioning, so the user_id exchange happens once. Ties at equal ts
-    // break on event_id so the fold is deterministic under retries. -------
+    // flag — the standard warehouse dimension-history operator, run by
+    // Engine.scd2History (one user_id shuffle shared by both window passes;
+    // ties at equal ts break on event_id). The query renders the range ends
+    // as text and names the attribute `status`. --------------------------
     "d4_scd2_history" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      Tables.events(s, dir)
-        .select("user_id", "ts", "event_id", "event_type")
-        .withColumn("prev_type", lag("event_type", 1).over(byUser))
-        .filter(col("prev_type").isNull || col("prev_type") =!= col("event_type"))
-        .withColumn("version", row_number().over(byUser))
-        .withColumn("valid_to_ts", lead("ts", 1).over(byUser))
+      new Engine(s)
+        .scd2History(Tables.events(s, dir), "user_id", "ts", "event_type", "event_id")
         .select(
           col("user_id"), col("version"),
           col("event_type").as("status"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("valid_from"),
-          date_format(col("valid_to_ts"), "yyyy-MM-dd HH:mm:ss").as("valid_to"),
-          col("valid_to_ts").isNull.as("is_current"))
+          date_format(col("valid_from"), "yyyy-MM-dd HH:mm:ss").as("valid_from"),
+          date_format(col("valid_to"), "yyyy-MM-dd HH:mm:ss").as("valid_to"),
+          col("is_current"))
         .orderBy("user_id", "version")
     },
 

@@ -272,35 +272,31 @@ class OperatorSpec extends AnyFunSuite {
   test("connectedComponents stars tier: iteration-cap overrun attributes to the fallback") {
     import graft.dedup.Dedup
     // an 8-node chain under maxIter=1: one propagate+jump round cannot
-    // settle diameter 7 (the probe runs — 8 unsettled <= the gate — and
-    // correctly finds bichromatic edges), so the stars fallback must
-    // produce the labels and the stats must attribute them to it.
-    // driverMax = 0 keeps this small graph off the driver union-find.
+    // settle diameter 7, so the stars fallback must produce the labels and
+    // the stats must attribute them to it. driverMax = 0 keeps this small
+    // graph off the driver union-find.
     val chain = (1L until 8L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val (labels, stats) = Dedup.connectedComponentsWithStats(chain, maxIter = 1, driverMax = 0)
     assert(stats == Dedup.CcStats(Dedup.CcTier.Stars, 1), s"chain: $stats")
     assert(labels.as[(Long, Long)].collect().toMap == (1L to 8L).map(_ -> 1L).toMap)
   }
 
-  test("connectedComponents convergence tiers: round-one exits, no fallback") {
+  test("connectedComponents convergence: exits on the first no-op round, no fallback") {
     import graft.dedup.Dedup
-    // tier 1 (free unsettled count): a min-star graph — every node adjacent
-    // to its component min — is correct at the SEED, and round one must
-    // observe that without the post-jump probe ever being needed
-    // (driverMax = 0: both graphs would otherwise take the driver tier)
-    val roundOne = Dedup.CcStats(Dedup.CcTier.Propagation, 1)
+    // a min-star graph — every node adjacent to its component min — is
+    // correct at the SEED, so round one is already a no-op and must stop
+    // the loop (driverMax = 0: both graphs would otherwise take the driver
+    // tier)
     val star = Seq((1L, 2L), (1L, 3L), (1L, 4L), (9L, 10L)).toDF("id_a", "id_b")
     val (sLabels, sStats) = Dedup.connectedComponentsWithStats(star, driverMax = 0)
-    assert(sStats == roundOne, s"star graph: $sStats")
+    assert(sStats == Dedup.CcStats(Dedup.CcTier.Propagation, 1), s"star graph: $sStats")
     assert(sLabels.as[(Long, Long)].collect().toMap ==
       Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 9L -> 9L, 10L -> 9L))
-    // tier 2 (gated bichromatic probe): on a diameter-2 path a-b-c the
-    // POINTER JUMP completes convergence mid-round-one; the pre-round-10
-    // changed-row test needed a second full round to observe it, the
-    // post-jump probe must not
+    // on a diameter-2 path a-b-c the seed leaves c labelled b; round one's
+    // pointer jump settles it, and round two, a no-op, observes that
     val path3 = Seq((5L, 6L), (6L, 7L)).toDF("id_a", "id_b")
     val (pLabels, pStats) = Dedup.connectedComponentsWithStats(path3, driverMax = 0)
-    assert(pStats == roundOne, s"3-path: $pStats")
+    assert(pStats == Dedup.CcStats(Dedup.CcTier.Propagation, 2), s"3-path: $pStats")
     assert(pLabels.as[(Long, Long)].collect().toMap ==
       Map(5L -> 5L, 6L -> 5L, 7L -> 5L))
   }
@@ -308,45 +304,13 @@ class OperatorSpec extends AnyFunSuite {
   test("connectedComponents works over string ids") {
     import graft.dedup.Dedup
     // labels must stay in the id's own type end-to-end (seed least/min,
-    // probe comparisons) — pin the non-long id path
+    // label comparisons) — pin the non-long id path
     val pairs = Seq(("b", "c"), ("a", "b"), ("x", "y")).toDF("id_a", "id_b")
     val got = Dedup.connectedComponents(pairs)
       .as[(String, String)].collect().toMap
     assert(Seq("a", "b", "c").forall(got(_) == "a"))
     assert(Seq("x", "y").forall(got(_) == "x"))
     assert(got.size == 5)
-  }
-
-  test("connectedComponents re-throws a warm failure and leaves no warm thread") {
-    import graft.dedup.Dedup
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration._
-    import scala.jdk.CollectionConverters._
-    def warmThreads = Thread.getAllStackTraces.keySet.asScala
-      .count(_.getName == Dedup.WarmThreadName)
-    // driverMax = 0 keeps the call on the distributed tier, which warms
-    // each round's checkpoint; every warm must be gone when it returns
-    val pairs = spark.range(1, 6).select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
-    val (labels, stats) = Dedup.connectedComponentsWithStats(pairs, driverMax = 0)
-    assert(labels.count() == 6 && stats.tier == Dedup.CcTier.Propagation, stats.toString)
-    assert(warmThreads == 0, "a warm thread outlived a successful call")
-    // The call reads its pair lineage once, on the calling thread, so a
-    // poisoned pair list fails before any warm starts; a warm fails only
-    // when a round's checkpoint does. Warm a poisoned checkpoint directly:
-    // range-based, not a local relation, so the poison fails inside the
-    // warm's job, not during driver-side constant folding.
-    val poisoned = pairs.withColumn("id_a",
-      when(col("id_a") === 3L, raise_error(lit("cc-warm-poison"))).otherwise(col("id_a")))
-      .localCheckpoint(false)
-    val warms = new Dedup.CcWarms
-    val awaited = Future(scala.util.Try { warms.warm(poisoned); warms.await() })(
-      ExecutionContext.global)
-    val err = try Await.result(awaited, 2.minutes).failed.toOption
-        .getOrElse(fail("await must re-throw a failed warm"))
-      finally warms.close()
-    val messages = Iterator.iterate(err)(_.getCause).takeWhile(_ != null).map(_.getMessage)
-    assert(messages.exists(m => m != null && m.contains("cc-warm-poison")), err.toString)
-    assert(warmThreads == 0, "a warm thread outlived a failed warm")
   }
 
   test("connectedComponents fails loudly on a poisoned pair lineage on the driver tier") {

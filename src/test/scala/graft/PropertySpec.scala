@@ -226,15 +226,20 @@ class PropertySpec extends AnyFunSuite {
   test("connectedComponents equals a union-find reference on random graphs") {
     import org.apache.spark.sql.{DataFrame, Row}
     import Dedup.{CcStats, CcTier}
-    // the labels of both paths: the driver union-find and the rounds
-    def both(df: DataFrame): (Array[Row], Array[Row]) = {
+    // the labels of all three paths: the driver union-find, the
+    // propagation rounds and the stars rounds
+    def all3(df: DataFrame): (Array[Row], Array[Row], Array[Row]) = {
       val (viaDriver, dStats) = Dedup.connectedComponentsWithStats(df)
       // driverMax = -1: an empty pair list (0 <= 0 pairs) takes the rounds too
       val (viaRounds, rStats) = Dedup.connectedComponentsWithStats(df, driverMax = -1)
+      // maxIter = 0: no propagation round runs, the stars rounds label
+      val (viaStars, sStats) = Dedup.connectedComponentsWithStats(df, maxIter = 0, driverMax = -1)
       assert(dStats == CcStats(CcTier.DriverUnionFind, 0), dStats.toString)
       assert(rStats.tier == CcTier.Propagation, rStats.toString)
-      assert(viaDriver.schema.map(_.dataType) == viaRounds.schema.map(_.dataType))
-      (viaDriver.collect(), viaRounds.collect())
+      assert(sStats == CcStats(CcTier.Stars, 0), sStats.toString)
+      Seq(viaRounds, viaStars).foreach(l =>
+        assert(viaDriver.schema.map(_.dataType) == l.schema.map(_.dataType)))
+      (viaDriver.collect(), viaRounds.collect(), viaStars.collect())
     }
     // self-pairs, duplicates and both orientations of a pair all occur; an
     // endpoint is null with probability 1/12
@@ -256,8 +261,9 @@ class PropertySpec extends AnyFunSuite {
     def utf8Lt(a: String, b: String) = org.apache.spark.unsafe.types.UTF8String.fromString(a)
       .binaryCompare(org.apache.spark.unsafe.types.UTF8String.fromString(b)) < 0
     graphs.foreach { pairs =>
-      val (dl, rl) = both(pairs.toDF("id_a", "id_b"))
-      val (ds, rs) = both(pairs.map { case (a, b) => (a.map(str), b.map(str)) }.toDF("id_a", "id_b"))
+      val (dl, rl, sl) = all3(pairs.toDF("id_a", "id_b"))
+      val (ds, rs, ss) =
+        all3(pairs.map { case (a, b) => (a.map(str), b.map(str)) }.toDF("id_a", "id_b"))
       def longs(rows: Array[Row]) =
         rows.map(r => Option(r.getAs[java.lang.Long](0)) -> Option(r.getAs[java.lang.Long](1))).toMap
       def strs(rows: Array[Row]) =
@@ -266,6 +272,8 @@ class PropertySpec extends AnyFunSuite {
       assert(dl.length == longs(dl).size && ds.length == strs(ds).size, s"duplicate member on $pairs")
       assert(longs(dl) == longs(rl), s"long ids: driver vs rounds on $pairs")
       assert(strs(ds) == strs(rs), s"string ids: driver vs rounds on $pairs")
+      assert(sl.length == dl.length && longs(dl) == longs(sl), s"long ids: driver vs stars on $pairs")
+      assert(ss.length == ds.length && strs(ds) == strs(ss), s"string ids: driver vs stars on $pairs")
       // non-null members: the component minimum over the non-null pairs
       val full = pairs.collect { case (Some(a), Some(b)) => (a, b) }
       val loose = pairs.flatMap(p => p._1.toSeq ++ p._2.toSeq).map(x => (x, x))
@@ -276,25 +284,27 @@ class PropertySpec extends AnyFunSuite {
       assert(strs(ds).collect { case (Some(k), Some(v)) => k -> v } == refS,
         s"string ids vs reference on $pairs")
     }
-    // null endpoints, pinned to the rounds' answer: a null node joins no
+    // null endpoints, pinned on every path: a null node joins no
     // component and takes the least minimum among its non-null partners
     val withNulls = Seq[(Option[Long], Option[Long])]((Some(1L), Some(2L)), (Some(2L), None),
       (Some(5L), None), (Some(7L), Some(7L)), (None, None), (Some(8L), Some(9L)), (None, Some(9L)))
     val pinned = Map[Option[Long], Option[Long]](Some(1L) -> Some(1L), Some(2L) -> Some(1L),
       Some(5L) -> Some(5L), Some(7L) -> Some(7L), Some(8L) -> Some(8L), Some(9L) -> Some(8L),
       None -> Some(1L))
-    val (nd, nr) = both(withNulls.toDF("id_a", "id_b"))
-    Seq(nd, nr).foreach { rows =>
+    val (nd, nr, ns) = all3(withNulls.toDF("id_a", "id_b"))
+    Seq(nd, nr, ns).foreach { rows =>
       assert(rows.map(r => Option(r.getAs[java.lang.Long](0)).map(_.toLong) ->
         Option(r.getAs[java.lang.Long](1)).map(_.toLong)).toMap == pinned)
     }
-    val (onlyNull, _) = both(Seq[(Option[Long], Option[Long])]((None, None)).toDF("id_a", "id_b"))
-    assert(onlyNull.map(r => (r.isNullAt(0), r.isNullAt(1))).toSeq == Seq((true, true)))
+    val onlyNull = all3(Seq[(Option[Long], Option[Long])]((None, None)).toDF("id_a", "id_b"))
+    Seq(onlyNull._1, onlyNull._2, onlyNull._3).foreach { rows =>
+      assert(rows.map(r => (r.isNullAt(0), r.isNullAt(1))).toSeq == Seq((true, true)))
+    }
     // empty input, long and string ids
-    assert(both(Seq.empty[(Long, Long)].toDF("id_a", "id_b")) match {
-      case (d, r) => d.isEmpty && r.isEmpty })
-    assert(both(Seq.empty[(String, String)].toDF("id_a", "id_b")) match {
-      case (d, r) => d.isEmpty && r.isEmpty })
+    assert(all3(Seq.empty[(Long, Long)].toDF("id_a", "id_b")) match {
+      case (d, r, st) => d.isEmpty && r.isEmpty && st.isEmpty })
+    assert(all3(Seq.empty[(String, String)].toDF("id_a", "id_b")) match {
+      case (d, r, st) => d.isEmpty && r.isEmpty && st.isEmpty })
   }
 
   test("connectedComponentsStars equals connectedComponents on random graphs") {
