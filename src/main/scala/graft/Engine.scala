@@ -294,9 +294,12 @@ class Engine(spark: SparkSession) {
   }
 
   /** Tokenize `textCol` with trained BPE rules: adds `outCol` with the
-    * subword-token COUNT per row (the packing/budget currency; see
-    * `tp6_bpe_pack`). The rule chain encodes each DISTINCT word once and
-    * the (word → count) map broadcasts back — no corpus shuffle.
+    * subword-token COUNT per row (the packing/budget currency). The rule
+    * chain ([[graft.text.Bpe.encode]]) encodes each DISTINCT word once, so
+    * out-of-vocabulary words count too, and the (word → count) map
+    * broadcasts back — no corpus shuffle. Not what `tp6_bpe_pack` runs:
+    * tp6 trains on the corpus it packs, so it reads the counts off the
+    * trained table, which equals the encode for every in-vocab word.
     */
   def encodeBpeCounts(df: DataFrame, textCol: String,
       rules: Seq[graft.text.Bpe.MergeRule], outCol: String = "n_bpe_tokens"): DataFrame = {
@@ -328,20 +331,26 @@ class Engine(spark: SparkSession) {
       .drop("__ntok")
   }
 
-  /** n-gram-overlap decontamination: rows of `corpus` sharing at least one
-    * `n`-gram with `evalSet` (both keyed by `idCol`/`textCol`), with the
-    * per-doc hit count. The eval shingle set broadcasts — the corpus side
-    * never shuffles on shingle. See `dc1_decontaminate`.
+  /** n-gram-overlap decontamination (the GPT-3/PaLM recipe): rows of
+    * `corpus` sharing at least one `n`-gram with the `textCol` of `evalSet`,
+    * with the per-doc count of distinct shared `n`-grams as
+    * `n_hit_shingles`. Every corpus column but `textCol` passes through
+    * (`idCol` first), so it should be a function of `idCol`. The eval
+    * shingle set is the small axis — thousands of benchmark docs against
+    * the corpus — so it broadcasts: the corpus side never shuffles on
+    * shingle, and a corpus already clustered on `idCol` keeps that
+    * clustering through the per-doc count. Each side tokenizes only its
+    * own rows. `dc1_decontaminate` runs it.
     */
   def decontaminate(corpus: DataFrame, evalSet: DataFrame,
       idCol: String, textCol: String, n: Int = 3): DataFrame = {
-    def shingled(df: DataFrame) = df.select(col(idCol),
-      explode(array_distinct(Dedup.shingles(Dedup.tokens(col(textCol)), n)))
-        .as("__shingle"))
-    corpus.transform(shingled)
-      .join(broadcast(evalSet.transform(shingled).select("__shingle").distinct()),
-        "__shingle")
-      .groupBy(idCol)
+    val shingle =
+      explode(array_distinct(Dedup.shingles(Dedup.tokens(col(textCol)), n))).as("__shingle")
+    val keep = col(idCol) +: corpus.columns.filterNot(c => c == idCol || c == textCol)
+      .map(c => col(s"`$c`")).toSeq
+    corpus.select(keep :+ shingle: _*)
+      .join(broadcast(evalSet.select(shingle).distinct()), "__shingle")
+      .groupBy(keep: _*)
       .agg(count(lit(1)).as("n_hit_shingles"))
   }
 
@@ -349,7 +358,10 @@ class Engine(spark: SparkSession) {
     * construction: keep a row iff its id-hash lane falls under the
     * source's rate. Pure row function — task retries can't resample.
     * `rates` maps source value → keep probability in [0,1]; unlisted
-    * sources keep everything. See `sp3_mixture_sample`.
+    * sources keep everything. Not the lane `sp3_mixture_sample` draws:
+    * sp3 keeps the 2-hex-digit md5 lane ([[graft.agg.Stats.md5HexLane]])
+    * its DuckDB twin can replay, whose mod-100 bias this operator's
+    * calibrated 64-bit lane avoids.
     */
   def sampleMixture(df: DataFrame, idCol: String, sourceCol: String,
       rates: Map[String, Double]): DataFrame = {
@@ -385,26 +397,24 @@ class Engine(spark: SparkSession) {
   }
 
   /** CDC apply: fold an insert/update/delete change stream (`opCol` holds
-    * 'D' for deletes) into final table state with ONE `max_by` aggregation
-    * over the (tsCol, seqCol) ordering key — no window sort — then drop
-    * deleted keys. The nightly CDC-compaction shape: shuffle once on the
-    * primary key, no per-key driver state. See `d5_cdc_apply`.
+    * 'D' for deletes) into final table state — each key's last change by
+    * (tsCol, seqCol), the keyed last-row fold
+    * [[graft.operators.Upsert.lastRowPerKey]] — then drop deleted keys.
+    * The nightly CDC-compaction shape: shuffle once on the primary key, no
+    * per-key driver state. `d5_cdc_apply` runs the same fold and counts
+    * the deleted keys this drops.
     */
   def cdcApply(changes: DataFrame, keyCol: String, tsCol: String,
-      seqCol: String, opCol: String): DataFrame = {
-    val others = changes.columns.filterNot(_ == keyCol)
-    changes.groupBy(keyCol)
-      .agg(max_by(struct(others.map(col): _*),
-        struct(col(tsCol), col(seqCol))).as("__last"))
-      .select(col(keyCol) +: others.map(c => col(s"__last.`$c`").as(c)): _*)
-      .filter(col(opCol) =!= "D")
+      seqCol: String, opCol: String): DataFrame =
+    graft.operators.Upsert.lastRowPerKey(changes, Seq(keyCol), Seq(tsCol, seqCol))
+      .filter(col(s"`$opCol`") =!= "D")
       .drop(opCol)
-  }
 
   /** Leak-proof corpus split: the split is a pure function of the GROUP
     * key (crawl domain, repo, …), so near-identical rows clustered inside
     * a group can never straddle train/valid/test. Unbiased 64-bit lane
-    * (same reasoning as [[sampleMixture]]). See `sp4_group_split`.
+    * (same reasoning as [[sampleMixture]]). Not the lane `sp4_group_split`
+    * draws: sp4 keeps the oracle-paired 2-hex-digit md5 lane.
     */
   def groupSplit(df: DataFrame, groupCol: String,
       trainPct: Int = 80, validPct: Int = 10): DataFrame = {
@@ -419,7 +429,7 @@ class Engine(spark: SparkSession) {
     * mark the best-first bins whose cumulative tokens stay inside
     * `budgetFrac` of the corpus (the bin that crosses the budget is
     * included). The only window runs over the binned frame — cardinality
-    * is the bin count, never the corpus. See `tp2_curriculum`.
+    * is the bin count, never the corpus. `tp2_curriculum` runs it.
     */
   def curriculumSelect(df: DataFrame, binCol: Column, tokensCol: Column,
       budgetFrac: Double = 0.5): DataFrame = {
@@ -495,25 +505,39 @@ class Engine(spark: SparkSession) {
       .write.mode("overwrite").parquet(outDir)
 
   /** Line-level boilerplate removal (CommonCrawl/CCNet): drop every line
-    * appearing in more than `1/maxDocFraction` of documents, reassemble
-    * the rest in original order. Two corpus passes by design — the tiny
-    * high-frequency line set broadcasts into a re-scan instead of
-    * materializing the exploded corpus. See `dd14_line_dedup`. */
+    * whose occurrences outnumber `maxDocFraction` of the documents (a line
+    * repeated inside one document counts each time), reassemble the rest
+    * in original order as `textCol`, and count each document's `n_kept`
+    * and `n_dropped` lines. A document can lose every line; its text is
+    * then the empty string, not NULL. The documents are clustered on
+    * `idCol` once: both line passes read that one shuffle, and the per-doc
+    * regroup rides it, so the exploded lines never shuffle by document.
+    * Two line passes by design: pass 1 reduces to the tiny high-frequency
+    * line set, which broadcasts into pass 2 — a re-read is cheap, and
+    * materializing the exploded corpus (the one-pass alternative) is not.
+    * The threshold is relative, so the op is scale-stable.
+    * `dd14_line_dedup` runs it. */
   def lineDedup(df: DataFrame, idCol: String, textCol: String,
       maxDocFraction: Double = 0.05): DataFrame = {
-    def lines(d: DataFrame) = d
+    val lines = df.select(col(idCol), col(textCol))
+      .repartition(col(idCol))
       .select(col(idCol), posexplode(split(col(textCol), "\n")).as(Seq("pos", "line")))
     val denom = math.max(1L, math.round(1.0 / maxDocFraction))
-    val boiler = lines(df).groupBy("line").agg(count(lit(1)).as("nd"))
+    val boiler = lines.groupBy("line").agg(count(lit(1)).as("nd"))
       .crossJoin(broadcast(df.agg(count(lit(1)).as("n_total"))))
       .filter(col("nd") * denom > col("n_total"))
       .select(col("line"), lit(1).as("__b"))
-    lines(df).join(broadcast(boiler), Seq("line"), "left")
+    // collect_list skips the null-ed boilerplate rows and array_sort
+    // restores line order (pos is the struct's leading field)
+    lines.join(broadcast(boiler), Seq("line"), "left")
       .groupBy(idCol)
-      .agg(array_join(
-        expr("transform(array_sort(collect_list(CASE WHEN __b IS NULL " +
-          "THEN named_struct('pos', pos, 'line', line) END)), x -> x.line)"),
-        "\n").as(textCol))
+      .agg(
+        sum(when(col("__b").isNull, 1L).otherwise(0L)).as("n_kept"),
+        sum(when(col("__b").isNotNull, 1L).otherwise(0L)).as("n_dropped"),
+        array_join(
+          expr("transform(array_sort(collect_list(CASE WHEN __b IS NULL " +
+            "THEN named_struct('pos', pos, 'line', line) END)), x -> x.line)"),
+          "\n").as(textCol))
   }
 
   /** Exact substring-span duplication report (Lee et al.): per document,
@@ -540,24 +564,33 @@ class Engine(spark: SparkSession) {
   }
 
   /** Probability-proportional-to-size sample without replacement
-    * (sequential Poisson, Ohlsson 1998): the `k` rows with the smallest
-    * hash-uniform/weight key per stratum. Reproducible under task retry
-    * (hash-keyed, no rand()). See `sp6_pps_sample`. */
+    * (sequential Poisson, Ohlsson 1998): per stratum, the `k` rows with
+    * the smallest u/w, where u is the 16-bit md5 lane of `idCol`
+    * ([[graft.agg.Stats.md5HexLane]], 4 digits) plus one and w is
+    * `weightCol` — inclusion probability ≈ k·w/Σw, so heavy rows are
+    * proportionally favored. Reproducible under task retry (hash-keyed, no
+    * rand()). The only float op is one IEEE division of two integers,
+    * correctly rounded in any engine; no ln/pow, the reason this key was
+    * chosen over the Efraimidis–Spirakis form of the same πps family.
+    * Map-side keys, then the bounded-heap TopK: one shuffle of k·strata
+    * candidate rows. Adds the 1-based `rank` within the stratum.
+    * `sp6_pps_sample` runs it. */
   def ppsSample(df: DataFrame, idCol: String, weightCol: String,
       strataCols: Seq[String], k: Int): DataFrame = {
-    val h = (1 to 4).map(i =>
-      expr(s"instr('0123456789abcdef', substr(md5(cast(`$idCol` AS string)), $i, 1)) - 1") *
-        lit(math.pow(16, 4 - i).toLong)).reduce(_ + _)
+    val u = graft.agg.Stats.md5HexLane(col(idCol).cast("string"), 4).cast("long")
     graft.operators.TopK.perKey(
-      df.withColumn("__skey", (h + lit(1)).cast("double") / col(weightCol)),
+      df.withColumn("__skey", (u + lit(1)).cast("double") / col(weightCol)),
       keys = strataCols,
-      order = Seq("__skey" -> true, idCol -> true), k = k,
-      rankName = "__rank").drop("__skey", "__rank")
+      order = Seq("__skey" -> true, idCol -> true), k = k).drop("__skey")
   }
 
   /** Sliding-window chunking with overlap for RAG / long-context prep:
-    * one row per (doc, chunk), `window` tokens at `stride` spacing.
-    * See `tp3_chunk_overlap`. */
+    * one row per (doc, chunk), `window` tokens at `stride` spacing, with
+    * the chunk's `chunk_text` and its token count `chunk_tokens`. A short
+    * doc is one whole-doc chunk; a doc without tokens is one empty chunk
+    * of 0 tokens (the count cannot be re-derived from the text: splitting
+    * "" gives one piece). Pure per-row arithmetic — nothing crosses rows,
+    * so there is no shuffle. `tp3_chunk_overlap` runs it. */
   def chunkWithOverlap(df: DataFrame, idCol: String, textCol: String,
       window: Int = 512, stride: Int = 384): DataFrame =
     df.select(col(idCol), Dedup.tokens(col(textCol)).as("__ts"))
@@ -565,8 +598,10 @@ class Engine(spark: SparkSession) {
         s"sequence(0, CAST(greatest(ceil((size(__ts) - $window) / $stride.0), 0) AS INT))"))
         .as("chunk_id"))
       .select(col(idCol), col("chunk_id").cast("long").as("chunk_id"),
-        expr(s"array_join(slice(__ts, chunk_id * $stride + 1, $window), ' ')")
-          .as("chunk_text"))
+        expr(s"slice(__ts, chunk_id * $stride + 1, $window)").as("__chunk"))
+      .select(col(idCol), col("chunk_id"),
+        array_join(col("__chunk"), " ").as("chunk_text"),
+        size(col("__chunk")).cast("long").as("chunk_tokens"))
 
   /** BM25 top-k lexical retrieval for a batch of (query_id, term) pairs.
     * Exact rational-integer scoring (k1=6/5, b=3/4, linearized idf) — see
@@ -597,23 +632,40 @@ class Engine(spark: SparkSession) {
       order = Seq("score" -> false, idCol -> true), k = k)
   }
 
-  /** Snapshot diff: classify every key across two table versions as
-    * added / removed / changed / unchanged. `valCols` take part in the
-    * change test with null-safe equality. See `o6_snapshot_diff`. */
+  /** Snapshot diff (the table-format time-travel primitive): classify
+    * every key across two table versions as added / removed / changed /
+    * unchanged, with each side's values as `__a_<c>` / `__b_<c>` (NULL on
+    * the side that lacks the key). `valCols` take part in the change test
+    * with null-safe equality, so NULL→x is changed and NULL→NULL is not.
+    * Precondition: `keyCol` is unique within each snapshot.
+    *
+    * The full outer join is a TAG-UNION plus one groupBy on the key: each
+    * side contributes (key, its values, the other side's as NULL, a 0/1
+    * presence tag) and `max` folds each key's (at most two) rows back
+    * together — ONE exchange of the combined rows instead of the join's
+    * one per side plus a merge. Presence rides the tag, not value-nullness:
+    * a row whose values are all NULL is still present.
+    * `o6_snapshot_diff` runs it. */
   def snapshotDiff(a: DataFrame, b: DataFrame, keyCol: String,
       valCols: Seq[String]): DataFrame = {
-    // presence markers, not value-null tests: an all-null value tuple is a
-    // legitimate row and must not masquerade as absence
-    val av = a.select(col(keyCol) +:
-      (valCols.map(c => col(c).as(s"__a_$c")) :+ lit(1).as("__in_a")): _*)
-    val bv = b.select(col(keyCol) +:
-      (valCols.map(c => col(c).as(s"__b_$c")) :+ lit(1).as("__in_b")): _*)
+    // one side's rows: its values, the other side's as typed NULLs, and
+    // the presence tags
+    def side(d: DataFrame, other: DataFrame, inA: Int) = {
+      val (mine, theirs) = if (inA == 1) ("__a", "__b") else ("__b", "__a")
+      d.select((col(keyCol) +: valCols.flatMap(c => Seq(
+          col(c).as(s"${mine}_$c"),
+          lit(null).cast(other.schema(c).dataType).as(s"${theirs}_$c")))) ++
+        Seq(lit(inA).as("__in_a"), lit(1 - inA).as("__in_b")): _*)
+    }
+    val folded = (valCols.flatMap(c => Seq(s"__a_$c", s"__b_$c")) ++ Seq("__in_a", "__in_b"))
+      .map(c => max(c).as(c))
     val changed = valCols.map(c => !(col(s"__a_$c") <=> col(s"__b_$c")))
       .reduce(_ || _)
-    av.join(bv, Seq(keyCol), "full_outer")
+    side(a, b, 1).unionByName(side(b, a, 0))
+      .groupBy(keyCol).agg(folded.head, folded.tail: _*)
       .withColumn("status",
-        when(col("__in_a").isNull, lit("added"))
-          .when(col("__in_b").isNull, lit("removed"))
+        when(col("__in_a") === 0, lit("added"))
+          .when(col("__in_b") === 0, lit("removed"))
           .when(changed, lit("changed"))
           .otherwise(lit("unchanged")))
       .drop("__in_a", "__in_b")
@@ -625,7 +677,7 @@ class Engine(spark: SparkSession) {
     * dimension's key column. Returns one row per check:
     * (check_name, violations, passed) with integer violation counts —
     * the gate a pipeline consults before a training run reads the table.
-    * See `dq1_constraint_suite`. */
+    * `dq1_constraint_suite` runs it. */
   def constraintSuite(df: DataFrame, notNullCols: Seq[String],
       uniqueCols: Seq[String], predicates: Seq[(String, Column)] = Nil,
       refIntegrity: Option[(String, DataFrame, String)] = None): DataFrame = {
@@ -657,7 +709,9 @@ class Engine(spark: SparkSession) {
     * numerics → -1), so no released row is identifiable among fewer than
     * k peers. One QI-histogram aggregation (bounded by QI-domain
     * cardinality, not corpus size) + a broadcast join back — no window
-    * over raw rows. Adds a `suppressed` flag. See `pv1_k_anonymity`. */
+    * over raw rows. Adds the row's QI group size `qi_group_n` and a
+    * `suppressed` flag; a row with a NULL quasi-identifier has no group
+    * and is dropped. `pv1_k_anonymity` runs it. */
   def kAnonymize(df: DataFrame, quasiIds: Seq[String], k: Int): DataFrame = {
     val groups = df.groupBy(quasiIds.map(col): _*)
       .agg(count(lit(1)).as("__qi_n"))
@@ -669,7 +723,8 @@ class Engine(spark: SparkSession) {
       }
       d.withColumn(c, when(col("__qi_n") >= k, col(c)).otherwise(fallback))
     }
-    generalized.withColumn("suppressed", col("__qi_n") < k).drop("__qi_n")
+    generalized.withColumn("suppressed", col("__qi_n") < k)
+      .withColumnRenamed("__qi_n", "qi_group_n")
   }
 
   /** Reciprocal-rank fusion of N ranked retrieval lanes. Each lane is a
@@ -680,21 +735,26 @@ class Engine(spark: SparkSession) {
     * shuffle at the (key, id) grain, input bounded by Σ lane sizes — cap
     * each lane with a top-k upstream) and the final top-k rides the
     * bounded-heap TopKPerKey. A lane missing an item simply contributes
-    * nothing. Returns keyCols, idCol, n_lanes, rrf_score, rank.
-    * See `rr1_hybrid_rrf` for the two-lane BM25+KNN instance. */
+    * nothing. Each lane holds an item at most once per key. Returns
+    * keyCols, idCol, n_lanes, rrf_score, each lane's rank of the item as
+    * `<rankCol>_1` … `<rankCol>_N` in lane order (NULL where the lane
+    * lacks it), and the fused `rank`. `rr1_hybrid_rrf` runs the two-lane
+    * BM25+KNN instance. */
   def rrfFuse(lanes: Seq[DataFrame], keyCols: Seq[String], idCol: String,
       rankCol: String, k: Int, c: Int = 60): DataFrame = {
     require(lanes.nonEmpty, "rrfFuse needs at least one lane")
-    // `/` on longs is double division, but 10⁹ over a small positive
-    // divisor sits far inside double's 53-bit exactness window, so the
-    // truncating cast equals exact integer `div` for every rank.
-    val contrib = lanes.map(_.select(
-      (keyCols.map(col) :+ col(idCol) :+
-        (lit(1000000000L) / (lit(c.toLong) + col(rankCol).cast("long")))
-          .cast("long").as("__contrib")): _*))
+    val laneRanks = lanes.indices.map(j => s"${rankCol}_${j + 1}")
+    val contrib = lanes.zipWithIndex.map { case (lane, i) =>
+      val rank = col(rankCol).cast("long")
+      lane.select((keyCols.map(col) :+ col(idCol) :+
+        call_function("div", lit(1000000000L), lit(c.toLong) + rank).as("__contrib")) ++
+        laneRanks.zipWithIndex.map { case (name, j) =>
+          (if (j == i) rank else lit(null).cast("long")).as(name) }: _*)
+    }
     val fused = contrib.reduce(_ unionByName _)
       .groupBy((keyCols :+ idCol).map(col): _*)
-      .agg(count(lit(1)).as("n_lanes"), sum("__contrib").as("rrf_score"))
+      .agg(count(lit(1)).as("n_lanes"),
+        (sum("__contrib").as("rrf_score") +: laneRanks.map(n => max(n).as(n))): _*)
     graft.operators.TopK.perKey(fused, keys = keyCols,
       order = Seq("rrf_score" -> false, idCol -> true), k = k)
   }
@@ -705,11 +765,12 @@ class Engine(spark: SparkSession) {
     * each cell in exact basis points against the cohort size. Two
     * co-partitioned shuffles on the user column plus one at the cohort
     * grain; the cohort-size frame is weeks-sized, so it broadcasts at
-    * any corpus scale. See `ret1_cohort_retention`. */
+    * any corpus scale. Returns cohort_week, offset_weeks, n_users,
+    * cohort_size, retention_bp. `ret1_cohort_retention` runs it. */
   def cohortRetention(df: DataFrame, userCol: String, tsCol: String): DataFrame = {
     val weeks = df.filter(col(tsCol).isNotNull && col(userCol).isNotNull)
       .select(col(userCol).as("__user"),
-        (unix_micros(col(tsCol)) / lit(604800000000L)).cast("long").as("__week"))
+        call_function("div", unix_micros(col(tsCol)), lit(604800000000L)).as("__week"))
     val first = weeks.groupBy("__user").agg(min("__week").as("cohort_week"))
     val cells = weeks.join(first, "__user")
       .groupBy(col("cohort_week"),
@@ -718,7 +779,7 @@ class Engine(spark: SparkSession) {
     val sizes = first.groupBy("cohort_week").agg(count(lit(1)).as("cohort_size"))
     cells.join(broadcast(sizes), "cohort_week")
       .withColumn("retention_bp",
-        (col("n_users") * 10000L / col("cohort_size")).cast("long"))
+        call_function("div", col("n_users") * 10000L, col("cohort_size")))
   }
 
   /** Ordered-funnel stage timestamps: per user, the first time each step

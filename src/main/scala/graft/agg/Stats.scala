@@ -40,6 +40,21 @@ object Stats {
     floor(c * p + 0.5) / p
   }
 
+  /** The oracle-paired md5 hash lane: the first `digits` hex digits of
+    * `md5(s)` read as one base-16 INT (uniform over 0 until 16^digits). Each
+    * digit is parsed back from the hex text, exactly as the DuckDB twin
+    * writes it — `instr('0123456789abcdef', substr(md5(s), i, 1)) - 1`, times
+    * 16^(digits - i), summed — so both engines draw the same lane. Callers
+    * that want a LONG lane cast the result.
+    */
+  def md5HexLane(s: Column, digits: Int): Column = {
+    require(digits >= 1 && digits <= 7, s"an int lane holds 1 to 7 hex digits, got $digits")
+    val hex = md5(s)
+    (1 to digits).map(i =>
+      (call_function("instr", lit("0123456789abcdef"), substring(hex, i, 1)) - 1) *
+        lit(1 << (4 * (digits - i)))).reduce(_ + _)
+  }
+
   /** Order-independent money sum: per-row cast to DECIMAL(30,10) — exact
     * for the fixtures' ≤4-decimal money/measurement doubles (6 guard
     * digits below the finest input decimal) — then an EXACT decimal sum,

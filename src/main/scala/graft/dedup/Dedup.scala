@@ -185,9 +185,9 @@ object Dedup {
     val nGroups = (WideBits + GroupSize - 1) / GroupSize
     // The 16 hex digits come from ONE native graft_md5_split digest (per-
     // thread MessageDigest reuse, no 32-char hex string, no parse-back):
-    // digit d == nibble d-1 == (hi >> (16-d)*4) & 15 — identical to
-    // instr('0123456789abcdef', substr(md5(t), d, 1)) - 1, so the DuckDB
-    // oracle (which keeps the hex form) is bit-identical.
+    // digit d == nibble d-1 == (hi >> (16-d)*4) & 15 — identical to digit
+    // d of the hex-text lane Stats.md5HexLane, so the DuckDB oracle (which
+    // keeps the hex form) is bit-identical.
     val withDigits = docTokenCounts
       .withColumn("hi", element_at(graft.expressions.Md5Split(col("token")), 1))
       .select(

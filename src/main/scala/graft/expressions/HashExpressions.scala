@@ -22,9 +22,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Parity: nibble `i` (0-based, hex-char order) of the digest is
   * `(hi >>> (60 - 4*i)) & 15` for `i < 16` and
-  * `(lo >>> (124 - 4*i)) & 15` for `i >= 16` — identical to
-  * `instr('0123456789abcdef', substr(md5(s), i+1, 1)) - 1`, so DuckDB
-  * oracles written against the hex form are unaffected.
+  * `(lo >>> (124 - 4*i)) & 15` for `i >= 16` — identical to digit `i+1`
+  * of the hex-text lane [[graft.agg.Stats.md5HexLane]], so DuckDB oracles
+  * written against the hex form are unaffected.
   */
 case class Md5Split(child: Expression) extends UnaryExpression {
 

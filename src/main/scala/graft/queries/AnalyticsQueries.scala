@@ -838,43 +838,28 @@ private[graft] object AnalyticsQueries {
         .orderBy("user_id")
     },
 
-    // ---- data-quality constraint suite (Deequ-shaped): ONE pass over
-    // orders computes completeness / uniqueness / range / domain checks
-    // as plain aggregates; referential integrity is a broadcast
-    // anti-join against the customer key column. Metrics are integer
-    // violation counts (hash-exact), one row per check — the gate a
-    // pipeline consults before a training run may read the table. The
-    // 100k price-ceiling check fails on the fixture by design, so the
+    // ---- data-quality constraint suite (Deequ-shaped), through
+    // Engine.constraintSuite: ONE pass over orders computes completeness /
+    // uniqueness / range / domain checks as plain aggregates; referential
+    // integrity is a broadcast anti-join against the customer key column.
+    // Metrics are integer violation counts (hash-exact), one row per check
+    // — the gate a pipeline consults before a training run may read the
+    // table. The keys are renamed first so the checks come out named
+    // completeness_custkey / uniqueness_orderkey / ref_integrity_custkey.
+    // The 100k price-ceiling check fails on the fixture by design, so the
     // oracle discriminates pass from fail. ------------------------------
     "dq1_constraint_suite" -> { (s, dir) =>
       val o = Tables.orders(s, dir)
-      val base = o.agg(
-        sum(when(col("o_custkey").isNull, 1L).otherwise(0L)).as("null_cust"),
-        (count(lit(1)) - countDistinct(col("o_orderkey"))).as("dup_keys"),
-        sum(when(col("o_totalprice") <= 0, 1L).otherwise(0L)).as("nonpos_price"),
-        sum(when(col("o_totalprice") > 100000, 1L).otherwise(0L)).as("big_price"),
-        sum(when(!col("o_orderstatus").isin("O", "F", "P"), 1L).otherwise(0L))
-          .as("bad_status"))
-      val orphans = o.select("o_custkey").filter(col("o_custkey").isNotNull)
-        .join(broadcast(Tables.customer(s, dir).select("c_custkey")),
-          col("o_custkey") === col("c_custkey"), "left_anti")
-        .agg(count(lit(1)).as("orphan_fk"))
-      base.crossJoin(orphans) // both sides are single aggregate rows
-        .select(explode(array(
-          struct(lit("completeness_custkey").as("check_name"),
-            col("null_cust").as("violations")),
-          struct(lit("domain_orderstatus").as("check_name"),
-            col("bad_status").as("violations")),
-          struct(lit("range_totalprice_le_100k").as("check_name"),
-            col("big_price").as("violations")),
-          struct(lit("range_totalprice_pos").as("check_name"),
-            col("nonpos_price").as("violations")),
-          struct(lit("ref_integrity_custkey").as("check_name"),
-            col("orphan_fk").as("violations")),
-          struct(lit("uniqueness_orderkey").as("check_name"),
-            col("dup_keys").as("violations")))).as("c"))
-        .select(col("c.check_name"), col("c.violations"),
-          (col("c.violations") === 0L).as("passed"))
+        .select(col("o_custkey").as("custkey"), col("o_orderkey").as("orderkey"),
+          col("o_totalprice"), col("o_orderstatus"))
+      new Engine(s).constraintSuite(o,
+          notNullCols = Seq("custkey"), uniqueCols = Seq("orderkey"),
+          predicates = Seq(
+            "domain_orderstatus" -> col("o_orderstatus").isin("O", "F", "P"),
+            "range_totalprice_le_100k" -> (col("o_totalprice") <= 100000),
+            "range_totalprice_pos" -> (col("o_totalprice") > 0)),
+          refIntegrity = Some(("custkey",
+            Tables.customer(s, dir).select("c_custkey"), "c_custkey")))
         .orderBy("check_name")
     },
 
@@ -900,28 +885,14 @@ private[graft] object AnalyticsQueries {
         .limit(100)
     },
 
-    // ---- cohort retention: users bucketed by first-seen epoch-week
-    // (integer `unix_micros div week` — no date_trunc, whose ISO-week
-    // conventions are a cross-engine trap), then distinct-user counts
-    // per (cohort, offset) cell and an exact basis-point retention rate
-    // (n·10⁴ div size). Two shuffles on user_id (first-seen + join back,
-    // co-partitioned) and one on the cohort grain; the per-cohort size
-    // frame is weeks-sized, so it broadcasts at any corpus scale. --------
+    // ---- cohort retention through Engine.cohortRetention: users bucketed
+    // by first-seen epoch-week (integer `unix_micros div week` — no
+    // date_trunc, whose ISO-week conventions are a cross-engine trap), then
+    // distinct-user counts per (cohort, offset) cell and an exact
+    // basis-point retention rate (n·10⁴ div size). ------------------------
     "ret1_cohort_retention" -> { (s, dir) =>
-      val weeks = Tables.events(s, dir)
-        .filter(col("ts").isNotNull && col("user_id").isNotNull)
-        .select(col("user_id"), expr("unix_micros(ts) div 604800000000L").as("week"))
-      val first = weeks.groupBy("user_id").agg(min("week").as("cohort_week"))
-      val cells = weeks.join(first, "user_id")
-        .groupBy(col("cohort_week"),
-          (col("week") - col("cohort_week")).as("offset_weeks"))
-        .agg(countDistinct("user_id").as("n_users"))
-      val sizes = first.groupBy("cohort_week")
-        .agg(count(lit(1)).as("cohort_size"))
-      cells.join(broadcast(sizes), "cohort_week")
-        .select(col("cohort_week"), col("offset_weeks"), col("n_users"),
-          col("cohort_size"),
-          expr("n_users * 10000L div cohort_size").as("retention_bp"))
+      new Engine(s).cohortRetention(Tables.events(s, dir), "user_id", "ts")
+        .select("cohort_week", "offset_weeks", "n_users", "cohort_size", "retention_bp")
         .orderBy("cohort_week", "offset_weeks")
     },
 

@@ -378,24 +378,19 @@ private[graft] object DedupQueries {
         .orderBy("doc_id")
     },
 
-    // ---- line-level boilerplate removal (the CommonCrawl/CCNet recipe):
-    // drop every LINE that appears in >5% of documents, keep the rest,
-    // reassemble each document in original line order. The fixture text is
-    // single-line, so boilerplate lines are injected deterministically
-    // (the ta6 pattern): a footer on EVERY doc (must drop), a newsletter
-    // line on every 3rd (must drop), and two low-frequency promo variants
-    // (must KEEP — shared-but-rare is the no-fire case). Two corpus scans
-    // by design: pass 1 reduces to the tiny high-frequency line set, which
-    // broadcasts into pass 2's re-scan — at 100 TB a re-scan is cheap and
-    // materializing the exploded corpus (the one-pass alternative) is not.
-    // The threshold is RELATIVE (nd*20 > N), so the op is scale-stable.
-    // Per-doc reassembly: collect_list skips the null-ed boilerplate
-    // rows, array_sort restores line order (pos is the struct's leading
-    // field), and the groupBy rides the pass-2 repartition clustering —
-    // no extra shuffle. A doc can lose every line (clone-heavy corpora);
-    // both sides pin that to the empty string, not NULL. ------------------
+    // ---- line-level boilerplate removal (the CommonCrawl/CCNet recipe),
+    // through Engine.lineDedup: drop every LINE that appears in >5% of
+    // documents, keep the rest, reassemble each document in original line
+    // order. The fixture text is single-line, so boilerplate lines are
+    // injected deterministically (the ta6 pattern): a footer on EVERY doc
+    // (must drop), a newsletter line on every 3rd (must drop), and two
+    // low-frequency promo variants (must KEEP — shared-but-rare is the
+    // no-fire case). Each doc contributes a line at most once, so the
+    // operator's line-occurrence count IS the containing-doc count, and
+    // the operator's doc_id clustering spreads the single-row-group
+    // source. ------------------------------------------------------------
     "dd14_line_dedup" -> { (s, dir) =>
-      def withLines(df: DataFrame): DataFrame = df
+      val docs = Tables.documents(s, dir)
         .select(col("doc_id"),
           concat(
             col("text"),
@@ -406,31 +401,10 @@ private[graft] object DedupQueries {
               concat(lit("\npromo code "),
                 expr("cast((doc_id div 50) % 2 AS string)")))
               .otherwise(lit(""))).as("text2"))
-        .repartition(32, col("doc_id"))
-        .select(col("doc_id"),
-          posexplode(split(col("text2"), "\n")).as(Seq("pos", "line")))
-      val docs = Tables.documents(s, dir)
-      // each doc contributes a line at most once (single content line +
-      // distinct injected lines), so count(*) IS the containing-doc count
-      // — no count(distinct) double-aggregation
-      val freq = withLines(docs).groupBy("line").agg(count(lit(1)).as("nd"))
-      val total = docs.agg(count(lit(1)).as("n_total"))
-      val boiler = freq.crossJoin(broadcast(total))
-        .filter(col("nd") * 20 > col("n_total"))
-        .select(col("line"), lit(1).as("is_b"))
-      withLines(docs)
-        .join(broadcast(boiler), Seq("line"), "left")
-        .groupBy("doc_id")
-        .agg(
-          sum(when(col("is_b").isNull, 1L).otherwise(0L)).as("n_kept"),
-          sum(when(col("is_b").isNotNull, 1L).otherwise(0L)).as("n_dropped"),
-          array_join(
-            expr("transform(array_sort(collect_list(CASE WHEN is_b IS NULL " +
-              "THEN named_struct('pos', pos, 'line', line) END)), x -> x.line)"),
-            "\n").as("clean_text"))
+      new Engine(s).lineDedup(docs, "doc_id", "text2", maxDocFraction = 0.05)
         .select(col("doc_id"), col("n_kept"), col("n_dropped"),
-          length(col("clean_text")).cast("long").as("clean_len"),
-          md5(col("clean_text")).as("clean_md5"))
+          length(col("text2")).cast("long").as("clean_len"),
+          md5(col("text2")).as("clean_md5"))
         .orderBy("doc_id")
     },
 
@@ -504,25 +478,21 @@ private[graft] object DedupQueries {
         .orderBy("d")
     },
 
-    // ---- k-anonymity suppression (k = 8): quasi-identifier groups
-    // (nation × market segment) smaller than k are generalized to
-    // (-1, '*') so no released row is identifiable among fewer than k
-    // peers. One hash aggregation builds the QI histogram — bounded by
-    // QI-domain cardinality, not corpus size — and a broadcast join
-    // stamps each row with its group size; no window over raw rows. -----
+    // ---- k-anonymity suppression (k = 8), through Engine.kAnonymize:
+    // quasi-identifier groups (nation × market segment) smaller than k are
+    // generalized to (-1, '*') so no released row is identifiable among
+    // fewer than k peers. One hash aggregation builds the QI histogram —
+    // bounded by QI-domain cardinality, not corpus size — and a broadcast
+    // join stamps each row with its group size; no window over raw rows.
+    // The nation key is widened to bigint first, so its fallback is -1L. --
     "pv1_k_anonymity" -> { (s, dir) =>
       val c = Tables.customer(s, dir)
-      val groups = c.groupBy("c_nationkey", "c_mktsegment")
-        .agg(count(lit(1)).as("group_n"))
-      c.join(broadcast(groups), Seq("c_nationkey", "c_mktsegment"))
-        .select(
-          col("c_custkey"),
-          when(col("group_n") >= 8, col("c_nationkey").cast("bigint"))
-            .otherwise(lit(-1L)).as("nation_qi"),
-          when(col("group_n") >= 8, col("c_mktsegment"))
-            .otherwise(lit("*")).as("segment_qi"),
-          col("group_n"),
-          (col("group_n") < 8).as("suppressed"))
+        .select(col("c_custkey"), col("c_nationkey").cast("bigint").as("c_nationkey"),
+          col("c_mktsegment"))
+      new Engine(s).kAnonymize(c, Seq("c_nationkey", "c_mktsegment"), 8)
+        .select(col("c_custkey"), col("c_nationkey").as("nation_qi"),
+          col("c_mktsegment").as("segment_qi"), col("qi_group_n").as("group_n"),
+          col("suppressed"))
         .orderBy("c_custkey")
     },
 

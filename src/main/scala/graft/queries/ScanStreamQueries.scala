@@ -728,26 +728,15 @@ private[graft] object ScanStreamQueries {
     },
 
     // ---- benchmark decontamination: flag training documents sharing any
-    // 3-gram with a held-out eval set (the GPT-3/PaLM n-gram-overlap
-    // recipe, shortened to 3-grams for the fixture corpus). The eval
-    // shingle set is the SMALL axis — thousands of benchmark docs against
-    // a 100 TB corpus — so it broadcasts and the corpus-side explosion
-    // joins map-side with no shuffle of the big frame on shingle;
+    // 3-gram with a held-out eval set (the doc_id % 97 == 0 slice), through
+    // Engine.decontaminate, whose eval shingle set broadcasts —
     // PlanQualitySpec gates the BroadcastHashJoin. ------------------------
     "dc1_decontaminate" -> { (s, dir) =>
-      val sh = Tables.documents(s, dir)
-        .repartition(32, col("doc_id")) // single row-group source (dd2 reason)
-        .select(col("doc_id"), col("source"),
-          explode(array_distinct(Dedup.shingles(Dedup.tokens(col("text")), 3)))
-            .as("shingle"))
-        // both branches (eval-set distinct + corpus probe) read this frame:
-        // materialize the shingle explode once instead of tokenizing twice
-        .localCheckpoint(false)
-      val evalSet = sh.filter(col("doc_id") % 97 === 0).select("shingle").distinct()
-      sh.filter(col("doc_id") % 97 =!= 0)
-        .join(broadcast(evalSet), "shingle")
-        .groupBy("doc_id", "source")
-        .agg(count(lit(1)).as("n_hit_shingles"))
+      val docs = Tables.documents(s, dir).select("doc_id", "source", "text")
+      new Engine(s).decontaminate(
+          docs.filter(col("doc_id") % 97 =!= 0)
+            .repartition(32, col("doc_id")), // single row-group source (dd2 reason)
+          docs.filter(col("doc_id") % 97 === 0), "doc_id", "text", 3)
         .orderBy("doc_id")
     },
 
@@ -845,21 +834,18 @@ private[graft] object ScanStreamQueries {
     },
 
     // ---- CDC apply: fold an insert/update/delete change stream into final
-    // table state in ONE aggregation — max_by over the (ts, event_id)
-    // ordering key picks each key's last change without a window sort
-    // (the d1 upsert recipe), then delete-ops drop the key. The op code is
-    // derived deterministically from the row so the oracle sees the same
-    // log. At 100 TB this is the nightly CDC-compaction shape: shuffle
-    // once on the primary key, no per-key state on the driver. ------------
+    // table state — each key's last change by (ts, event_id), the keyed
+    // last-row fold Engine.cdcApply runs (Upsert.lastRowPerKey: one max_by
+    // aggregate, no window sort) — then delete-ops drop the key. The query
+    // calls the fold, not cdcApply, because it also counts the deleted
+    // keys. The op code is derived deterministically from the row so the
+    // oracle sees the same log. -------------------------------------------
     "d5_cdc_apply" -> { (s, dir) =>
-      Tables.events(s, dir)
-        .withColumn("op",
-          when(col("event_id") % 10 === 0, lit("D")).otherwise(lit("U")))
-        .groupBy("user_id")
-        .agg(max_by(struct(col("op"), col("value")),
-          struct(col("ts"), col("event_id"))).as("last"))
-        .select(col("user_id"), col("last.op").as("op"),
-          col("last.value").as("value"))
+      val changes = Tables.events(s, dir)
+        .select(col("user_id"), col("ts"), col("event_id"),
+          when(col("event_id") % 10 === 0, lit("D")).otherwise(lit("U")).as("op"),
+          col("value"))
+      Upsert.lastRowPerKey(changes, Seq("user_id"), Seq("ts", "event_id"))
         .groupBy((col("user_id") % 10).as("bucket"))
         .agg(
           sum(when(col("op") =!= "D", 1L).otherwise(0L)).as("n_live"),
@@ -920,16 +906,10 @@ private[graft] object ScanStreamQueries {
     // ---- snapshot diff (the table-format time-travel primitive): two
     // versions of the orders table — derived deterministically so the
     // oracle can re-derive them — each key classified added / removed /
-    // changed / unchanged, with integer CENTS for the change test (no
-    // float equality). Output is the status-grain audit row a lakehouse
-    // diff job emits: key counts, a key checksum (sum of keys — cheap
-    // drift detector), and the net money delta. The full-outer join is
-    // computed as a TAG-UNION + single groupBy on the key: each side
-    // contributes (key, cents, side) rows and max-by-side folds them back
-    // together — ONE exchange of the combined rows instead of the
-    // join planner's two (one per side) plus a merge, which at 100 TB
-    // halves the shuffle IO of the diff. Semantics are identical because
-    // the key is unique within each snapshot. ----------------------------
+    // changed / unchanged by Engine.snapshotDiff, with integer CENTS for
+    // the change test (no float equality). Output is the status-grain
+    // audit row a lakehouse diff job emits: key counts, a key checksum
+    // (sum of keys — cheap drift detector), and the net money delta. -----
     "o6_snapshot_diff" -> { (s, dir) =>
       val base = Tables.orders(s, dir)
         .select(col("o_orderkey"),
@@ -939,29 +919,12 @@ private[graft] object ScanStreamQueries {
         .withColumn("cents",
           when(col("o_orderkey") % 5 === 0, col("cents") + 500)
             .otherwise(col("cents")))
-      // presence rides its own 0/1 tag, NOT value-nullness: a snapshot row
-      // whose cents is NULL is still PRESENT, and the former cents_a-isNull
-      // test misclassified it as added/removed (round-12 null fuzz).
-      // changed = null-safe inequality (IS DISTINCT FROM), so NULL→500 is
-      // 'changed', NULL→NULL is 'unchanged' — mirrored in the oracle SQL.
-      snapA.select(col("o_orderkey"), col("cents").as("cents_a"),
-          lit(null).cast("long").as("cents_b"), lit(1).as("__a"), lit(0).as("__b"))
-        .unionAll(snapB.select(col("o_orderkey"),
-          lit(null).cast("long").as("cents_a"), col("cents").as("cents_b"),
-          lit(0).as("__a"), lit(1).as("__b")))
-        .groupBy("o_orderkey")
-        .agg(max("cents_a").as("cents_a"), max("cents_b").as("cents_b"),
-          max("__a").as("__a"), max("__b").as("__b"))
-        .withColumn("status",
-          when(col("__a") === 0, lit("added"))
-            .when(col("__b") === 0, lit("removed"))
-            .when(!(col("cents_a") <=> col("cents_b")), lit("changed"))
-            .otherwise(lit("unchanged")))
+      new Engine(s).snapshotDiff(snapA, snapB, "o_orderkey", Seq("cents"))
         .groupBy("status")
         .agg(count(lit(1)).as("n"),
           sum("o_orderkey").as("key_sum"),
-          sum(coalesce(col("cents_b"), lit(0L)) -
-            coalesce(col("cents_a"), lit(0L))).as("net_cents_delta"))
+          sum(coalesce(col("__b_cents"), lit(0L)) -
+            coalesce(col("__a_cents"), lit(0L))).as("net_cents_delta"))
         .orderBy("status")
     },
 

@@ -391,15 +391,9 @@ private[graft] object StreamingQueries {
             case None => batch.toDF()
           }
           val next = s"$gens/gen_$batchId"
-          // the generation keeps the EVENT schema (incl. event_id) so the
-          // next batch's merge can still tie-break on (ts, event_id)
-          merged.groupBy("user_id")
-            .agg(max_by(
-              struct(col("event_id"), col("ts"), col("event_type"), col("value")),
-              struct(col("ts"), col("event_id"))).as("last"))
-            .select(col("last.event_id").as("event_id"), col("last.ts").as("ts"),
-              col("user_id"), col("last.event_type").as("event_type"),
-              col("last.value").as("value"))
+          // the keyed last-row fold keeps the EVENT schema (incl. event_id),
+          // so the next batch's merge can still tie-break on (ts, event_id)
+          graft.operators.Upsert.lastRowPerKey(merged, Seq("user_id"), Seq("ts", "event_id"))
             .write.mode("overwrite").parquet(next)
           current = Some(next)
           ()

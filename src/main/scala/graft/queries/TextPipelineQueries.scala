@@ -71,9 +71,7 @@ private[graft] object TextPipelineQueries {
     // ---- on any engine/cluster (no RNG), the training-corpus staple --------
     "sp1_hash_split" -> { (s, dir) =>
       // first 2 md5 hex digits of the id → uniform 0..255, engine-neutral
-      val hexVal = (1 to 2).map(i =>
-        (expr(s"instr('0123456789abcdef', substr(md5(cast(doc_id AS string)), $i, 1)) - 1") *
-          lit(math.pow(16, 2 - i).toInt))).reduce(_ + _)
+      val hexVal = Stats.md5HexLane(col("doc_id").cast("string"), 2)
       Tables.documents(s, dir)
         .withColumn("h", hexVal % 100)
         .withColumn("split",
@@ -471,9 +469,7 @@ private[graft] object TextPipelineQueries {
       val clean = deduped.filter(col("doc_id") % 97 =!= 0)
         .join(contaminated, Seq("doc_id"), "left_anti")
         .localCheckpoint(false)
-      val hv = (1 to 2).map(i =>
-        (expr(s"instr('0123456789abcdef', substr(md5(cast(doc_id AS string)), $i, 1)) - 1") *
-          lit(math.pow(16, 2 - i).toInt))).reduce(_ + _) % 100
+      val hv = Stats.md5HexLane(col("doc_id").cast("string"), 2) % 100
       val sampled = clean
         .filter(hv < (expr("CAST(substr(source, 4) AS INT) % 4") * 25 + 25))
         .localCheckpoint(false)
@@ -498,9 +494,7 @@ private[graft] object TextPipelineQueries {
     // retry is a classic silent-skew bug), reruns are reproducible, and
     // the whole thing is map-side — no shuffle before the audit agg. -----
     "sp3_mixture_sample" -> { (s, dir) =>
-      val hexVal = (1 to 2).map(i =>
-        (expr(s"instr('0123456789abcdef', substr(md5(cast(doc_id AS string)), $i, 1)) - 1") *
-          lit(math.pow(16, 2 - i).toInt))).reduce(_ + _)
+      val hexVal = Stats.md5HexLane(col("doc_id").cast("string"), 2)
       Tables.documents(s, dir)
         .withColumn("h", hexVal % 100)
         .withColumn("rate_pct",
@@ -518,24 +512,16 @@ private[graft] object TextPipelineQueries {
     // prep step tp1 does NOT cover: tp1 concatenates docs into fixed
     // windows; this SPLITS each long doc into 32-token chunks with a
     // 24-token stride so every token keeps ≥8 tokens of context at a
-    // chunk boundary). Pure per-row arithmetic — sequence+explode+slice
-    // are codegen'd builtins, chunk identity is (doc_id, chunk_id), and
-    // NOTHING crosses rows: no shuffle at all until the presentation
-    // sort. Short docs degrade to one whole-doc chunk; the md5 pins the
+    // chunk boundary), through Engine.chunkWithOverlap — per-row
+    // arithmetic, no shuffle until the presentation sort. The md5 pins the
     // exact chunk text, so stride/window off-by-ones cannot hide. --------
     "tp3_chunk_overlap" -> { (s, dir) =>
-      Tables.documents(s, dir)
-        .repartition(32, col("doc_id")) // single-row-group source (dd2 reason)
-        .select(col("doc_id"), Dedup.tokens(col("text")).as("ts"))
-        .select(col("doc_id"), col("ts"),
-          explode(expr(
-            "sequence(0, CAST(greatest(ceil((size(ts) - 32) / 24.0), 0) AS INT))"))
-            .as("chunk_id"))
-        .select(col("doc_id"), col("chunk_id").cast("long").as("chunk_id"),
-          expr("slice(ts, chunk_id * 24 + 1, 32)").as("chunk"))
-        .select(col("doc_id"), col("chunk_id"),
-          size(col("chunk")).cast("long").as("n_tokens"),
-          md5(array_join(col("chunk"), " ")).as("chunk_md5"))
+      new Engine(s).chunkWithOverlap(
+          Tables.documents(s, dir)
+            .repartition(32, col("doc_id")), // single-row-group source (dd2 reason)
+          "doc_id", "text", window = 32, stride = 24)
+        .select(col("doc_id"), col("chunk_id"), col("chunk_tokens").as("n_tokens"),
+          md5(col("chunk_text")).as("chunk_md5"))
         .orderBy("doc_id", "chunk_id")
     },
 
@@ -570,9 +556,7 @@ private[graft] object TextPipelineQueries {
     // domain, same repo). Same oracle-paired md5-lane recipe as sp1;
     // map-side decision, one shuffle for the audit agg. -------------------
     "sp4_group_split" -> { (s, dir) =>
-      val hv = (1 to 2).map(i =>
-        (expr(s"instr('0123456789abcdef', substr(md5(source), $i, 1)) - 1") *
-          lit(math.pow(16, 2 - i).toInt))).reduce(_ + _) % 100
+      val hv = Stats.md5HexLane(col("source"), 2) % 100
       Tables.documents(s, dir)
         .withColumn("split",
           when(hv < 80, "train").when(hv < 90, "valid").otherwise(lit("test")))
@@ -676,28 +660,35 @@ private[graft] object TextPipelineQueries {
     // ---- token-budget curriculum selection: bin documents by a quality
     // proxy (integer-exact avg word length), then take bins best-first
     // until half the corpus token budget is spent — the data-selection
-    // step that turns scored corpora into a training mixture. The heavy
-    // pass is one groupBy with a FIXED-width bin key (no global sort, no
-    // ntile over raw rows); the cumulative window runs over the binned
-    // frame whose cardinality is the bin count, not the corpus. ----------
+    // step that turns scored corpora into a training mixture — through
+    // Engine.curriculumSelect. The heavy pass is one groupBy with a
+    // FIXED-width bin key (no global sort, no ntile over raw rows); the
+    // cumulative window runs over the binned frame whose cardinality is the
+    // bin count, not the corpus. -----------------------------------------
     "tp2_curriculum" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val bins = Tables.documents(s, dir)
+      val docs = Tables.documents(s, dir)
         .withColumn("ntok", size(Dedup.tokens(col("text"))))
         .filter(col("ntok") > 0)
-        .withColumn("score_bin",
-          least(greatest(expr("n_chars div ntok"), lit(3L)), lit(9L)))
-        .groupBy("score_bin")
-        .agg(count(lit(1)).as("n_docs"), sum("ntok").as("n_tokens"))
-      val best = Window.orderBy(col("score_bin").desc)
-      bins
-        .withColumn("cum_tokens", sum("n_tokens")
-          .over(best.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .withColumn("total", sum("n_tokens")
-          .over(best.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-        .select(col("score_bin"), col("n_docs"), col("n_tokens"), col("cum_tokens"),
-          ((col("cum_tokens") - col("n_tokens")) * 2 < col("total")).as("selected"))
+      new Engine(s).curriculumSelect(docs,
+          least(greatest(expr("n_chars div ntok"), lit(3L)), lit(9L)), col("ntok"), 0.5)
+        .select("score_bin", "n_docs", "n_tokens", "cum_tokens", "selected")
         .orderBy("score_bin")
+    },
+
+    // ---- PPS sampling without replacement (sequential Poisson, Ohlsson
+    // 1998) through Engine.ppsSample: per language stratum, the 20 docs
+    // with the smallest u/w, u from the 4-digit md5 lane of doc_id and
+    // w = n_chars, so long documents are proportionally favored and the
+    // draw is reproducible under retries/reruns. The lane itself is
+    // reported as `h` for the sampled rows only. --------------------------
+    "sp6_pps_sample" -> { (s, dir) =>
+      new Engine(s).ppsSample(
+          Tables.documents(s, dir).select("lang", "doc_id", "n_chars"),
+          "doc_id", "n_chars", Seq("lang"), k = 20)
+        .select(col("lang"), col("rank").cast("long").as("rank"),
+          col("doc_id"), col("n_chars"),
+          Stats.md5HexLane(col("doc_id").cast("string"), 4).cast("long").as("h"))
+        .orderBy("lang", "rank")
     },
 
     // ---- temperature-weighted mixture: per-source sampling rates derived
@@ -707,34 +698,6 @@ private[graft] object TextPipelineQueries {
     // normalization is independent of partition order; the 20-row rate
     // table broadcasts back and the sample decision is the sp3
     // hash-threshold lane — pure row function, retry-safe, map-side. ------
-    // ---- PPS sampling without replacement (sequential Poisson, Ohlsson
-    // 1998): per language stratum, the k docs with the SMALLEST u/w where
-    // u is a 16-bit uniform from md5(doc_id) (the sp3 hash-lane recipe ×4
-    // digits) and w = n_chars — inclusion probability ≈ k·w/Σw, so long
-    // documents are proportionally favored, and the hash keying makes the
-    // draw reproducible under retries/reruns (the property `rand()` loses
-    // on task replay). Cross-engine exactness: the ONLY float op is one
-    // IEEE division of two integers, which is correctly rounded and hence
-    // bit-identical in Spark and DuckDB — no ln/pow (libm-dependent), the
-    // reason this key shape was chosen over the e^-classic Efraimidis–
-    // Spirakis transform (same πps family). Map-side arithmetic, then the
-    // bounded-heap TopK plan: one shuffle of k·strata candidate rows. ----
-    "sp6_pps_sample" -> { (s, dir) =>
-      val h = (1 to 4).map(i =>
-        expr(s"instr('0123456789abcdef', substr(md5(cast(doc_id AS string)), $i, 1)) - 1") *
-          lit(math.pow(16, 4 - i).toLong)).reduce(_ + _)
-      val keyed = Tables.documents(s, dir)
-        .select(col("lang"), col("doc_id"), col("n_chars"), h.as("h"))
-        .withColumn("skey", (col("h") + 1).cast("double") / col("n_chars"))
-      graft.operators.TopK.perKey(
-          keyed.select("lang", "doc_id", "n_chars", "h", "skey"),
-          keys = Seq("lang"),
-          order = Seq("skey" -> true, "doc_id" -> true), k = 20)
-        .select(col("lang"), col("rank").cast("long").as("rank"),
-          col("doc_id"), col("n_chars"), col("h").cast("long").as("h"))
-        .orderBy("lang", "rank")
-    },
-
     "sp5_temperature_mixture" -> { (s, dir) =>
       val docs = Tables.documents(s, dir)
       val counts = docs.groupBy("source").agg(count(lit(1)).as("n_total"))
@@ -748,9 +711,7 @@ private[graft] object TextPipelineQueries {
         .withColumn("rate_pct", least(lit(1.0),
           col("target").cast("double") / col("n_total").cast("double")) * 100)
         .select("source", "rate_pct")
-      val hv = (1 to 2).map(i =>
-        (expr(s"instr('0123456789abcdef', substr(md5(cast(doc_id AS string)), $i, 1)) - 1") *
-          lit(math.pow(16, 2 - i).toInt))).reduce(_ + _) % 100
+      val hv = Stats.md5HexLane(col("doc_id").cast("string"), 2) % 100
       docs.join(broadcast(rates), "source")
         .withColumn("h", hv)
         .groupBy("source")
@@ -933,38 +894,31 @@ private[graft] object TextPipelineQueries {
     // "indexed twice" — a lexical BM25 lane over documents (ta10's exact
     // integer formula) and a semantic cosine-KNN lane over embeddings
     // (e3's shape), doc_id and vec_id addressing the same item space.
-    // The two rankings are fused WITHOUT score calibration: rrf = 10⁹
-    // div (60 + lex_rank) + 10⁹ div (60 + sem_rank). Integer division
-    // keeps the fusion exact (no float reciprocals → no cross-engine
-    // ulp), a missing lane contributes 0 via the full outer join, and
-    // the final top-10 rides the bounded-heap TopKPerKey. Each lane is
-    // top-20-bounded before the fuse, so the join input is
-    // O(queries · k), independent of corpus size. ------------------------
+    // Engine.rrfFuse fuses the two rankings WITHOUT score calibration:
+    // rrf = 10⁹ div (60 + lex_rank) + 10⁹ div (60 + sem_rank), exact
+    // integers (no float reciprocals → no cross-engine ulp), a lane missing
+    // an item contributing 0. Each lane is top-20-bounded before the fuse,
+    // so the fuse input is O(queries · k), independent of corpus size. ---
     "rr1_hybrid_rrf" -> { (s, dir) =>
-      import s.implicits._
       val qterms = Seq((0L, "spark"), (0L, "dup"), (1L, "hash"), (1L, "join"),
         (1L, "merge"), (2L, "window"), (2L, "sort"))
-      val lex = new Engine(s).bm25TopK(
+      val engine = new Engine(s)
+      val lex = engine.bm25TopK(
           Tables.documents(s, dir).select("doc_id", "text")
             .repartition(32, col("doc_id")),
           "doc_id", "text", qterms, k = 20)
-        .select(col("query_id"), col("doc_id"),
-          col("rank").cast("long").as("lex_rank"))
+        .select("query_id", "doc_id", "rank")
       val emb = Tables.embeddings(s, dir)
         .withColumn("vec", col("embedding").cast("array<double>"))
       val qvecs = emb.filter(col("vec_id") < 3)
         .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
       val sem = Knn.topK(emb.filter(col("vec_id") >= 3).select("vec_id", "vec"),
           "vec", qvecs, "query_id", "qvec", k = 20, tiebreak = "vec_id")
-        .select(col("query_id"), col("vec_id").as("doc_id"),
-          col("rank").cast("long").as("sem_rank"))
-      val fused = lex.join(sem, Seq("query_id", "doc_id"), "full_outer")
-        .withColumn("rrf_score",
-          coalesce(expr("1000000000L div (60 + lex_rank)"), lit(0L)) +
-            coalesce(expr("1000000000L div (60 + sem_rank)"), lit(0L)))
-      graft.operators.TopK.perKey(fused, keys = Seq("query_id"),
-          order = Seq("rrf_score" -> false, "doc_id" -> true), k = 10)
-        .withColumn("rank", col("rank").cast("long"))
+        .select(col("query_id"), col("vec_id").as("doc_id"), col("rank"))
+      engine.rrfFuse(Seq(lex, sem), Seq("query_id"), "doc_id", "rank", k = 10)
+        .select(col("query_id"), col("doc_id"), col("rank_1").as("lex_rank"),
+          col("rank_2").as("sem_rank"), col("rrf_score"),
+          col("rank").cast("long").as("rank"))
     },
 
     // ---- markup strip: wrap each doc in deterministic HTML, then strip

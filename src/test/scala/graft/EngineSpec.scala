@@ -30,19 +30,21 @@ class EngineSpec extends AnyFunSuite {
   test("pack chunks a corpus losslessly; decontaminate flags n-gram overlap") {
     import spark.implicits._
     val docs = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta"),
-      (2L, "one two three four"),
-      (3L, "unrelated words entirely here now")).toDF("doc_id", "text")
+      (1L, "alpha beta gamma delta epsilon zeta", "web"),
+      (2L, "one two three four", "books"),
+      (3L, "unrelated words entirely here now", "web")).toDF("doc_id", "text", "source")
     // pack: token conservation at a tiny chunk size
     val packed = engine.pack(docs, "doc_id", "text", chunkTokens = 4)
     val total = packed.agg(sum("chunk_tokens")).head().getLong(0)
     assert(total == 6 + 4 + 5)
     assert(packed.filter(col("doc_id") === 1L).count() == 2) // 6 tokens span 2 windows
-    // decontaminate: eval doc shares the trigram "two three four" with doc 2 only
+    // decontaminate: eval doc shares the trigram "two three four" with doc 2
+    // only; the corpus's other columns pass through
     val eval = Seq((100L, "zero two three four five")).toDF("doc_id", "text")
     val hits = engine.decontaminate(docs, eval, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(hits == Seq((2L, 1L))) // exactly one shared trigram: "two three four"
+    assert(hits.columns.toSeq == Seq("doc_id", "source", "n_hit_shingles"))
+    assert(hits.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq ==
+      Seq((2L, "books", 1L))) // exactly one shared trigram: "two three four"
   }
 
   test("sampleMixture keeps rates 0 and 1 exactly and never resamples") {
@@ -314,9 +316,10 @@ class EngineSpec extends AnyFunSuite {
         (if (i <= 2) "rare line\n" else "") + s"tail $i"))
       .toDF("id", "text")
     val out = engine.lineDedup(docs, "id", "text", maxDocFraction = 0.25)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(out(5L) == "unique body 5\ntail 5") // footer (40/40 docs) dropped
-    assert(out(1L) == "unique body 1\nrare line\ntail 1") // 2/40 kept, in order
+      .collect().map(r => r.getAs[Long]("id") ->
+        (r.getAs[String]("text"), r.getAs[Long]("n_kept"), r.getAs[Long]("n_dropped"))).toMap
+    assert(out(5L) == ("unique body 5\ntail 5", 2L, 1L)) // footer (40/40 docs) dropped
+    assert(out(1L) == ("unique body 1\nrare line\ntail 1", 3L, 1L)) // 2/40 kept, in order
   }
 
   test("spanDupStats counts union coverage once across overlapping spans") {
@@ -339,6 +342,10 @@ class EngineSpec extends AnyFunSuite {
     val counts = out.groupBy("lang").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(counts.values.forall(_ == 10L), s"per-stratum k violated: $counts")
+    // TopK's rank survives: 1..k within each stratum
+    val ranks = out.groupBy("lang").agg(sort_array(collect_list("rank")).as("r"))
+      .collect().map(_.getSeq[Int](1))
+    assert(ranks.forall(_ == (1 to 10)), s"ranks are not 1..k per stratum: ${ranks.toSeq}")
     val sMean = out.agg(avg("n_chars")).head.getDouble(0)
     val cMean = docs.agg(avg("n_chars")).head.getDouble(0)
     assert(sMean > cMean)
@@ -347,10 +354,16 @@ class EngineSpec extends AnyFunSuite {
   test("chunkWithOverlap covers every token and respects the stride") {
     import spark.implicits._
     val text = (1 to 100).map(i => s"t$i").mkString(" ")
-    val out = engine.chunkWithOverlap(
-      Seq((7L, text)).toDF("id", "text"), "id", "text",
-      window = 32, stride = 24).orderBy("chunk_id").collect()
+    val all = engine.chunkWithOverlap(
+      Seq((7L, text), (8L, "")).toDF("id", "text"), "id", "text",
+      window = 32, stride = 24)
+    // a doc without tokens is one empty chunk of 0 tokens
+    assert(all.filter(col("id") === 8L).collect()
+      .map(r => (r.getAs[String]("chunk_text"), r.getAs[Long]("chunk_tokens"))).toSeq ==
+      Seq(("", 0L)))
+    val out = all.filter(col("id") === 7L).orderBy("chunk_id").collect()
     assert(out.length == 4) // ceil((100-32)/24)+1
+    assert(out.map(_.getAs[Long]("chunk_tokens")).toSeq == Seq(32L, 32L, 32L, 28L))
     val chunks = out.map(_.getAs[String]("chunk_text").split(" ").toSeq)
     assert(chunks.head.head == "t1" && chunks(1).head == "t25")
     assert(chunks.last.last == "t100") // final token reached
@@ -370,14 +383,19 @@ class EngineSpec extends AnyFunSuite {
 
   test("snapshotDiff classifies with presence markers, not value nulls") {
     import spark.implicits._
-    val a = Seq((1L, Some(10)), (2L, None: Option[Int]), (3L, Some(30)),
-      (4L, Some(40))).toDF("k", "v")
-    val b = Seq((1L, Some(10)), (2L, None: Option[Int]), (3L, Some(31)),
-      (5L, Some(50))).toDF("k", "v")
-    val st = engine.snapshotDiff(a, b, "k", Seq("v")).collect()
-      .map(r => r.getLong(0) -> r.getAs[String]("status")).toMap
+    val a = Seq((1L, Some(10), "x"), (2L, None: Option[Int], null), (3L, Some(30), "x"),
+      (4L, Some(40), "x"), (6L, Some(60), "x")).toDF("k", "v", "w")
+    val b = Seq((1L, Some(10), "x"), (2L, None: Option[Int], null), (3L, Some(31), "x"),
+      (5L, Some(50), "x"), (6L, Some(60), "y")).toDF("k", "v", "w")
+    val out = engine.snapshotDiff(a, b, "k", Seq("v", "w")).collect()
+    val st = out.map(r => r.getLong(0) -> r.getAs[String]("status")).toMap
+    // 2: all-null tuple is STILL unchanged; 6: only the second column moved
     assert(st == Map(1L -> "unchanged", 2L -> "unchanged", 3L -> "changed",
-      4L -> "removed", 5L -> "added")) // 2: all-null tuple is STILL unchanged
+      4L -> "removed", 5L -> "added", 6L -> "changed"))
+    val six = out.find(_.getLong(0) == 6L).get
+    assert((six.getAs[String]("__a_w"), six.getAs[String]("__b_w")) == ("x", "y"))
+    val four = out.find(_.getLong(0) == 4L).get
+    assert(four.getAs[Integer]("__a_v") == 40 && four.isNullAt(four.fieldIndex("__b_v")))
   }
 
   test("constraintSuite counts null, dup, predicate and orphan violations") {
@@ -420,6 +438,7 @@ class EngineSpec extends AnyFunSuite {
     assert(last.getAs[String]("city") == "*" && last.getAs[Int]("age") == -1 &&
       last.getAs[Boolean]("suppressed"))
     assert(last.getAs[Double]("score") == 4.0) // non-QI columns untouched
+    assert(out.map(_.getAs[Long]("qi_group_n")).toSeq == Seq(3L, 3L, 3L, 1L))
   }
 
   test("rrfFuse sums exact reciprocal-rank contributions across lanes") {
@@ -433,6 +452,10 @@ class EngineSpec extends AnyFunSuite {
     assert(out.map(r => (r.getAs[Long]("id"), r.getAs[Long]("rrf_score"),
       r.getAs[Long]("n_lanes"))).toSeq == Seq(
       (11L, s11, 2L), (10L, 1000000000L / 61, 1L), (12L, 1000000000L / 62, 1L)))
+    // each lane's own rank, NULL where the lane lacks the item
+    assert(out.map(r => (Option(r.getAs[java.lang.Long]("rank_1")).map(_.longValue),
+      Option(r.getAs[java.lang.Long]("rank_2")).map(_.longValue))).toSeq ==
+      Seq((Some(2L), Some(1L)), (Some(1L), None), (None, Some(2L))))
   }
 
   test("ingestNetCdfTolerant skips what netCdfScanStatus quarantines") {

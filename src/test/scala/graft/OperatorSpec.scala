@@ -559,14 +559,16 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("lastWriterWins keeps exactly the max-precedence row per key") {
+    // "v.x" holds a dot: the fold must quote column names, not read them
+    // as struct-field paths
     val base = Seq((1L, 10.0, 1, "base"), (2L, 20.0, 1, "base"), (3L, 30.0, 1, "base"))
-      .toDF("k", "v", "prec", "src")
+      .toDF("k", "v.x", "prec", "src")
     val upd = Seq((2L, 99.0, 2, "upd"), (3L, 88.0, 0, "old"))
-      .toDF("k", "v", "prec", "src")
+      .toDF("k", "v.x", "prec", "src")
     val out = graft.operators.Upsert.lastWriterWins(base, upd, "k", "prec", "k")
       .orderBy("k").collect()
-    assert(out.map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
-      Seq((1L, 10.0), (2L, 99.0), (3L, 30.0)))
+    assert(out.map(r => (r.getLong(0), r.getDouble(1), r.getString(3))).toSeq ==
+      Seq((1L, 10.0, "base"), (2L, 99.0, "upd"), (3L, 30.0, "base")))
   }
 
   test("insertIfAbsent preserves existing rows and unions new keys") {
